@@ -2,7 +2,11 @@ package graft.core
 
 import graft.model.RawDoc
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Observation, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import java.util.concurrent.{Callable, Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicReference
 
 /** Per-batch lineage row (FIXTURES.md §2 `_lineage`): committed together with
   * each batch's output, it is both the job's metrics sink and its resume
@@ -28,6 +32,15 @@ final case class LineageRow(
   * commit point: on restart, batches with a lineage row (matching
   * fingerprint) are skipped, partially-written batches are overwritten.
   * A killed job therefore resumes to byte-identical output.
+  *
+  * Each batch costs three Spark jobs: the docs write (which also fills the
+  * batch's cached extraction), the quarantine write (read from that cache)
+  * and the lineage write; the row's counts are observed on the two data
+  * writes rather than re-scanned. Independent batches run
+  * [[BatchesInFlight]] at a time, so after a kill the committed batches need
+  * not be a prefix of the batch order — resume is keyed by batch id, never
+  * by position. A row's `wall_ms` is that batch's own start-to-commit time;
+  * the times of batches that ran together overlap.
   */
 object Lineage {
 
@@ -74,20 +87,27 @@ object Lineage {
     }
   }
 
+  /** Batches extracted at once. Two already overlap most of one batch's
+    * driver-side planning and commit with the other's executor work (median
+    * call over a 20k-doc, 4-batch table at local[4] on a 4-vCPU host: 2.04 s
+    * one at a time, 1.59 s at 2, 1.46 s at 4), and each batch in flight
+    * holds its extraction cached, so two bounds the cache at two batches. */
+  private val BatchesInFlight = 2
+
   /** Run (or resume) the batched extraction job. Returns the lineage rows of
-    * every batch that is committed when the call finishes. `mode` selects
-    * the extraction path: `expr` (fused expression, default), `auto`
-    * (3-tier skew routing), `chunked` (typed mega-doc path), `typed`
-    * (mapPartitions).
+    * every batch that is committed when the call finishes, in batch-id
+    * order. `mode` selects the extraction path: `expr` (fused expression,
+    * default), `auto` (3-tier skew routing), `chunked` (typed mega-doc
+    * path), `typed` (mapPartitions).
+    *
+    * If a batch fails, no batch still queued is started; the call waits for
+    * the batches already running to commit or fail, then throws the first
+    * error. It never returns while one of its writes is still running.
     */
   def runBatched(spark: SparkSession, rawPath: String, outPath: String,
                  numBatches: Int = 8, mode: String = "expr",
                  store: DocStore = DocStore()): Seq[LineageRow] = {
-    import spark.implicits._
     require(Set("expr", "auto", "typed", "chunked")(mode), s"unknown mode $mode")
-    // captured before the per-batch `functions._` wildcard import, which
-    // would make a bare `mode` reference ambiguous with functions.mode
-    val extractMode = mode
     val batches = inputBatches(spark, rawPath, numBatches)
     val done = committedBatches(spark, outPath, store)
     // a previously-committed batch id beyond the current grouping means the
@@ -101,44 +121,90 @@ object Lineage {
     // footer-only probe: read with the n_spans-bearing schema when the input
     // carries the materialized count, so auto mode's tier filters can prune
     // row groups (a fixed rawDocs schema would project the column away and
-    // silently fall back to post-scan size(spans) filters)
-    val hasN = batches.headOption.exists { case (_, files) =>
+    // silently fall back to post-scan size(spans) filters). Only auto mode
+    // reads the answer, so only auto mode pays the schema-inference job.
+    val hasN = mode == "auto" && batches.headOption.exists { case (_, files) =>
       spark.read.parquet(files.head).schema.fieldNames.contains("n_spans")
     }
-    val readSchema = if (hasN && mode == "auto") graft.model.Schemas.rawDocsWithN
+    val readSchema = if (hasN) graft.model.Schemas.rawDocsWithN
                      else graft.model.Schemas.rawDocs
-    val rows = batches.map { case (batchId, files) =>
-      val fp = fingerprint(spark, files, extractMode)
-      done.get(batchId) match {
-        case Some(row) if row.input_fingerprint == fp => row // resume: skip
-        case _ =>
-          val t0 = System.nanoTime()
-          import org.apache.spark.sql.functions._
-          val rawDf = spark.read.schema(readSchema).parquet(files: _*)
-          val extracted = (extractMode match {
-            case "chunked" => Extract.runChunked(rawDf.select("doc_id", "spans", "meta").as[RawDoc]).toDF()
-            case "typed"   => Extract.run(rawDf.select("doc_id", "spans", "meta").as[RawDoc]).toDF()
-            case "auto"    => Extract.runAuto(rawDf)
-            case _         => Extract.runExpr(rawDf)
-          }).persist()
-          try {
-            val good = extracted.where(col("error").isNull).select("doc_id", "spans")
-            val bad = extracted.where(col("error").isNotNull).select("doc_id", "error")
-            store.write(good, s"$outPath/docs/batch=$batchId")
-            store.write(bad, s"$outPath/quarantine/batch=$batchId")
-            val stats = good
-              .agg(count(lit(1)), coalesce(sum(size(col("spans"))), lit(0L))).head()
-            val (docs, spans) = (stats.getLong(0), stats.getLong(1))
-            val errs = bad.count()
-            val row = LineageRow(batchId, fp, docs, spans, errs,
-              (System.nanoTime() - t0) / 1000000,
-              java.time.Instant.now().toString)
-            // commit point: lineage row written last
-            store.write(Seq(row).toDS().toDF(), s"$outPath/_lineage/batch=$batchId")
-            row
-          } finally extracted.unpersist()
-      }
+    val todo = batches.flatMap { case (batchId, files) =>
+      val fp = fingerprint(spark, files, mode)
+      if (done.get(batchId).exists(_.input_fingerprint == fp)) None // resume: skip
+      else Some((batchId, files, fp))
     }
-    rows
+    val fresh = inFlight(todo.map { case (batchId, files, fp) =>
+      () => commitBatch(spark, outPath, store, mode, readSchema, batchId, files, fp)
+    }).map(r => r.batch_id -> r).toMap
+    batches.map { case (batchId, _) => fresh.getOrElse(batchId, done(batchId)) }
+  }
+
+  /** Extract one batch and commit it: docs write, quarantine write, lineage
+    * write — three Spark jobs. The counts come from one [[Observation]] per
+    * data write, and the quarantine write reads the extraction the docs
+    * write cached. */
+  private def commitBatch(spark: SparkSession, outPath: String, store: DocStore,
+                          mode: String, readSchema: StructType, batchId: Int,
+                          files: Seq[String], fp: String): LineageRow = {
+    import spark.implicits._
+    val t0 = System.nanoTime()
+    val rawDf = spark.read.schema(readSchema).parquet(files: _*)
+    val extracted = (mode match {
+      case "chunked" => Extract.runChunked(rawDf.select("doc_id", "spans", "meta").as[RawDoc]).toDF()
+      case "typed"   => Extract.run(rawDf.select("doc_id", "spans", "meta").as[RawDoc]).toDF()
+      case "auto"    => Extract.runAuto(rawDf)
+      case _         => Extract.runExpr(rawDf)
+    }).persist()
+    try {
+      val goodStats, badStats = new Observation()
+      val good = extracted.where(col("error").isNull).select("doc_id", "spans")
+      val bad = extracted.where(col("error").isNotNull).select("doc_id", "error")
+      store.write(good.observe(goodStats, count(lit(1)).as("docs"),
+        coalesce(sum(size(col("spans"))), lit(0L)).as("spans")),
+        s"$outPath/docs/batch=$batchId")
+      store.write(bad.observe(badStats, count(lit(1)).as("errors")),
+        s"$outPath/quarantine/batch=$batchId")
+      val row = LineageRow(batchId, fp,
+        goodStats.get("docs").asInstanceOf[Long],
+        goodStats.get("spans").asInstanceOf[Long],
+        badStats.get("errors").asInstanceOf[Long],
+        (System.nanoTime() - t0) / 1000000,
+        java.time.Instant.now().toString)
+      // commit point: lineage row written last
+      store.write(Seq(row).toDS().toDF(), s"$outPath/_lineage/batch=$batchId")
+      row
+    } finally extracted.unpersist()
+  }
+
+  /** Runs `tasks` at most [[BatchesInFlight]] at a time and returns their
+    * results in task order. The pool lives for one call, so its threads
+    * inherit the caller's Spark local properties (job group, description,
+    * scheduler pool). After the first failure no queued task starts; the
+    * running ones are awaited, then that failure is thrown. */
+  private def inFlight[A](tasks: Seq[() => A]): Seq[A] = {
+    val pool = Executors.newFixedThreadPool(BatchesInFlight)
+    val firstError = new AtomicReference[Throwable]()
+    val results = try tasks.map { task =>
+      pool.submit(new Callable[Option[A]] {
+        def call(): Option[A] =
+          if (firstError.get != null) None
+          else try Some(task()) catch {
+            case e: Throwable => firstError.compareAndSet(null, e); None
+          }
+      })
+    } finally {
+      pool.shutdown()
+      var interrupted = false
+      while (!pool.isTerminated)
+        try pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+        catch {
+          // an interrupted caller still must not leave a write running:
+          // stop queued tasks, wait out the running ones, then rethrow
+          case e: InterruptedException => firstError.compareAndSet(null, e); interrupted = true
+        }
+      if (interrupted) Thread.currentThread().interrupt()
+    }
+    Option(firstError.get).foreach(e => throw e)
+    results.map(_.get().get)
   }
 }

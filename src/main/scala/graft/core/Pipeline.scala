@@ -3,7 +3,7 @@ package graft.core
 import graft.functions.{Dedup, Domains, Packing}
 import graft.queries.SpanQueries
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Per-stage lineage row for the composed training-data pipeline — the same
@@ -189,9 +189,10 @@ object Pipeline {
 
   /** Run one resumable stage: skip if committed with a matching input
     * fingerprint, else evaluate `body` over the input, write `out/<name>`,
-    * and commit the lineage row last. The in/out counts are column-pruned
-    * parquet scans of already-materialized stage tables — metrics, not a
-    * recompute of the stage plan. */
+    * and commit the lineage row last. `rows_in` is a column-pruned scan of
+    * the already-materialized input table (`body` may scan it more than
+    * once, so it is not observed); `rows_out` is observed on the stage
+    * write itself — neither recomputes the stage plan. */
   private def runStage(spark: SparkSession, cfg: Config, name: String,
                        inputDirs: Seq[String], params: String)
                       (body: DataFrame => DataFrame): StageLineage = {
@@ -211,10 +212,11 @@ object Pipeline {
       case _ =>
         val t0 = System.nanoTime()
         val in = store.read(spark, inputDirs.head)
-        val out = body(in)
-        store.write(out, s"${cfg.outPath}/$name")
-        val written = store.read(spark, s"${cfg.outPath}/$name")
-        val row = StageLineage(name, fp, in.count(), written.count(),
+        val written = new Observation()
+        store.write(body(in).observe(written, count(lit(1)).as("rows")),
+          s"${cfg.outPath}/$name")
+        val row = StageLineage(name, fp, in.count(),
+          written.get("rows").asInstanceOf[Long],
           (System.nanoTime() - t0) / 1000000, java.time.Instant.now().toString)
         // commit point: lineage row written last
         store.write(Seq(row).toDS().coalesce(1).toDF(),
