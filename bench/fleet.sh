@@ -45,7 +45,7 @@ JAVA_FLAGS="$ADD_OPENS -Xmx16g -XX:ActiveProcessorCount=8 -Dspark.ui.enabled=fal
 taskset -c 0-31 java $ADD_OPENS -Xmx16g -Dspark.ui.enabled=false -cp "$CP" \
   graft.ScalingBench gen "$DOCS" >> $LOG 2>&1
 
-prime() { cat /root/repo/data/bench_raw.parquet/*.parquet > /dev/null 2>&1 || true; }
+prime() { cat data/bench_raw.parquet/*.parquet > /dev/null 2>&1 || true; }
 
 run_jvm() { # slot(0-3) outfile k
   local slot=$1 out=$2 k=$3
@@ -138,7 +138,7 @@ A cluster's N→4N multiplies executor JVMs, not threads in one heap. Per-JVM
 | fleet efficiency 1→2 JVMs | {eff2:.3f} |
 | fleet efficiency 1→4 JVMs (the N→4N executor analog) | {eff4:.3f} (gate ≥ 0.8) |
 """
-open("/root/repo/BASELINE.md", "a").write(row)
+open("BASELINE.md", "a").write(row)
 print(json.dumps({"mode": mode, "docs": docs, "t_solo": t_solo,
                   "k2": [t for t, _ in k2], "k4": [t for t, _ in k4],
                   "fleet_eff_2": round(eff2, 3), "fleet_eff_4": round(eff4, 3)}))

@@ -49,7 +49,7 @@ row = f"""
 | docs/sec @ local[{h}] ({h} pinned CPUs) | {docs/t4:.1f} (T={t4:.2f}s; all: {", ".join(f"{t:.2f}" for t in hi)}) |
 | scaling efficiency (T_N/T_4N)/4 | {eff:.3f} (gate >= 0.8) |
 """
-open("/root/repo/BASELINE.md", "a").write(row)
+open("BASELINE.md", "a").write(row)
 print(json.dumps({"docs": docs, "n": n, "t_low": t1, "t_high": t4,
                   "docs_per_sec_low": docs/t1, "docs_per_sec_high": docs/t4,
                   "scaling_efficiency": round(eff, 3)}))

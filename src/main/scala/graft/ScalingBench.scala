@@ -48,7 +48,8 @@ object ScalingBench {
   }
 
   /** End-to-end extraction: scan → fused extract_spans → write (tmpfs).
-    * Uses the Catalyst-native fast path (see PLANS.md). The FULL output
+    * Uses the Catalyst-native fast path (SparkExtractSpec asserts its single
+    * extract_spans evaluation). The FULL output
     * (doc_id, spans, error) is written unfiltered: a pre-write filter on
     * `x.error` would be pushed below the project and re-evaluate the
     * extraction expression per row — quarantine splitting is a downstream
@@ -174,7 +175,7 @@ object ScalingBench {
          || docs/sec @ local[$nHigh] | $tp4%.1f (T=$t4%.2fs; all: ${tHi.map(t => f"$t%.2f").mkString(", ")}) |
          || scaling efficiency (T_N/T_4N)/4 | $eff%.3f (gate ≥ 0.8) |
          |""".stripMargin
-    Files.write(Paths.get("/root/repo/BASELINE.md"), row.getBytes,
+    Files.write(Paths.get("BASELINE.md"), row.getBytes,
       StandardOpenOption.APPEND, StandardOpenOption.CREATE)
     println(f"""{"docs":$docs,"n_low":$nLow,"t_low_sec":$t1%.3f,"t_high_sec":$t4%.3f,"docs_per_sec_low":$tp1%.1f,"docs_per_sec_high":$tp4%.1f,"scaling_efficiency":$eff%.3f}""")
   }

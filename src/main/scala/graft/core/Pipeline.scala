@@ -96,7 +96,7 @@ final case class StageLineage(
   * and make mid-job failure a full restart; per-stage parquet is the
   * classic checkpoint/cost trade the north rule's "resumable from
   * checkpoint" demands, and each stage's internal plan stays the
-  * shuffle-disciplined shape audited in PLANS.md.
+  * shuffle-disciplined shape PlanShapeSpec asserts.
   */
 object Pipeline {
 

@@ -290,9 +290,9 @@ object Dedup {
     * combines before the shuffle instead of hot-spotting one reducer;
     * skew-tested) then TWO pointer jumps `label(v) := label(label(v))`.
     * Output carries (v, label, chg) where `chg` marks labels that moved —
-    * the convergence signal. Shared by the production loop, the PlanAudit
-    * explain dump, and the skew test, so the audited plan IS the shipped
-    * plan. */
+    * the convergence signal. Shared by the production loop and the skew
+    * test (FunctionsSpec's giant-star case asserts `partial_min`), so the
+    * tested plan IS the shipped plan. */
   private[graft] def ccRound(labels: DataFrame, edges: DataFrame): DataFrame = {
     val prop = edges.join(labels.select(col("v").as("u"), col("label")), "u")
       .groupBy(col("v")).agg(min(col("label")).as("nlabel"))
@@ -502,8 +502,7 @@ object Dedup {
 
   def minHashNearDuplicates(documents: DataFrame, threshold: Double = 0.8,
                             numHashes: Int = 32, numBands: Int = 8,
-                            ngram: Int = 3, maxBandBucket: Int = 1024,
-                            cacheSketch: Boolean = false): DataFrame = {
+                            ngram: Int = 3, maxBandBucket: Int = 1024): DataFrame = {
     require(maxBandBucket >= 2, s"maxBandBucket must be >= 2, got $maxBandBucket")
     // numBands > numHashes would make rowsPerBand 0 — every band hash a
     // per-band CONSTANT shared by all documents, degenerating the band
@@ -522,39 +521,26 @@ object Dedup {
     // xxhash64(lit(b)) (xxhash64 skips null arguments), turning k null docs
     // into an O(k²) band-join blowup. The unscorable pass-through contract
     // lives in the drop* wrappers (left-anti keeps non-candidates).
-    // `pre` feeds the banding scan AND both verify-join branches — three
-    // consumers, so the fused sketch runs three full-corpus sweeps.
-    // `cacheSketch` trades the verify-branch re-evaluations for a
-    // MEMORY_AND_DISK materialization of the (sig, shingles) arrays.
-    // Default OFF, measured: with the one-sweep banding aggregation the
-    // focused interleaved A/B at sf0.1 (MinhashAB, warm JVM, min-of-3)
-    // reads 0.693 s uncached vs 0.855 s cached — writing + reading ~4 KB
-    // of long-arrays per doc through the columnar cache costs MORE than
-    // the two sketch sweeps it saves; and at the 10^12-doc design point
-    // the cache side collapses entirely (petabytes of MEMORY_AND_DISK
-    // spill vs pure CPU on rows already flowing). Available for small,
-    // memory-resident corpora iterated repeatedly. OWNERSHIP (ADVICE r05):
-    // the returned DataFrame is lazy, so this function CANNOT unpersist —
-    // the CALLER who opts in owns cleanup, via
-    // spark.sharedState.cacheManager.clearCache() or an unpersist after the
-    // consuming action (graft.MinhashAB does exactly this); left cached it
-    // holds ~4 KB/doc of arrays for the session.
+    // The sketch is recomputed, never cached: a MEMORY_AND_DISK
+    // materialization of the (sig, shingles) arrays for the verify branches
+    // measured slower at sf0.1 (warm JVM, interleaved, min-of-3: 0.693 s
+    // uncached vs 0.855 s cached) — writing + reading ~4 KB of long-arrays
+    // per doc through the columnar cache costs MORE than the sketch sweeps
+    // it saves; and at the 10^12-doc design point the cache side collapses
+    // entirely (petabytes of MEMORY_AND_DISK spill vs pure CPU on rows
+    // already flowing).
     // r07: the null gate is `text IS NOT NULL` BEFORE the projection, not
     // `f IS NOT NULL` after it — the two are equivalent (the fused expr is a
     // nullSafeEval UnaryExpression: null out iff null in), but the latter
     // alias-substitutes into a Filter BELOW the sketch Project, evaluating
     // the whole tokenize+shingle+hash sweep TWICE per row in every consumer
-    // branch (Filter has no cross-operator CSE with Project — seen in
-    // plans/r07/d_minhash_before.txt) and keeps IsNotNull out of the scan's
-    // PushedFilters.
+    // branch (Filter has no cross-operator CSE with Project — PlanShapeSpec's
+    // minhash hot-cluster test bounds the sketch sites) and keeps IsNotNull
+    // out of the scan's PushedFilters.
     val scorableDocs = documents.where(col("text").isNotNull)
-    val preRaw = scorableDocs
+    val sigs = scorableDocs
       .select(col("doc_id"), MinHashWithShinglesExpr(col("text"), numHashes, ngram).as("f"))
-      .select(col("doc_id"), col("f.sig").as("sig"), col("f.sh").as("sh"))
-    val pre = if (cacheSketch)
-      preRaw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else preRaw
-    val sigs = pre.select(col("doc_id"), col("sig"))
+      .select(col("doc_id"), col("f.sig").as("sig"))
     // band key = xxhash64 over the band's signature slots directly (slots
     // resolved at plan time) — fully codegen
     val bandHashes = (0 until numBands).map { b =>
@@ -571,10 +557,10 @@ object Dedup {
     // sweep no matter what — an earlier window+self-join formulation had
     // three consumers whose exchanges Catalyst failed to canonicalize
     // together (column pruning differentiated the subtrees), re-evaluating
-    // the interpreted sketch 5x (caught via the executed-plan dump in
-    // PLANS.md). Bucket ROW size is O(members): fine through multi-million
-    // clusters (8 MB of longs per 10^6 members); the quadratic OUTPUT is
-    // what the cap bounds.
+    // the interpreted sketch 5x (caught in the executed plan; PlanShapeSpec's
+    // minhash hot-cluster test now bounds the sketch sites). Bucket ROW
+    // size is O(members): fine through multi-million clusters (8 MB of
+    // longs per 10^6 members); the quadratic OUTPUT is what the cap bounds.
     val ids = col("ids")
     val cand = observeHotBuckets(
       banded.groupBy(col("band_hash")).agg(collect_list(col("doc_id")).as("ids")),
@@ -602,14 +588,11 @@ object Dedup {
     // is bounded by the capped candidate set — the same small-side class as
     // the hot set — and its banding subtree re-evaluation is absorbed by
     // exchange reuse (the band aggregation's Exchange is identical across
-    // the cand and candIds consumers). With `cacheSketch` the verify reads
-    // the cached sketch instead; semantics unchanged either way.
+    // the cand and candIds consumers).
     val candIds = cand.select(explode(array(col("a"), col("b"))).as("doc_id")).distinct()
-    val vf =
-      if (cacheSketch) pre.join(broadcast(candIds), Seq("doc_id"), "left_semi")
-      else scorableDocs.join(broadcast(candIds), Seq("doc_id"), "left_semi")
-        .select(col("doc_id"), MinHashWithShinglesExpr(col("text"), numHashes, ngram).as("f"))
-        .select(col("doc_id"), col("f.sig").as("sig"), col("f.sh").as("sh"))
+    val vf = scorableDocs.join(broadcast(candIds), Seq("doc_id"), "left_semi")
+      .select(col("doc_id"), MinHashWithShinglesExpr(col("text"), numHashes, ngram).as("f"))
+      .select(col("doc_id"), col("f.sig").as("sig"), col("f.sh").as("sh"))
     cand
       .join(vf.select(col("doc_id").as("a"), col("sig").as("sig_a"), col("sh").as("sh_a")), Seq("a"))
       .join(vf.select(col("doc_id").as("b"), col("sig").as("sig_b"), col("sh").as("sh_b")), Seq("b"))
@@ -663,7 +646,7 @@ object Dedup {
     // not canonicalize together: the executed plan carried 22 parquet scans
     // of the corpus, each re-running the fused tokenize+shingle+hash
     // expression (and d_cc_components paid the whole tree twice through
-    // ccEdges — 44 scans; see plans/r07/*_before.txt). Now:
+    // ccEdges — 44 scans; PlanShapeSpec now bounds the scans). Now:
     //   sweep 1 — shingle document frequencies (count only, no member lists:
     //             a web-scale stop-shingle's bucket must never materialize);
     //   sweep 2 — under-cap bucket member lists (bounded by maxDocFreq) →

@@ -16,8 +16,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Why (SURVEY.md §2.9/§4.3, "measure first"): the mapPartitions path pays
   * the typed-encoder round trip — InternalRow → RawDoc(Seq[RawSpan]) →
-  * Extracted(Seq[Span]) → InternalRow. PlanAudit measured the pure-Scala core
-  * at ~4x the Spark per-core rate, i.e. framework overhead dominates. This
+  * Extracted(Seq[Span]) → InternalRow. The pure-Scala core measured at ~4x
+  * the Spark per-core rate, i.e. framework overhead dominates. This
   * expression reads the raw span `ArrayData` directly and emits the output
   * `GenericArrayData` directly — same shared semantic core
   * (`Extractor.walk`), no Seq/case-class round trip for the envelope, no

@@ -64,7 +64,8 @@ object Packing {
       // explicit (vacuously true) null-gate: the broadcast join infers
       // isnotnull(bucket) on the probe side only, which would de-canonicalize
       // the two consumers of this subtree and defeat exchange reuse — with it
-      // both branches share ONE corpus scan + shuffle (verified in PLANS.md)
+      // both branches share ONE corpus scan + shuffle (PlanShapeSpec asserts
+      // the ReusedExchange)
       .where(col("bucket").isNotNull)
     val inBucket = Window.partitionBy(col("bucket")).orderBy(col("k"), col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -104,9 +105,10 @@ object Packing {
     * both the histogram and the rank pass need the scores). The persist is
     * the right side of the cache-vs-recompute trade HERE because the cached
     * rows are ~20 bytes — two orders of magnitude narrower than the text
-    * they replace re-scanning — unlike the MinHash sketch cache
-    * (Dedup.scala `cacheSketch`), whose ~4 KB/doc arrays cost more to
-    * round-trip than recomputing; the deciding variable is row width. A ≤101-row
+    * they replace re-scanning — unlike the MinHash sketch cache (measured
+    * and dropped, see [[Dedup.minHashNearDuplicates]]), whose ~4 KB/doc
+    * arrays cost more to round-trip than recomputing; the deciding variable
+    * is row width. A ≤101-row
     * bucket histogram (`floor(quality * 100)`, order-aligned since the
     * bucket id is monotone in quality) is collected — a driver fold over a
     * hundred longs, not a driver loop over data — and drives both the keep
@@ -134,8 +136,8 @@ object Packing {
     // corpus-sized quality cache can be unpersisted HERE instead of leaking
     // for the session (every path, empty included). Same
     // materialize-inside / clean-up-before-return convention as
-    // [[Dedup.connectedComponents]]; PlanAudit dumps the pre-checkpoint
-    // plan via [[qualityTopFractionPlan]].
+    // [[Dedup.connectedComponents]]; [[qualityTopFractionPlan]] exposes the
+    // pre-checkpoint plan for inspection.
     val res = out.localCheckpoint(true)
     q.unpersist(false)
     res

@@ -140,7 +140,9 @@ object Similarity {
       element_at(NearestCentroidsExpr(col("embedding"), cents, 1), 1).as("list_id"))
     // posexplode_outer + generated-pos filter: a plain explode's inferred
     // size()/isnotnull filters would sink below the project and re-evaluate
-    // NearestCentroidsExpr per reference (the PLANS.md pitfall)
+    // NearestCentroidsExpr per reference (the InferFiltersFromGenerate
+    // pitfall; SparkExtractSpec asserts the single evaluation it costs on
+    // the extraction path)
     val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("qv"),
         L2NormExpr(col("embedding")).as("qn"),
         NearestCentroidsExpr(col("embedding"), cents, nProbe).as("probes"))

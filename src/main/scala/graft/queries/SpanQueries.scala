@@ -37,7 +37,8 @@ object SpanQueries {
   /** Flatten for LIVE extraction output whose `spans` column is a HEAVY
     * expression (extract_spans and friends): plain posexplode triggers
     * InferFiltersFromGenerate, whose size()/isnotnull predicates sink below
-    * the project and re-evaluate the expression 3-5x per row (PLANS.md).
+    * the project and re-evaluate the expression 3-5x per row (SparkExtractSpec
+    * asserts the single evaluation).
     * posexplode_outer infers no filters, and the null/empty rows (the
     * quarantine surface) are dropped AFTER the Generate by filtering the
     * GENERATED pos column, which cannot be pushed down. */
