@@ -20,12 +20,10 @@
 #
 # Usage: bench/fleet.sh [nDocs=1600000] [rounds=5]
 #   SPARK_GRAFT_SCALING_SINK=noop|parquet  (default parquet)
-#   SPARK_GRAFT_SCALING_MODE=expr|typed    (default expr)
 set -euo pipefail
 cd "$(dirname "$0")/.."
 DOCS=${1:-1600000}
 ROUNDS=${2:-5}
-MODE=${SPARK_GRAFT_SCALING_MODE:-expr}
 SINK=${SPARK_GRAFT_SCALING_SINK:-parquet}
 LOG=/tmp/graft_fleet.log
 : > $LOG
@@ -50,8 +48,7 @@ prime() { cat data/bench_raw.parquet/*.parquet > /dev/null 2>&1 || true; }
 run_jvm() { # slot(0-3) outfile k
   local slot=$1 out=$2 k=$3
   local lo=$((slot * 8)) hi=$((slot * 8 + 7))
-  taskset -c $lo-$hi env SPARK_GRAFT_SCALING_MODE=$MODE \
-    SPARK_GRAFT_SCALING_SINK=$SINK \
+  taskset -c $lo-$hi env SPARK_GRAFT_SCALING_SINK=$SINK \
     SPARK_GRAFT_BARRIER=$BARRIER_DIR:$k \
     SPARK_GRAFT_SCALING_OUT=/dev/shm/graft_fleet_out_$slot.parquet \
     java $JAVA_FLAGS -cp "$CP" graft.ScalingBench measure 8 "$ROUNDS" \
@@ -91,7 +88,7 @@ for f in $R.solo.json $R.k2_*.json $R.k4_*.json; do
   [ -s "$f" ] || { echo "[fleet] $f is empty — its JVM printed no GRAFT_TIMES (see $LOG)" >&2; exit 1; }
 done
 
-python3 - "$MODE-$SINK" <<'EOF'
+python3 - "expr-$SINK" <<'EOF'
 import json, glob, datetime, sys
 mode = sys.argv[1]
 solo = json.load(open("/tmp/graft_fleet.solo.json"))

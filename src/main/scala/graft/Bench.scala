@@ -37,8 +37,8 @@ object Bench {
   }
 
   /** End-to-end extraction: scan → extract → write. `mode` selects the
-    * typed mapPartitions path, the chunked skew path, or the fused
-    * Catalyst-expression fast path. Returns (seconds, docs). */
+    * fused-expression path (`expr`), the chunked skew path (`chunked`) or
+    * adaptive routing (`auto`). Returns (seconds, output rows). */
   def extractionJob(spark: SparkSession, mode: String): (Double, Long) = {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
@@ -54,10 +54,10 @@ object Bench {
           // row-group-prunable (the whole point of runAuto at scale)
           val raw = spark.read.schema(graft.model.Schemas.rawDocsWithN).parquet(BenchRawPath)
           Extract.runAuto(raw).write.mode(SaveMode.Overwrite).parquet(BenchOutPath)
-        case m =>
+        case "chunked" =>
+          // full output, unfiltered, as in `expr`
           val raw = spark.read.schema(graft.model.Schemas.rawDocs).parquet(BenchRawPath).as[RawDoc]
-          val ex = if (m == "chunked") Extract.runChunked(raw) else Extract.run(raw)
-          Extract.good(ex).write.mode(SaveMode.Overwrite).parquet(BenchOutPath)
+          Extract.runChunked(raw).write.mode(SaveMode.Overwrite).parquet(BenchOutPath)
       }
     }
     val n = spark.read.parquet(BenchOutPath).count()
@@ -85,8 +85,6 @@ object Bench {
     extractionJob(spark, "expr") // warmup (JIT/codegen)
     val (extractSec, extractedDocs) = extractionJob(spark, "expr")
     results += "extract" -> extractSec
-    val (typedSec, _) = extractionJob(spark, "typed")
-    results += "extract_typed" -> typedSec
     val (chunkedSec, _) = extractionJob(spark, "chunked")
     results += "extract_chunked" -> chunkedSec
     // adaptive routing: mixed-corpus time should track the fused path, not

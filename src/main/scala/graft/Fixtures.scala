@@ -2,7 +2,7 @@ package graft
 
 import graft.corpus.SyntheticCorpus
 import graft.core.Extract
-import graft.model.{Doc, RawDoc}
+import graft.model.RawDoc
 import graft.oracle.Extractor
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
@@ -28,7 +28,7 @@ object Fixtures {
   val MediaPath = s"$Dir/media.parquet"
   val AnnotatedPath = s"$Dir/annotated_docs.parquet"
   /** bump when generator/extractor semantics change: forces a rebuild */
-  val Version = "v9"
+  val Version = "v10"
   val NumDocs = 1200L
 
   @volatile private var ready = false
@@ -52,9 +52,11 @@ object Fixtures {
           org.apache.spark.sql.functions.col("spans")))
         .sortWithinPartitions("n_spans")
         .write.mode(SaveMode.Overwrite).parquet(RawPath)
-      // distributed chunked extraction (the skew path under test)
-      val extracted = Extract.runChunked(raw, maxSpansPerChunk = 1024)
-      Extract.good(extracted).write.mode(SaveMode.Overwrite).parquet(DocsPath)
+      // distributed chunked extraction (the skew path under test), good rows
+      Extract.runChunked(raw, maxSpansPerChunk = 1024)
+        .where(org.apache.spark.sql.functions.col("error").isNull)
+        .select("doc_id", "spans")
+        .write.mode(SaveMode.Overwrite).parquet(DocsPath)
       // sequential oracle surface: per-row Extractor.extract, no chunking,
       // poison docs skipped exactly as the distributed path quarantines them
       raw.flatMap { rd =>

@@ -14,14 +14,20 @@ import org.apache.spark.sql.SparkSession
   * spark-submit --class graft.Main app.jar \
   *   --input  /data/raw_docs.parquet \
   *   --output /data/extracted \
-  *   [--mode expr|auto|typed|chunked]   // default expr (fused expression);
-  *                                      // auto = 3-tier mega-doc skew routing
+  *   [--mode expr|auto]                 // default expr (fused expression,
+  *                                      // zero-shuffle); auto = 3-tier
+  *                                      // mega-doc skew routing
   *   [--batches N]                      // lineage/commit granularity (default 64);
   *                                      // shrinking N over an existing output
   *                                      // requires --no-resume (checked)
   *   [--no-resume]                      // wipe output (docs, quarantine,
   *                                      // lineage) and re-extract everything
-  *   [--shuffle-partitions N]           // only the chunked path shuffles
+  *   [--shuffle-partitions N]           // spark.sql.shuffle.partitions. In
+  *                                      // extraction only --mode auto
+  *                                      // shuffles: its medium tier (into
+  *                                      // defaultParallelism partitions)
+  *                                      // and its huge tier (into N); the
+  *                                      // pipeline stages shuffle into N
   *   [--pipeline]                       // run the full composed pipeline
   *   [--benchmark /path/bench.parquet]  // pipeline: decontamination source
   *                                      // (text column); stage skipped if absent
@@ -108,7 +114,7 @@ object Main {
     val input = opts.getOrElse("input", sys.error("--input <raw docs parquet> is required"))
     val output = opts.getOrElse("output", sys.error("--output <dir> is required"))
     val mode = opts.getOrElse("mode", "expr")
-    require(Set("expr", "auto", "typed", "chunked")(mode), s"unknown --mode $mode")
+    require(Set("expr", "auto")(mode), s"unknown --mode $mode (expr|auto)")
     val batches = opts.getOrElse("batches", "64").toInt
 
     val builder = SparkSession.builder().appName(s"graft-extract-$mode")

@@ -1,7 +1,6 @@
 package graft
 
 import graft.core.Extract
-import graft.model.RawDoc
 import org.apache.spark.sql.{SaveMode, SparkSession}
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
@@ -55,9 +54,7 @@ object ScalingBench {
     * extraction expression per row — quarantine splitting is a downstream
     * (or partitioned-write) concern. */
   private def job(spark: SparkSession): (Double, Long) = {
-    import spark.implicits._
     val raw = spark.read.schema(graft.model.Schemas.rawDocs).parquet(Bench.BenchRawPath)
-    val mode = sys.env.getOrElse("SPARK_GRAFT_SCALING_MODE", "expr")
     // sink=noop isolates compute scaling from the tmpfs write path: K
     // concurrent fleet JVMs writing parquet into the SAME kernel tmpfs
     // contend on a resource a real cluster never shares (each executor
@@ -65,10 +62,7 @@ object ScalingBench {
     // understates fleet scaling while noop measures the extraction itself.
     val sink = sys.env.getOrElse("SPARK_GRAFT_SCALING_SINK", "parquet")
     val t0 = System.nanoTime()
-    val out = mode match {
-      case "typed" => Extract.run(raw.as[RawDoc]).toDF()
-      case _ => Extract.runExpr(raw)
-    }
+    val out = Extract.runExpr(raw)
     if (sink == "noop") out.write.mode(SaveMode.Overwrite).format("noop").save()
     else out.write.mode(SaveMode.Overwrite).parquet(OutPath)
     val sec = (System.nanoTime() - t0) / 1e9

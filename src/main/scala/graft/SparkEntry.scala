@@ -2,7 +2,6 @@ package graft
 
 import graft.core.{Extract, Lineage}
 import graft.functions.{Dedup, Domains, Packing, Similarity, TextAnalysis}
-import graft.model.RawDoc
 import graft.multimodal.Multimodal
 import graft.queries.{Mutators, SpanQueries}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -28,10 +27,8 @@ object SparkEntry {
   /** Flagship: end-to-end distributed extraction of a fresh synthetic corpus
     * slice (sf0.001-scale), flattened to spans. Driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    val raw = Fixtures.rawCorpus(spark, 200)
-    val docs = Extract.good(Extract.run(raw)).toDF()
-    SpanQueries.flattenSpans(docs)
+    val raw = Fixtures.rawCorpus(spark, 200).toDF()
+    SpanQueries.flattenSpansOnce(Extract.runExpr(raw).select(col("doc_id"), col("spans")))
   }
 
   // ------------------------------------------------------------------ SQL
@@ -247,11 +244,10 @@ object SparkEntry {
         .join(Fixtures.docs(s).select(col("doc_id")), Seq("doc_id"), "left_anti")),
     "x3_compare_oracle" -> ((s, _) =>
       SpanQueries.compare(Fixtures.docs(s), Fixtures.expected(s))),
-    "x4_annotated_spans" -> ((s, _) => {
-      import s.implicits._
-      val raw = Fixtures.raw(s).as[graft.model.RawDoc]
-      SpanQueries.flattenSpans(Extract.good(Extract.run(raw, annotate = true)).toDF())
-    }),
+    "x4_annotated_spans" -> ((s, _) =>
+      SpanQueries.flattenSpansOnce(
+        Extract.runExpr(Fixtures.raw(s), annotate = true)
+          .select(col("doc_id"), col("spans")))),
 
     // ---- span-query algebra ----
     "q_all_text" -> ((s, _) => SpanQueries.allText(Fixtures.docs(s))),
@@ -361,8 +357,8 @@ object SparkEntry {
       SpanQueries.flattenSpansOnce(
         Extract.runExpr(Fixtures.raw(s)).select(col("doc_id"), col("spans")))),
     "x7_annotated_expr" -> ((s, _) =>
-      // the annotated FUSED path through the same single-eval flatten —
-      // x4 gates the typed annotated path; this gates the expression form
+      // the annotated fused path through the same single-eval flatten —
+      // x4 runs the same plan; both query names stay registered
       SpanQueries.flattenSpansOnce(
         Extract.runExpr(Fixtures.raw(s), annotate = true)
           .select(col("doc_id"), col("spans")))),

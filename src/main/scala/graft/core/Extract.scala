@@ -1,87 +1,42 @@
 package graft.core
 
 import graft.model._
-import graft.oracle.{ExtractionError, Extractor}
-import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.util.LongAccumulator
+import graft.oracle.Extractor
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.functions.{col, lit, size}
+import org.apache.spark.sql.types.{MapType, StringType}
 
-/** Row produced by the one-pass distributed extraction: either a good
-  * document (`error == null`) or a quarantined one (`spans` empty,
-  * `error` set). One output type keeps the job single-pass; callers split
-  * with cheap filters (or a partitioned write) downstream.
+/** Row of every extraction output: either a good document (`error ==
+  * null`) or a quarantined one (`spans == null`, `error` set). One output
+  * shape keeps the job single-pass; callers split with cheap filters (or a
+  * partitioned write) downstream.
   */
 final case class Extracted(doc_id: String, spans: Seq[Span], error: String)
 
-/** Distributed extraction core (SURVEY.md §7.1 step 4): `Dataset[RawDoc] →
-  * Dataset[Extracted]` via `mapPartitions`, invoking the same per-document
-  * routine as the oracle (`graft.oracle.Extractor`). `mapPartitions` (not a
-  * UDF) amortizes setup and keeps the per-doc state machines in plain Scala —
-  * the Spark analog of `ParseFromStream` (`WordDocumentTreeParser.cs:40-76`).
+/** Distributed extraction core (SURVEY.md §7.1 step 4): raw documents →
+  * `(doc_id, spans, error)`. A whole document is extracted by one engine,
+  * the fused `extract_spans` expression ([[graft.functions.ExtractSpansExpr]]),
+  * which calls the oracle's per-document walk (`graft.oracle.Extractor`).
+  * Only a document split into chunks for intra-document parallelism
+  * ([[runChunked]], [[runAuto]]'s huge tier) is walked chunk by chunk.
   *
   * Error tolerance: a poison document quarantines its row, never fails the
   * task (a single bad doc must not kill a 10^12-row job) — the corpus-scale
   * form of the reference's per-part try/catch-skip
-  * (`WordDocumentTreeParser.cs:166-169`).
+  * (`WordDocumentTreeParser.cs:166-169`). Every path quarantines with the
+  * same `"<Class>: <message>"` error and `spans = null`, so the path choice
+  * never changes the output (SparkExtractSpec's cross-path equality test).
   */
 object Extract {
 
-  final class Metrics(spark: SparkSession) extends Serializable {
-    val docs: LongAccumulator = spark.sparkContext.longAccumulator("graft.docs")
-    val spansIn: LongAccumulator = spark.sparkContext.longAccumulator("graft.spansIn")
-    val spansOut: LongAccumulator = spark.sparkContext.longAccumulator("graft.spansOut")
-    val errors: LongAccumulator = spark.sparkContext.longAccumulator("graft.errors")
-  }
-
-  /** Zero-shuffle default path: narrow mapPartitions over the scan.
-    * `annotate = true` switches to the A4 metadata-annotation rendering. */
-  def run(raw: Dataset[RawDoc], metrics: Option[Metrics] = None,
-          annotate: Boolean = false): Dataset[Extracted] = {
-    val spark = raw.sparkSession
-    import spark.implicits._
-    raw.mapPartitions { it =>
-      it.map { rd =>
-        metrics.foreach { m => m.docs.add(1); m.spansIn.add(rd.spans.length) }
-        try {
-          val d = if (annotate) Extractor.extractAnnotated(rd) else Extractor.extract(rd)
-          metrics.foreach(_.spansOut.add(d.spans.length))
-          Extracted(d.doc_id, d.spans, null)
-        } catch {
-          // ONE quarantine format across every path ("<Class>: <message>",
-          // what ExtractSpansExpr and runChunked emit) — mode choice must
-          // not change output bytes for identical inputs
-          case e: Exception =>
-            metrics.foreach(_.errors.add(1))
-            Extracted(rd.doc_id, Nil, s"${e.getClass.getSimpleName}: ${e.getMessage}")
-        }
-      }
-    }
-  }
-
-  def good(ds: Dataset[Extracted]): Dataset[Doc] = {
-    val spark = ds.sparkSession
-    import spark.implicits._
-    ds.filter(_.error == null).map(e => Doc(e.doc_id, e.spans))
-  }
-
-  def quarantined(ds: Dataset[Extracted]): Dataset[Quarantined] = {
-    val spark = ds.sparkSession
-    import spark.implicits._
-    ds.filter(_.error != null).map(e => Quarantined(e.doc_id, e.error))
-  }
-
-  /** Catalyst-native fast path: the fused `extract_spans` expression
-    * (see [[graft.functions.ExtractSpansExpr]]) — same semantic core, no
-    * typed-encoder round trip. Input: the raw DataFrame (doc_id, spans[,
-    * meta]); output columns (doc_id, spans, error) with error != null marking
-    * quarantined rows. Prefer this for pure-throughput extraction jobs; the
-    * typed mapPartitions path remains for metric accumulation.
+  /** The zero-shuffle default path: the fused `extract_spans` expression
+    * over the scan, no typed-encoder round trip. Input: the raw DataFrame
+    * (doc_id, spans[, meta]); output columns (doc_id, spans, error).
+    * `annotate = true` switches to the A4 metadata-annotation rendering.
     */
-  def runExpr(raw: org.apache.spark.sql.DataFrame, annotate: Boolean = false): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.col
+  def runExpr(raw: DataFrame, annotate: Boolean = false): DataFrame = {
     val metaCol = if (raw.columns.contains("meta")) col("meta")
-                  else org.apache.spark.sql.functions.lit(null)
-        .cast(org.apache.spark.sql.types.MapType(
-          org.apache.spark.sql.types.StringType, org.apache.spark.sql.types.StringType))
+                  else lit(null).cast(MapType(StringType, StringType))
     raw.select(col("doc_id"),
         graft.functions.ExtractSpansExpr(col("spans"), metaCol, annotate).as("x"))
       .select(col("doc_id"), col("x.spans").as("spans"), col("x.error").as("error"))
@@ -99,9 +54,10 @@ object Extract {
     *    this size costs ~10x more than parsing them (three typed-encoder
     *    round trips + two shuffles of every span), so per-DOC spreading, not
     *    intra-doc chunking, is the right lever here;
-    *  - **huge** (> hugeThreshold, the 10^6-span pathology): [[runChunked]] —
-    *    intra-document parallelism is now worth its two shuffles because a
-    *    single doc exceeds a sensible task.
+    *  - **huge** (> hugeThreshold, the 10^6-span pathology): the chunk →
+    *    repartition → regroup tier of [[runChunked]] — intra-document
+    *    parallelism is now worth its two shuffles because a single doc
+    *    exceeds a sensible task.
     *
     * The routes are filtered subtrees of the same scan, unioned. When the
     * raw table carries a materialized `n_spans` column (the corpus writers
@@ -112,13 +68,11 @@ object Extract {
     * the `size(spans)` fallback (for inputs without the column) still
     * evaluates correctly, it just cannot prune row groups.
     *
-    * Output matches [[runExpr]]/[[runChunked]]: (doc_id, spans, error) with
-    * quarantined rows carrying spans = null/empty and the error message.
+    * Output matches [[runExpr]] and [[runChunked]] row for row.
     */
-  def runAuto(raw: org.apache.spark.sql.DataFrame,
+  def runAuto(raw: DataFrame,
               spreadThreshold: Int = 8192,
-              hugeThreshold: Int = 262144): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.{col, size}
+              hugeThreshold: Int = 262144): DataFrame = {
     val spark = raw.sparkSession
     import spark.implicits._
     val hasN = raw.columns.contains("n_spans")
@@ -135,58 +89,48 @@ object Extract {
     val medium = runExpr(
       raw.where(n > spreadThreshold && n <= hugeThreshold).select(rawCols: _*)
         .repartition(spark.sparkContext.defaultParallelism))
-    // the typed chunked path needs the RawDoc encoder's full column set —
+    // the typed chunk tier needs the RawDoc encoder's full column set —
     // a meta-less input (which runExpr accepts as-is) gets a typed NULL map
     val hugeCols = Seq(col("doc_id"), col("spans")) :+
       (if (raw.columns.contains("meta")) col("meta")
-       else org.apache.spark.sql.functions.lit(null)
-         .cast(org.apache.spark.sql.types.MapType(
-           org.apache.spark.sql.types.StringType,
-           org.apache.spark.sql.types.StringType)).as("meta"))
-    val huge = runChunked(
-      raw.where(n > hugeThreshold).select(hugeCols: _*).as[RawDoc],
+       else lit(null).cast(MapType(StringType, StringType)).as("meta"))
+    val huge = chunkTier(raw.where(n > hugeThreshold).select(hugeCols: _*).as[RawDoc],
       maxSpansPerChunk = spreadThreshold.max(1024))
-      .toDF()
     small.unionByName(medium).unionByName(huge)
   }
 
-  /** Skew-handling path for mega-documents (SURVEY.md §4.3.1): split
-    * oversized docs into chunks at top-level element boundaries, hash-
-    * repartition `(doc_id, chunk_id)` so one 10^6-span document no longer
-    * pins a single task, extract chunks independently (no parser state
-    * crosses a top-level boundary; the per-doc context is replicated into
-    * each chunk), then regroup + reindex. Exactly one shuffle pair; small
-    * docs ride along as single chunks. Use when the corpus has a heavy tail;
-    * the default path stays zero-shuffle.
+  /** Skew-handling path for mega-documents (SURVEY.md §4.3.1): documents of
+    * more than `maxSpansPerChunk` spans go through [[chunkTier]]; the rest —
+    * the 99.9 % of any real corpus — ride the zero-shuffle [[runExpr]] path
+    * and pay neither shuffle. Output columns (doc_id, spans, error), as
+    * [[runExpr]]. Use when the corpus has a heavy tail; the default path
+    * stays zero-shuffle.
     */
-  def runChunked(raw: Dataset[RawDoc], maxSpansPerChunk: Int = 8192,
-                 metrics: Option[Metrics] = None): Dataset[Extracted] = {
+  def runChunked(raw: Dataset[RawDoc], maxSpansPerChunk: Int = 8192): DataFrame = {
+    // [[Chunker.split]] yields exactly one chunk iff `spans.length <=
+    // maxSpans` (`indexed` is length-preserving), and one chunk walks to the
+    // same output as the whole document. A null spans row goes the same way:
+    // runExpr quarantines it ("null spans"), the chunker cannot split it.
+    // The routing predicate is a scan-level column filter.
+    val single = col("spans").isNull || size(col("spans")) <= maxSpansPerChunk
+    runExpr(raw.toDF().where(single))
+      .unionByName(chunkTier(raw.where(!single), maxSpansPerChunk))
+  }
+
+  /** Intra-document parallelism: split each document into chunks at
+    * top-level element boundaries, hash-repartition `(doc_id, chunk_id)` so
+    * one 10^6-span document no longer pins a single task, extract chunks
+    * independently (no parser state crosses a top-level boundary; the
+    * per-doc context is replicated into each chunk), then regroup +
+    * reindex. Exactly one shuffle pair. A chunk that fails quarantines its
+    * whole document. Input rows must have non-null spans. */
+  private def chunkTier(raw: Dataset[RawDoc], maxSpansPerChunk: Int): DataFrame = {
     val spark = raw.sparkSession
     import spark.implicits._
-    // r07: single-chunk documents (≤ maxSpansPerChunk spans — the 99.9 % of
-    // any real corpus; [[Chunker.split]] yields exactly one chunk iff
-    // `spans.length <= maxSpans`, since `indexed` is length-preserving) pay
-    // NEITHER shuffle: they ride the zero-shuffle [[run]] path, whose output
-    // is byte-identical to chunk-then-regroup for a single chunk (same
-    // `walk` over the offset-sorted body, same `reindex` densification, same
-    // quarantine format — the cross-mode output-equality gate in
-    // SparkExtractSpec holds this). Formerly every row — payload included —
-    // crossed both exchanges just to reassemble into itself. The routing
-    // predicate is a scan-level column filter; null-spans rows route to the
-    // multi-chunk path so their failure semantics are unchanged.
-    val single = org.apache.spark.sql.functions.col("spans").isNotNull &&
-      org.apache.spark.sql.functions.size(org.apache.spark.sql.functions.col("spans")) <= maxSpansPerChunk
-    val direct = run(raw.filter(single), metrics)
-    val multiRaw = raw.filter(!single)
-    val chunks = multiRaw.flatMap { rd =>
-      metrics.foreach { m => m.docs.add(1); m.spansIn.add(rd.spans.length) }
-      Chunker.split(rd, maxSpansPerChunk)
-    }
     // shuffle 1: spread chunks evenly — hash-partition on (doc_id, chunk_id)
     // so a mega-document's chunks land on different tasks
-    val extracted = chunks
-      .repartition(org.apache.spark.sql.functions.col("doc_id"),
-                   org.apache.spark.sql.functions.col("chunk_id"))
+    val extracted = raw.flatMap(Chunker.split(_, maxSpansPerChunk))
+      .repartition(col("doc_id"), col("chunk_id"))
       .map { ch =>
         try {
           val ctx = Extractor.buildCtx(ch.ctxSpans ++ ch.spans, ch.meta)
@@ -197,19 +141,14 @@ object Extract {
         }
       }
     // shuffle 2 (the regroup): reassemble documents in chunk order
-    val multi = extracted.groupByKey(_.doc_id).mapGroups { (docId, it) =>
+    extracted.groupByKey(_.doc_id).mapGroups { (docId, it) =>
       val parts = it.toSeq.sortBy(_.chunk_id)
       parts.collectFirst { case c if c.error != null => c.error } match {
-        case Some(err) =>
-          metrics.foreach(_.errors.add(1))
-          Extracted(docId, Nil, err)
+        case Some(err) => Extracted(docId, null, err)
         case None =>
-          val spans = parts.flatMap(_.spans).zipWithIndex.map { case (s, i) => s.copy(offset = i) }
-          metrics.foreach(_.spansOut.add(spans.length))
-          Extracted(docId, spans, null)
+          Extracted(docId, parts.flatMap(_.spans).zipWithIndex.map { case (s, i) => s.copy(offset = i) }, null)
       }
-    }
-    direct.union(multi)
+    }.toDF()
   }
 }
 

@@ -1,6 +1,5 @@
 package graft.core
 
-import graft.model.RawDoc
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Observation, SparkSession}
 import org.apache.spark.sql.functions._
@@ -96,9 +95,9 @@ object Lineage {
 
   /** Run (or resume) the batched extraction job. Returns the lineage rows of
     * every batch that is committed when the call finishes, in batch-id
-    * order. `mode` selects the extraction path: `expr` (fused expression,
-    * default), `auto` (3-tier skew routing), `chunked` (typed mega-doc
-    * path), `typed` (mapPartitions).
+    * order. `mode` selects the extraction path: `expr` ([[Extract.runExpr]],
+    * the zero-shuffle default) or `auto` ([[Extract.runAuto]], 3-tier skew
+    * routing).
     *
     * If a batch fails, no batch still queued is started; the call waits for
     * the batches already running to commit or fail, then throws the first
@@ -107,7 +106,7 @@ object Lineage {
   def runBatched(spark: SparkSession, rawPath: String, outPath: String,
                  numBatches: Int = 8, mode: String = "expr",
                  store: DocStore = DocStore()): Seq[LineageRow] = {
-    require(Set("expr", "auto", "typed", "chunked")(mode), s"unknown mode $mode")
+    require(Set("expr", "auto")(mode), s"unknown mode $mode (expr|auto)")
     val batches = inputBatches(spark, rawPath, numBatches)
     val done = committedBatches(spark, outPath, store)
     // a previously-committed batch id beyond the current grouping means the
@@ -149,12 +148,8 @@ object Lineage {
     import spark.implicits._
     val t0 = System.nanoTime()
     val rawDf = spark.read.schema(readSchema).parquet(files: _*)
-    val extracted = (mode match {
-      case "chunked" => Extract.runChunked(rawDf.select("doc_id", "spans", "meta").as[RawDoc]).toDF()
-      case "typed"   => Extract.run(rawDf.select("doc_id", "spans", "meta").as[RawDoc]).toDF()
-      case "auto"    => Extract.runAuto(rawDf)
-      case _         => Extract.runExpr(rawDf)
-    }).persist()
+    val extracted = (if (mode == "auto") Extract.runAuto(rawDf)
+                     else Extract.runExpr(rawDf)).persist()
     try {
       val goodStats, badStats = new Observation()
       val good = extracted.where(col("error").isNull).select("doc_id", "spans")

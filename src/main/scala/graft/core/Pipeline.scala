@@ -189,12 +189,11 @@ object Pipeline {
 
   /** Run one resumable stage: skip if committed with a matching input
     * fingerprint, else evaluate `body` over the input, write `out/<name>`,
-    * and commit the lineage row last. `rows_in` is a column-pruned scan of
-    * the already-materialized input table (`body` may scan it more than
-    * once, so it is not observed); `rows_out` is observed on the stage
-    * write itself — neither recomputes the stage plan. */
+    * and commit the lineage row last. `rowsIn` is the upstream stage's
+    * `rows_out` (the row count of `inputDirs.head`), so no Spark job counts
+    * the input; `rows_out` is observed on the stage write itself. */
   private def runStage(spark: SparkSession, cfg: Config, name: String,
-                       inputDirs: Seq[String], params: String)
+                       inputDirs: Seq[String], params: String, rowsIn: Long)
                       (body: DataFrame => DataFrame): StageLineage = {
     import spark.implicits._
     val fp = stageFingerprint(spark, inputDirs, params)
@@ -215,7 +214,7 @@ object Pipeline {
         val written = new Observation()
         store.write(body(in).observe(written, count(lit(1)).as("rows")),
           s"${cfg.outPath}/$name")
-        val row = StageLineage(name, fp, in.count(),
+        val row = StageLineage(name, fp, rowsIn,
           written.get("rows").asInstanceOf[Long],
           (System.nanoTime() - t0) / 1000000, java.time.Instant.now().toString)
         // commit point: lineage row written last
@@ -235,6 +234,11 @@ object Pipeline {
     def checkpoint(name: String): Unit =
       if (failAfter.contains(name))
         throw new RuntimeException(s"pipeline failpoint after stage $name")
+    // every stage reads the table its predecessor wrote, so its rows_in is
+    // the last row's rows_out (for s1_exact: extract's good-doc count)
+    def stage(name: String, inputDirs: Seq[String], params: String)
+             (body: DataFrame => DataFrame): Unit =
+      rows += runStage(spark, cfg, name, inputDirs, params, rows.last.rows_out)(body)
 
     // ---- extract (per-batch resume inside runBatched) ----
     // The summary row reports metrics only; its fingerprint field is a
@@ -254,7 +258,7 @@ object Pipeline {
 
     var current = s"${cfg.outPath}/extract/docs"
 
-    rows += runStage(spark, cfg, "s1_exact", Seq(current), "") { in =>
+    stage("s1_exact", Seq(current), "") { in =>
       Dedup.dropExactDuplicates(
         SpanQueries.allText(in.select(col("doc_id"), col("spans"))))
     }
@@ -265,7 +269,7 @@ object Pipeline {
       // line-level boilerplate BEFORE near-dedup: repeated nav/footer lines
       // otherwise dominate the shingle sets of unrelated pages and glue
       // them into spurious near-dup clusters (the CCNet/RefinedWeb order)
-      rows += runStage(spark, cfg, "s1b_lines", Seq(current),
+      stage("s1b_lines", Seq(current),
         s"maxDocFreq=${cfg.lineMaxDocFreq}") { in =>
         Dedup.dropRepeatedLines(in, cfg.lineMaxDocFreq)
       }
@@ -273,7 +277,7 @@ object Pipeline {
       checkpoint("s1b_lines")
     }
 
-    rows += runStage(spark, cfg, "s2_neardup", Seq(current),
+    stage("s2_neardup", Seq(current),
       s"threshold=${cfg.threshold},ngram=${cfg.ngram}") { in =>
       Dedup.dropNearDuplicates(in, cfg.threshold, cfg.ngram)
     }
@@ -287,7 +291,7 @@ object Pipeline {
       // near-dup docs alive with holes. On the survivors, this removes the
       // sub-document duplication (licence blocks, quoted chunks) no
       // doc-granularity pass can see.
-      rows += runStage(spark, cfg, "s2b_substr", Seq(current),
+      stage("s2b_substr", Seq(current),
         s"window=${cfg.substrWindow}") { in =>
         Dedup.dropDuplicatedSubstrings(in, cfg.substrWindow)
       }
@@ -299,7 +303,7 @@ object Pipeline {
       // keep-first content dedup at paragraph granularity — after
       // near-dedup for the same reason as s2b_substr (stripping duplicated
       // paragraphs first would hide the whole-doc near-dup signal)
-      rows += runStage(spark, cfg, "s2p_paras", Seq(current), "") { in =>
+      stage("s2p_paras", Seq(current), "") { in =>
         Dedup.dropDuplicateParagraphs(in)
       }
       current = s"${cfg.outPath}/s2p_paras"
@@ -307,7 +311,7 @@ object Pipeline {
     }
 
     cfg.benchmarkPath.foreach { bench =>
-      rows += runStage(spark, cfg, "s3_decontam", Seq(current, bench),
+      stage("s3_decontam", Seq(current, bench),
         s"ngram=${cfg.contaminationNgram}") { in =>
         Dedup.dropContaminated(in, spark.read.parquet(bench), cfg.contaminationNgram)
       }
@@ -320,7 +324,7 @@ object Pipeline {
       // zero shuffle (the report-form self-join would scan twice and
       // exchange both sides for nothing; s4's join below genuinely needs a
       // join because ranking is global)
-      rows += runStage(spark, cfg, "s3g_gopher", Seq(current),
+      stage("s3g_gopher", Seq(current),
         s"minStopHits=${cfg.gopherMinStopHits}") { in =>
         in.where(graft.functions.TextAnalysis
           .gopherKeep(minStopHits = cfg.gopherMinStopHits))
@@ -329,7 +333,7 @@ object Pipeline {
       checkpoint("s3g_gopher")
     }
 
-    rows += runStage(spark, cfg, "s4_quality", Seq(current),
+    stage("s4_quality", Seq(current),
       s"keepFrac=${cfg.keepFrac}") { in =>
       in.join(Packing.qualityTopFraction(in, cfg.keepFrac).select(col("doc_id")),
         Seq("doc_id"), "left_semi")
@@ -344,7 +348,7 @@ object Pipeline {
       // prefix (a crawl pipeline reads its crawl-metadata host column the
       // same way); under-cap domains never shuffle (broadcast anti-join),
       // over-cap domains rank across range partitions.
-      rows += runStage(spark, cfg, "s4d_domain", Seq(current), s"cap=$cap") { in =>
+      stage("s4d_domain", Seq(current), s"cap=$cap") { in =>
         Domains.domainFrequencyCap(
           in.withColumn("graft_domain",
             regexp_extract(col("doc_id"), "^doc-([a-z]+)-", 1)),
@@ -359,7 +363,7 @@ object Pipeline {
       // would perturb punctuation/stopword signals), and scrubbing docs the
       // quality gate is about to drop would be wasted compute. Pure
       // per-row codegen regexp chain — one scan, zero shuffle.
-      rows += runStage(spark, cfg, "s4r_redact", Seq(current), "") { in =>
+      stage("s4r_redact", Seq(current), "") { in =>
         in.withColumn("text", graft.functions.TextAnalysis.redactPii(col("text")))
       }
       current = s"${cfg.outPath}/s4r_redact"
@@ -373,7 +377,7 @@ object Pipeline {
       val params = "fractions=" + cfg.sampleFractions.toSeq.sorted
         .map { case (k, v) => s"$k=$v" }.mkString(";") +
         s",default=${cfg.sampleDefault}"
-      rows += runStage(spark, cfg, "s4s_sample", Seq(current), params) { in =>
+      stage("s4s_sample", Seq(current), params) { in =>
         graft.functions.TextAnalysis.sampleStratified(
           in.withColumn("lang", graft.functions.TextAnalysis.langGuess(col("text"))),
           "lang", cfg.sampleFractions, defaultFraction = cfg.sampleDefault)
@@ -391,7 +395,7 @@ object Pipeline {
       // as s4d_domain (a crawl pipeline reads its host column the same way).
       val params = "targets=" + cfg.mixTargets.toSeq.sorted
         .map { case (k, v) => s"$k=$v" }.mkString(";") + s",budget=$budget"
-      rows += runStage(spark, cfg, "s4m_mix", Seq(current), params) { in =>
+      stage("s4m_mix", Seq(current), params) { in =>
         Domains.tokenBudgetMix(
           in.withColumn("graft_domain",
             regexp_extract(col("doc_id"), "^doc-([a-z]+)-", 1)),
@@ -407,7 +411,7 @@ object Pipeline {
       // Chunk ids extend the doc id ("<doc_id>#<chunk_idx>") so provenance
       // prefixes keep parsing and packing keys stay unique per row.
       val stride = cfg.chunkStride.getOrElse(size)
-      rows += runStage(spark, cfg, "s4c_chunk", Seq(current),
+      stage("s4c_chunk", Seq(current),
         s"size=$size,stride=$stride") { in =>
         Packing.chunkTokens(in, size, stride)
           .select(concat(col("doc_id"), lit("#"), col("chunk_idx")).as("doc_id"),
@@ -417,7 +421,7 @@ object Pipeline {
       checkpoint("s4c_chunk")
     }
 
-    rows += runStage(spark, cfg, "s5_pack", Seq(current),
+    stage("s5_pack", Seq(current),
       s"seqLen=${cfg.seqLen}") { in =>
       Packing.packSequences(in, cfg.seqLen)
     }

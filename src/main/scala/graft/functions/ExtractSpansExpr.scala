@@ -14,10 +14,11 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Fused extraction as a native Catalyst expression:
   * `extract_spans(spans, meta)` → `struct<spans: array<span>, error: string>`.
   *
-  * Why (SURVEY.md §2.9/§4.3, "measure first"): the mapPartitions path pays
-  * the typed-encoder round trip — InternalRow → RawDoc(Seq[RawSpan]) →
-  * Extracted(Seq[Span]) → InternalRow. The pure-Scala core measured at ~4x
-  * the Spark per-core rate, i.e. framework overhead dominates. This
+  * It is the one engine that extracts a whole document ([[graft.core.Extract]]).
+  * Why (SURVEY.md §2.9/§4.3, "measure first"): a typed Dataset path pays the
+  * encoder round trip — InternalRow → RawDoc(Seq[RawSpan]) →
+  * Extracted(Seq[Span]) → InternalRow — and the pure-Scala core measured at
+  * ~4x the Spark per-core rate, i.e. framework overhead dominated. This
   * expression reads the raw span `ArrayData` directly and emits the output
   * `GenericArrayData` directly — same shared semantic core
   * (`Extractor.walk`), no Seq/case-class round trip for the envelope, no

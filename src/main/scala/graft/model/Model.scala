@@ -27,12 +27,6 @@ final case class Span(kind: String, text: String, media_ref: String, offset: Int
   */
 final case class Doc(doc_id: String, spans: Seq[Span])
 
-/** A quarantined document: extraction failed; job must survive
-  * (error-tolerance semantics of the reference's per-part try/catch-skip,
-  * e.g. `WordDocumentTreeParser.cs:166-169`).
-  */
-final case class Quarantined(doc_id: String, error: String)
-
 /** Media side-table row (image bytes live out-of-row, exactly as OOXML keeps
   * media parts outside document.xml; `ImageExtractor.cs:61-81`).
   */

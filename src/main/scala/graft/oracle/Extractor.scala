@@ -11,7 +11,7 @@ final case class ExtractionError(message: String) extends RuntimeException(messa
 
 /** Pure-Scala, single-document extraction core — the line-for-line semantic
   * mirror of the reference's body walk. This is both the test oracle and the
-  * routine invoked per row by the distributed `mapPartitions` core
+  * routine the distributed `extract_spans` expression invokes per row
   * (SURVEY.md §7.1 steps 3-4).
   *
   * Semantics rebuilt from `/root/reference`:

@@ -59,11 +59,20 @@ class LineageSpec extends AnyFunSuite {
     assert(committed.values.forall(_.wall_ms > 0))
   }
 
+  test("runBatched accepts only the expr and auto modes") {
+    Seq("typed", "chunked").foreach { mode =>
+      intercept[IllegalArgumentException] {
+        Lineage.runBatched(spark, "/tmp/graft_lineage_raw", "/tmp/graft_lineage_badmode", mode = mode)
+      }
+    }
+    assert(!Files.exists(Paths.get("/tmp/graft_lineage_badmode")))
+  }
+
   test("fingerprint is sensitive to mode and in-place file rewrites; empty _lineage does not kill resume") {
     val files = Lineage.inputBatches(spark, "/tmp/graft_lineage_raw", 1).head._2
     val expr = Lineage.fingerprint(spark, files, "expr")
     // a re-run under another extraction mode must NOT skip committed batches
-    assert(expr != Lineage.fingerprint(spark, files, "typed"))
+    assert(expr != Lineage.fingerprint(spark, files, "auto"))
     // a file rewritten in place (same path, new bytes) must change identity
     val victim = Paths.get(new java.net.URI(files.head))
     val original = Files.readAllBytes(victim)

@@ -70,6 +70,12 @@ class PipelineSpec extends AnyFunSuite {
     val packed = spark.read.parquet(s"$out/s5_pack")
     assert(packed.count() == byName("s5_pack").rows_out)
     assert(packed.count() == q.rows_out)
+    // rows_in is taken from the upstream row, so check each rows_out
+    // against the table the stage wrote
+    stages.foreach { s =>
+      val table = if (s.stage == "extract") s"$out/extract/docs" else s"$out/${s.stage}"
+      assert(spark.read.parquet(table).count() == s.rows_out, s.stage)
+    }
     val total = packed.agg(sum("n_tokens")).head().getLong(0)
     val maxEnd = packed.agg(max(col("tok_start") + col("n_tokens"))).head().getLong(0)
     assert(maxEnd == total) // gap-free concat stream

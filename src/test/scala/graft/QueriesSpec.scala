@@ -247,7 +247,9 @@ class QueriesSpec extends AnyFunSuite {
       graft.model.RawSpan("p", "run:T |fldBegin|instr:DOCPROPERTY Title|fldSep|run:x|fldEnd", null, 0),
       graft.model.RawSpan("p", "run:A |sdtrun:plaintext,9,t:VAL", null, 1)),
       Map("title" -> "Doc Title")))
-    val out = Extract.good(Extract.run(raw.toDS(), annotate = true)).collect().head
+    val out = Extract.runExpr(raw.toDS().toDF(), annotate = true)
+      .as[graft.core.Extracted].collect().head
+    assert(out.error == null)
     assert(out.spans.map(_.text) == Seq("T [DocProperty:Core/Title=\"Doc Title\"]", "A [ContentControl:plaintext t=\"VAL\"]"))
   }
 }

@@ -1,9 +1,10 @@
 package graft
 
-import graft.core.{Chunker, Extract}
+import graft.core.{Chunker, Extract, Extracted}
 import graft.corpus.SyntheticCorpus
 import graft.model.{Doc, RawDoc}
 import graft.oracle.Extractor
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end distributed extraction vs the sequential oracle: span-sequence
@@ -20,11 +21,20 @@ class SparkExtractSpec extends AnyFunSuite {
     docs.flatMap(d => try Some(Extractor.extract(d)) catch { case _: Exception => None })
       .map(d => d.doc_id -> d).toMap
 
+  /** Every (doc_id, spans, error) row of an extraction output, by doc_id. */
+  private def rows(out: DataFrame): Seq[Extracted] = {
+    import spark.implicits._
+    out.as[Extracted].collect().toSeq.sortBy(_.doc_id)
+  }
+
+  private def good(out: DataFrame): Seq[Doc] =
+    rows(out).filter(_.error == null).map(e => Doc(e.doc_id, e.spans))
+
   test("distributed extraction == oracle on a 500-doc mixed corpus") {
     import spark.implicits._
     val raw = corpus(500)
     val expected = oracleOf(raw)
-    val got = Extract.good(Extract.run(raw.toDS().repartition(7))).collect()
+    val got = good(Extract.runExpr(raw.toDS().repartition(7).toDF()))
     assert(got.length == expected.size)
     got.foreach { d =>
       assert(expected(d.doc_id).spans == d.spans, s"mismatch for ${d.doc_id}")
@@ -36,7 +46,7 @@ class SparkExtractSpec extends AnyFunSuite {
     // indices around the mega (997) and poison (1009) strides
     val raw = (990L to 1015L).map(i => SyntheticCorpus.rawDoc(SyntheticCorpus.docIdFor(i)))
     val expected = oracleOf(raw)
-    val got = Extract.good(Extract.runChunked(raw.toDS(), maxSpansPerChunk = 512)).collect()
+    val got = good(Extract.runChunked(raw.toDS(), maxSpansPerChunk = 512))
     assert(got.length == expected.size)
     got.foreach { d =>
       assert(expected(d.doc_id).spans == d.spans, s"mismatch for ${d.doc_id}")
@@ -47,11 +57,11 @@ class SparkExtractSpec extends AnyFunSuite {
     import spark.implicits._
     val raw = Seq(SyntheticCorpus.rawDoc("doc-poison-000001009"),
       SyntheticCorpus.rawDoc("doc-runs-000000001"))
-    val ex = Extract.run(raw.toDS())
-    val q = Extract.quarantined(ex).collect()
-    assert(q.map(_.doc_id).toSeq == Seq("doc-poison-000001009"))
-    assert(q.head.error.nonEmpty)
-    assert(Extract.good(ex).count() == 1)
+    val ex = rows(Extract.runExpr(raw.toDS().toDF()))
+    val q = ex.filter(_.error != null)
+    assert(q.map(_.doc_id) == Seq("doc-poison-000001009"))
+    assert(q.head.error.nonEmpty && q.head.spans == null)
+    assert(ex.count(_.error == null) == 1)
   }
 
   test("chunker splits only at depth-0 boundaries and loses nothing") {
@@ -145,6 +155,28 @@ class SparkExtractSpec extends AnyFunSuite {
     }
   }
 
+  test("runExpr, runAuto and runChunked return identical rows, quarantined rows included") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    val docs = corpus(60) ++ Seq(SyntheticCorpus.rawDoc("doc-mega-000000997"),
+      SyntheticCorpus.rawDoc("doc-poison-000001009"))
+    val df = docs.toDS().toDF()
+    val nullRow = df.limit(1).select(lit("null-doc").as("doc_id"),
+      lit(null).cast(df.schema("spans").dataType).as("spans"),
+      lit(null).cast(df.schema("meta").dataType).as("meta"))
+    val raw = df.unionByName(nullRow)
+    // the mega doc takes runAuto's huge tier and is split into chunks by
+    // both; the poison and null-spans rows quarantine
+    assert(docs.find(_.doc_id == "doc-mega-000000997").exists(_.spans.length > 6000))
+    val expr = rows(Extract.runExpr(raw))
+    assert(expr.filter(_.error != null).map(_.doc_id) == Seq("doc-poison-000001009", "null-doc"))
+    assert(expr.filter(_.error != null).forall(_.spans == null))
+    val auto = rows(Extract.runAuto(raw, spreadThreshold = 512, hugeThreshold = 6000))
+    assert(auto == expr)
+    val chunked = rows(Extract.runChunked(raw.as[RawDoc], maxSpansPerChunk = 512).toDF())
+    assert(chunked == expr)
+  }
+
   test("x5 registration evaluates extract_spans exactly once (no filter re-eval)") {
     Fixtures.ensure(spark)
     val plan = SparkEntry.queries("x5_extract_expr_spans")(spark, "")
@@ -232,15 +264,15 @@ class SparkExtractSpec extends AnyFunSuite {
   test("extraction is deterministic and idempotent across partitionings") {
     import spark.implicits._
     val raw = corpus(120)
-    val a = Extract.good(Extract.run(raw.toDS().repartition(2))).collect().sortBy(_.doc_id)
-    val b = Extract.good(Extract.run(raw.toDS().repartition(11))).collect().sortBy(_.doc_id)
-    assert(a.toSeq == b.toSeq)
+    val a = good(Extract.runExpr(raw.toDS().repartition(2).toDF()))
+    val b = good(Extract.runExpr(raw.toDS().repartition(11).toDF()))
+    assert(a == b)
   }
 
   test("output invariants: dense offsets, vocabulary kinds, media_ref discipline") {
     import spark.implicits._
     val raw = corpus(200)
-    Extract.good(Extract.run(raw.toDS())).collect().foreach { d =>
+    good(Extract.runExpr(raw.toDS().toDF())).foreach { d =>
       assert(d.spans.map(_.offset) == d.spans.indices)
       d.spans.foreach { s =>
         assert(graft.model.Kinds.OutputKinds.contains(s.kind), s"${d.doc_id}: ${s.kind}")
