@@ -1,7 +1,6 @@
 package graft
 
 import graft.core.Extract
-import graft.model.RawDoc
 import org.apache.spark.sql.{SaveMode, SparkSession}
 
 /** Driver-run benchmark: headline queries + the flagship extraction job.
@@ -37,11 +36,9 @@ object Bench {
   }
 
   /** End-to-end extraction: scan → extract → write. `mode` selects the
-    * fused-expression path (`expr`), the chunked skew path (`chunked`) or
-    * adaptive routing (`auto`). Returns (seconds, output rows). */
+    * fused-expression path (`expr`) or adaptive skew routing (`auto`).
+    * Returns (seconds, output rows). */
   def extractionJob(spark: SparkSession, mode: String): (Double, Long) = {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
     val sec = time {
       mode match {
         case "expr" =>
@@ -54,10 +51,6 @@ object Bench {
           // row-group-prunable (the whole point of runAuto at scale)
           val raw = spark.read.schema(graft.model.Schemas.rawDocsWithN).parquet(BenchRawPath)
           Extract.runAuto(raw).write.mode(SaveMode.Overwrite).parquet(BenchOutPath)
-        case "chunked" =>
-          // full output, unfiltered, as in `expr`
-          val raw = spark.read.schema(graft.model.Schemas.rawDocs).parquet(BenchRawPath).as[RawDoc]
-          Extract.runChunked(raw).write.mode(SaveMode.Overwrite).parquet(BenchOutPath)
       }
     }
     val n = spark.read.parquet(BenchOutPath).count()
@@ -85,10 +78,8 @@ object Bench {
     extractionJob(spark, "expr") // warmup (JIT/codegen)
     val (extractSec, extractedDocs) = extractionJob(spark, "expr")
     results += "extract" -> extractSec
-    val (chunkedSec, _) = extractionJob(spark, "chunked")
-    results += "extract_chunked" -> chunkedSec
-    // adaptive routing: mixed-corpus time should track the fused path, not
-    // the chunked path (only the heavy tail pays the chunk shuffles)
+    // adaptive routing: mixed-corpus time should track the fused path (only
+    // the heavy tail pays the spread shuffle)
     val (autoSec, _) = extractionJob(spark, "auto")
     results += "extract_auto" -> autoSec
     // headline queries (same entries the correctness gate runs)

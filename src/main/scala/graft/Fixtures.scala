@@ -11,10 +11,10 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * Spark queries read:
   *
   *  - `raw_docs`      — generated raw corpus (pure function of doc ids)
-  *  - `docs`          — DISTRIBUTED extraction output (chunked path: exercises
-  *                      the skew chunker + shuffle reassembly)
-  *  - `expected_docs` — SEQUENTIAL oracle output (`Extractor.extract` per row,
-  *                      no chunking) — the per-document reference surface
+  *  - `docs`          — DISTRIBUTED extraction output (skew-routed path:
+  *                      mega docs take the spread shuffle)
+  *  - `expected_docs` — SEQUENTIAL oracle output (`Extractor.extract` per
+  *                      row) — the per-document reference surface
   *  - `media`         — media side table
   *
   * Hash-equality of `docs` vs `expected_docs` through the driver's DuckDB
@@ -28,7 +28,7 @@ object Fixtures {
   val MediaPath = s"$Dir/media.parquet"
   val AnnotatedPath = s"$Dir/annotated_docs.parquet"
   /** bump when generator/extractor semantics change: forces a rebuild */
-  val Version = "v10"
+  val Version = "v11"
   val NumDocs = 1200L
 
   @volatile private var ready = false
@@ -52,12 +52,12 @@ object Fixtures {
           org.apache.spark.sql.functions.col("spans")))
         .sortWithinPartitions("n_spans")
         .write.mode(SaveMode.Overwrite).parquet(RawPath)
-      // distributed chunked extraction (the skew path under test), good rows
-      Extract.runChunked(raw, maxSpansPerChunk = 1024)
+      // distributed skew-routed extraction (the spread path under test), good rows
+      Extract.runAuto(raw.toDF(), spreadThreshold = 1024)
         .where(org.apache.spark.sql.functions.col("error").isNull)
         .select("doc_id", "spans")
         .write.mode(SaveMode.Overwrite).parquet(DocsPath)
-      // sequential oracle surface: per-row Extractor.extract, no chunking,
+      // sequential oracle surface: per-row Extractor.extract,
       // poison docs skipped exactly as the distributed path quarantines them
       raw.flatMap { rd =>
         try Some(Extractor.extract(rd)) catch { case _: Exception => None }

@@ -15,8 +15,9 @@ import org.apache.spark.sql.SparkSession
   *   --input  /data/raw_docs.parquet \
   *   --output /data/extracted \
   *   [--mode expr|auto]                 // default expr (fused expression,
-  *                                      // zero-shuffle); auto = 3-tier
-  *                                      // mega-doc skew routing
+  *                                      // zero-shuffle); auto = mega-doc
+  *                                      // skew routing (outlier docs
+  *                                      // spread round-robin over tasks)
   *   [--batches N]                      // lineage/commit granularity (default 64);
   *                                      // shrinking N over an existing output
   *                                      // requires --no-resume (checked)
@@ -24,9 +25,9 @@ import org.apache.spark.sql.SparkSession
   *                                      // lineage) and re-extract everything
   *   [--shuffle-partitions N]           // spark.sql.shuffle.partitions. In
   *                                      // extraction only --mode auto
-  *                                      // shuffles: its medium tier (into
-  *                                      // defaultParallelism partitions)
-  *                                      // and its huge tier (into N); the
+  *                                      // shuffles, and only its spread
+  *                                      // tier, into defaultParallelism
+  *                                      // partitions (not N); the
   *                                      // pipeline stages shuffle into N
   *   [--pipeline]                       // run the full composed pipeline
   *   [--benchmark /path/bench.parquet]  // pipeline: decontamination source

@@ -363,15 +363,13 @@ object SparkEntry {
         Extract.runExpr(Fixtures.raw(s), annotate = true)
           .select(col("doc_id"), col("spans")))),
     "x6_extract_auto" -> ((s, _) => {
-      import s.implicits._
       Fixtures.ensure(s)
-      // thresholds chosen so the fixture corpus populates ALL THREE tiers:
-      // regular docs fused, smaller megas spread, larger megas chunked.
+      // threshold chosen so the fixture corpus populates both tiers:
+      // regular docs stay in the scan, mega docs are spread.
       // flattenSpansOnce: a plain posexplode's inferred filters would push
-      // through the union and re-evaluate extract_spans in the fused tiers.
+      // through the union and re-evaluate extract_spans in both tiers.
       SpanQueries.flattenSpansOnce(
-        Extract.runAuto(s.read.parquet(Fixtures.RawPath),
-          spreadThreshold = 1024, hugeThreshold = 6000))
+        Extract.runAuto(s.read.parquet(Fixtures.RawPath), spreadThreshold = 1024))
     }),
     "q_depth" -> ((s, _) =>
       // P7 GetDepth: in-row via the fused span_nav expression (zero shuffle)

@@ -96,8 +96,8 @@ object Lineage {
   /** Run (or resume) the batched extraction job. Returns the lineage rows of
     * every batch that is committed when the call finishes, in batch-id
     * order. `mode` selects the extraction path: `expr` ([[Extract.runExpr]],
-    * the zero-shuffle default) or `auto` ([[Extract.runAuto]], 3-tier skew
-    * routing).
+    * the zero-shuffle default) or `auto` ([[Extract.runAuto]], fused-or-
+    * spread skew routing).
     *
     * If a batch fails, no batch still queued is started; the call waits for
     * the batches already running to commit or fail, then throws the first

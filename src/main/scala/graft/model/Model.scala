@@ -89,7 +89,7 @@ object Schemas {
     StructField("meta", MapType(StringType, StringType), nullable = true)))
 
   /** Raw corpus WITH the materialized span count: `n_spans` is written by
-    * the corpus writers so [[graft.core.Extract.runAuto]]'s three tier
+    * the corpus writers so [[graft.core.Extract.runAuto]]'s two tier
     * filters push down to parquet row-group statistics (a `size(spans)`
     * fallback evaluates correctly but cannot prune row groups). */
   val rawDocsWithN: StructType = rawDocs.add(

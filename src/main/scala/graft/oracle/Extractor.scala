@@ -124,9 +124,8 @@ object Extractor {
 
   /** Walk an (already offset-sorted) body span sequence under a prebuilt
     * context; emits output spans WITHOUT re-densified offsets. Exposed so the
-    * mega-document chunker can walk chunks independently (chunk boundaries
-    * sit at top-level element boundaries, so no parser state crosses them)
-    * and concatenate (SURVEY.md §4.3.1).
+    * fused `extract_spans` expression ([[graft.functions.ExtractSpansExpr]])
+    * can walk its own decoded body and build the output row directly.
     */
   private[graft] def walk(body: Seq[RawSpan], ctx: Ctx): Seq[Span] = {
     val out = ArrayBuffer.empty[Span]

@@ -1,15 +1,17 @@
 package graft
 
-import graft.core.{Chunker, Extract, Extracted}
+import graft.core.{Extract, Extracted}
 import graft.corpus.SyntheticCorpus
 import graft.model.{Doc, RawDoc}
 import graft.oracle.Extractor
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end distributed extraction vs the sequential oracle: span-sequence
   * equality (kind, text, media_ref, order) per document — the north-rule
-  * gate — plus chunker round-trips and quarantine behavior.
+  * gate — plus skew routing and quarantine behavior.
   */
 class SparkExtractSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
@@ -46,7 +48,7 @@ class SparkExtractSpec extends AnyFunSuite {
     // indices around the mega (997) and poison (1009) strides
     val raw = (990L to 1015L).map(i => SyntheticCorpus.rawDoc(SyntheticCorpus.docIdFor(i)))
     val expected = oracleOf(raw)
-    val got = good(Extract.runChunked(raw.toDS(), maxSpansPerChunk = 512))
+    val got = good(Extract.runChunked(raw.toDS(), spreadThreshold = 512))
     assert(got.length == expected.size)
     got.foreach { d =>
       assert(expected(d.doc_id).spans == d.spans, s"mismatch for ${d.doc_id}")
@@ -62,26 +64,6 @@ class SparkExtractSpec extends AnyFunSuite {
     assert(q.map(_.doc_id) == Seq("doc-poison-000001009"))
     assert(q.head.error.nonEmpty && q.head.spans == null)
     assert(ex.count(_.error == null) == 1)
-  }
-
-  test("chunker splits only at depth-0 boundaries and loses nothing") {
-    val mega = SyntheticCorpus.rawDoc("doc-mega-000000997")
-    val chunks = Chunker.split(mega, 512)
-    assert(chunks.length > 1)
-    assert(chunks.flatMap(_.spans).map(_.offset) == mega.spans.sortBy(_.offset).map(_.offset))
-    // no chunk starts inside a table: each chunk's open/close deltas balance
-    chunks.foreach { ch =>
-      var depth = 0
-      ch.spans.foreach { s =>
-        s.kind match {
-          case "tbl" | "sdt" => depth += 1
-          case "tbl_end" | "sdt_end" => depth -= 1
-          case _ =>
-        }
-        assert(depth >= 0, s"chunk ${ch.chunk_id} dips below depth 0")
-      }
-      assert(depth == 0, s"chunk ${ch.chunk_id} leaves depth $depth open")
-    }
   }
 
   test("fused extract_spans expression == oracle (incl. quarantine surface)") {
@@ -119,32 +101,15 @@ class SparkExtractSpec extends AnyFunSuite {
     }
   }
 
-  test("chunker invariance: any chunk size yields the unchunked output") {
-    val docs = Seq(SyntheticCorpus.rawDoc("doc-mega-000000997"),
-      SyntheticCorpus.rawDoc("doc-tables-000000005"),
-      SyntheticCorpus.rawDoc("doc-sdt-000000014"))
-    docs.foreach { d =>
-      val whole = Extractor.extract(d)
-      Seq(8, 64, 513, 4096).foreach { maxSpans =>
-        val chunks = Chunker.split(d, maxSpans)
-        val spans = chunks.flatMap { ch =>
-          val ctx = Extractor.buildCtx(ch.ctxSpans ++ ch.spans, ch.meta)
-          Extractor.walk(ch.spans.sortBy(_.offset), ctx)
-        }.zipWithIndex.map { case (s, i) => s.copy(offset = i) }
-        assert(spans == whole.spans, s"${d.doc_id} maxSpans=$maxSpans")
-      }
-    }
-  }
-
-  test("runAuto routes the heavy tail through chunking and matches the oracle") {
+  test("runAuto spreads the heavy tail and matches the oracle") {
     import spark.implicits._
     val raw = corpus(200) ++ Seq(SyntheticCorpus.rawDoc("doc-mega-000000997"),
       SyntheticCorpus.rawDoc("doc-poison-000001009"))
     val expected = oracleOf(raw)
-    // thresholds force all three tiers: most docs fused, the mega doc either
-    // spread or chunked depending on its size draw
-    val out = Extract.runAuto(raw.toDS().toDF(),
-      spreadThreshold = 512, hugeThreshold = 6000).collect()
+    // the threshold fills both tiers: most docs stay in the scan, the mega
+    // doc is spread
+    assert(raw.exists(_.spans.length > 512) && raw.exists(_.spans.length <= 512))
+    val out = Extract.runAuto(raw.toDS().toDF(), spreadThreshold = 512).collect()
     assert(out.length == raw.length)
     val good = out.filter(r => !r.isNullAt(1) && r.getSeq[org.apache.spark.sql.Row](1).nonEmpty)
     assert(good.length == expected.size)
@@ -158,22 +123,25 @@ class SparkExtractSpec extends AnyFunSuite {
   test("runExpr, runAuto and runChunked return identical rows, quarantined rows included") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val docs = corpus(60) ++ Seq(SyntheticCorpus.rawDoc("doc-mega-000000997"),
-      SyntheticCorpus.rawDoc("doc-poison-000001009"))
+    val mega = SyntheticCorpus.rawDoc("doc-mega-000000997")
+    // a spread-tier document whose spans array holds a null element
+    val megaNull = RawDoc("doc-mega-null-element", mega.spans :+ null, mega.meta)
+    val docs = corpus(60) ++ Seq(mega, megaNull, SyntheticCorpus.rawDoc("doc-poison-000001009"))
     val df = docs.toDS().toDF()
     val nullRow = df.limit(1).select(lit("null-doc").as("doc_id"),
       lit(null).cast(df.schema("spans").dataType).as("spans"),
       lit(null).cast(df.schema("meta").dataType).as("meta"))
     val raw = df.unionByName(nullRow)
-    // the mega doc takes runAuto's huge tier and is split into chunks by
-    // both; the poison and null-spans rows quarantine
-    assert(docs.find(_.doc_id == "doc-mega-000000997").exists(_.spans.length > 6000))
+    // both mega docs take the spread tier; the null-element, poison and
+    // null-spans rows quarantine
+    assert(mega.spans.length > 512)
     val expr = rows(Extract.runExpr(raw))
-    assert(expr.filter(_.error != null).map(_.doc_id) == Seq("doc-poison-000001009", "null-doc"))
+    assert(expr.filter(_.error != null).map(_.doc_id) ==
+      Seq("doc-mega-null-element", "doc-poison-000001009", "null-doc"))
     assert(expr.filter(_.error != null).forall(_.spans == null))
-    val auto = rows(Extract.runAuto(raw, spreadThreshold = 512, hugeThreshold = 6000))
+    val auto = rows(Extract.runAuto(raw, spreadThreshold = 512))
     assert(auto == expr)
-    val chunked = rows(Extract.runChunked(raw.as[RawDoc], maxSpansPerChunk = 512).toDF())
+    val chunked = rows(Extract.runChunked(raw.as[RawDoc], spreadThreshold = 512).toDF())
     assert(chunked == expr)
   }
 
@@ -190,22 +158,29 @@ class SparkExtractSpec extends AnyFunSuite {
     val plan = SparkEntry.queries("x6_extract_auto")(spark, "")
       .queryExecution.executedPlan.toString
     val evals = "extract_spans\\(".r.findAllIn(plan).length
-    assert(evals == 2, s"extract_spans appears $evals times (want 2: small + medium tier):\n${plan.take(3000)}")
+    assert(evals == 2, s"extract_spans appears $evals times (want 2: small + spread tier):\n${plan.take(3000)}")
   }
 
   test("x6 auto-routing tier filters push down to parquet row-group stats via n_spans") {
     Fixtures.ensure(spark)
     val raw = spark.read.schema(graft.model.Schemas.rawDocsWithN).parquet(Fixtures.RawPath)
-    val plan = graft.core.Extract.runAuto(raw, spreadThreshold = 1024, hugeThreshold = 6000)
-      .queryExecution.executedPlan.toString
-    // all three tier scans must carry an n_spans predicate in PushedFilters —
+    val plan = graft.core.Extract.runAuto(raw, spreadThreshold = 1024).queryExecution.executedPlan
+    val scans = (plan match {
+      case a: AdaptiveSparkPlanExec => a.inputPlan
+      case p => p
+    }).collect { case s: FileSourceScanExec => s }
+    // one scan per tier, each with an n_spans predicate in PushedFilters —
     // a size(spans) fallback filter would evaluate post-scan and re-read the
     // whole table per tier
-    val pushed = "PushedFilters: \\[[^\\]]*n_spans[^\\]]*\\]".r.findAllIn(plan).length
-    assert(pushed >= 3, s"want n_spans in PushedFilters of all 3 tier scans, got $pushed:\n${plan.take(4000)}")
+    assert(scans.length == 2, s"want 2 tier scans, got ${scans.length}:\n$plan")
+    scans.foreach { s =>
+      val pushed = s.metadata.getOrElse("PushedFilters", "")
+      assert(pushed.contains("n_spans"), s"tier scan without a pushed n_spans filter: $pushed")
+    }
   }
 
-  test("chunker fuzz: random nested structures chunk-invariant at random sizes") {
+  test("runAuto fuzz: random nested structures match the oracle doc by doc") {
+    import spark.implicits._
     import graft.model.{Kinds, RawSpan}
     val r = new java.util.Random(777)
     def randBody(depthBudget: Int, spans: scala.collection.mutable.ArrayBuffer[RawSpan]): Unit = {
@@ -234,19 +209,18 @@ class SparkExtractSpec extends AnyFunSuite {
         }
       }
     }
-    (0 until 60).foreach { docIdx =>
+    val docs = (0 until 60).map { docIdx =>
       val buf = scala.collection.mutable.ArrayBuffer.empty[RawSpan]
       randBody(3, buf)
-      val doc = graft.model.RawDoc(s"fuzz-$docIdx", buf.toIndexedSeq, Map("title" -> "T"))
-      val whole = Extractor.extract(doc)
-      Seq(1 + r.nextInt(4), 8 + r.nextInt(20)).foreach { maxSpans =>
-        val chunks = Chunker.split(doc, maxSpans)
-        val spans = chunks.flatMap { ch =>
-          val ctx = Extractor.buildCtx(ch.ctxSpans ++ ch.spans, ch.meta)
-          Extractor.walk(ch.spans.sortBy(_.offset), ctx)
-        }.zipWithIndex.map { case (s, i) => s.copy(offset = i) }
-        assert(spans == whole.spans, s"fuzz-$docIdx maxSpans=$maxSpans")
-      }
+      RawDoc(f"fuzz-$docIdx%02d", buf.toIndexedSeq, Map("title" -> "T"))
+    }
+    // the threshold puts the random docs in both tiers
+    assert(docs.exists(_.spans.length > 8) && docs.exists(_.spans.length <= 8))
+    val got = rows(Extract.runAuto(docs.toDS().toDF(), spreadThreshold = 8))
+    assert(got.map(_.doc_id) == docs.map(_.doc_id))
+    got.zip(docs).foreach { case (e, d) =>
+      assert(e.error == null, s"${d.doc_id}: ${e.error}")
+      assert(e.spans == Extractor.extract(d).spans, d.doc_id)
     }
   }
 
