@@ -76,8 +76,9 @@ import org.apache.spark.sql.SparkSession
   * one 32-thread JVM on the same cores (the extraction's allocation churn
   * saturates a single shared young generation long before it saturates the
   * machine). Resume semantics: each batch commits output + a lineage row
-  * atomically-last; on restart, batches whose input fingerprint matches are
-  * skipped and partially-written batches are overwritten, so a killed job
+  * atomically-last; on restart, a batch is skipped only if its lineage row
+  * carries the current input fingerprint and its output is still there;
+  * every other batch is re-derived over whatever was left, so a killed job
   * resumes to byte-identical output (LineageSpec).
   */
 object Main {

@@ -3,10 +3,12 @@ package graft.core
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 /** The storage seam (SURVEY.md §7): every table the engine PERSISTS —
-  * extraction output, quarantine, per-batch lineage rows, pipeline stage
-  * tables — goes through this one format-parameterized indirection, so the
-  * storage format is a configuration fact, not something the operators
-  * know.
+  * extraction output, quarantine, pipeline stage tables, and the committed
+  * lineage rows of batches and stages — goes through this one
+  * format-parameterized indirection, so the storage format is a
+  * configuration fact, not something the operators know. On top of it,
+  * [[Commit]] skips a batch or stage on restart only if its committed row
+  * carries the current input fingerprint and every output it wrote exists.
   *
   * Locally the format is `parquet`. On a cluster with the Iceberg runtime
   * on the classpath, `DocStore("iceberg")` routes the SAME calls through
@@ -26,6 +28,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 final case class DocStore(format: String = "parquet") {
   def write(df: DataFrame, path: String, mode: SaveMode = SaveMode.Overwrite): Unit =
     df.write.format(format).mode(mode).save(path)
-  def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.format(format).load(path)
+  def read(spark: SparkSession, path: String,
+           options: Map[String, String] = Map.empty): DataFrame =
+    spark.read.format(format).options(options).load(path)
 }

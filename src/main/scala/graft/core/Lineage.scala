@@ -20,7 +20,7 @@ final case class LineageRow(
     span_count: Long,
     error_count: Long,
     wall_ms: Long,
-    committed_at: String)
+    committed_at: String) extends CommitRow
 
 /** Checkpoint-resumable batched extraction driver.
   *
@@ -28,9 +28,12 @@ final case class LineageRow(
   * batches; each batch is extracted and written under
   * `out/docs/batch=<id>/` + `out/quarantine/batch=<id>/`, then a lineage row
   * is committed under `out/_lineage/batch=<id>/`. The lineage write is the
-  * commit point: on restart, batches with a lineage row (matching
-  * fingerprint) are skipped, partially-written batches are overwritten.
-  * A killed job therefore resumes to byte-identical output.
+  * commit point ([[Commit]]): on restart a batch is skipped only if its
+  * lineage row carries the current input fingerprint (the batch's files and
+  * the mode) and both its docs and quarantine outputs still exist; every
+  * other batch — uncommitted, torn row, pruned output — is re-derived,
+  * overwriting whatever a killed attempt left. A killed job therefore
+  * resumes to byte-identical output.
   *
   * Each batch costs three Spark jobs: the docs write (which also fills the
   * batch's cached extraction), the quarantine write (read from that cache)
@@ -53,38 +56,17 @@ object Lineage {
       .map { case (b, fl) => (b, fl.map(_._1)) }
   }
 
-  /** Batch identity for the resume check. Hashes, per input file, the path
-    * PLUS length and modification time, PLUS the extraction mode: a file
-    * rewritten in place (same name, new bytes) or a re-run under a different
-    * mode must NOT be skipped as committed — path-only hashing would
-    * silently keep stale output in both cases. */
-  def fingerprint(spark: SparkSession, files: Seq[String], mode: String): String = {
-    val fs = FileSystem.get(new java.net.URI(files.head),
-      spark.sparkContext.hadoopConfiguration)
-    val sig = files.sorted.map { p =>
-      val st = fs.getFileStatus(new Path(p))
-      s"$p|${st.getLen}|${st.getModificationTime}"
-    }.mkString("\n") + s"\nmode=$mode"
-    java.lang.Long.toHexString(graft.corpus.SyntheticCorpus.fnv1a64(sig))
-  }
-
+  /** The committed lineage rows under `outPath`, by batch id. A torn row
+    * is left out, so only its batch re-derives ([[Commit.committed]]). */
   def committedBatches(spark: SparkSession, outPath: String,
                        store: DocStore = DocStore()): Map[Int, LineageRow] = {
     import spark.implicits._
-    val fs = FileSystem.get(new java.net.URI(outPath), spark.sparkContext.hadoopConfiguration)
-    val dir = new Path(s"$outPath/_lineage")
-    if (!fs.exists(dir)) Map.empty
-    else try {
-      store.read(spark, s"$outPath/_lineage").as[LineageRow]
-        .collect().map(r => r.batch_id -> r).toMap
-    } catch {
-      // _lineage exists but holds no readable rows (job killed inside the
-      // very first lineage write, leaving only _temporary): nothing is
-      // committed — resume from scratch, overwriting partial output, rather
-      // than crashing the restart
-      case _: org.apache.spark.sql.AnalysisException => Map.empty
-    }
+    Commit.committed[LineageRow](spark, s"$outPath/_lineage", store)
+      .map(r => r.batch_id -> r).toMap
   }
+
+  private def outputs(outPath: String, batchId: Int): Seq[String] =
+    Seq(s"$outPath/docs/batch=$batchId", s"$outPath/quarantine/batch=$batchId")
 
   /** Batches extracted at once. Two already overlap most of one batch's
     * driver-side planning and commit with the other's executor work (median
@@ -128,8 +110,8 @@ object Lineage {
     val readSchema = if (hasN) graft.model.Schemas.rawDocsWithN
                      else graft.model.Schemas.rawDocs
     val todo = batches.flatMap { case (batchId, files) =>
-      val fp = fingerprint(spark, files, mode)
-      if (done.get(batchId).exists(_.input_fingerprint == fp)) None // resume: skip
+      val fp = Commit.fingerprint(spark, files, s"mode=$mode")
+      if (done.get(batchId).exists(Commit.upToDate(spark, _, fp, outputs(outPath, batchId)))) None
       else Some((batchId, files, fp))
     }
     val fresh = inFlight(todo.map { case (batchId, files, fp) =>
@@ -154,20 +136,16 @@ object Lineage {
       val goodStats, badStats = new Observation()
       val good = extracted.where(col("error").isNull).select("doc_id", "spans")
       val bad = extracted.where(col("error").isNotNull).select("doc_id", "error")
+      val Seq(docsOut, quarantineOut) = outputs(outPath, batchId)
       store.write(good.observe(goodStats, count(lit(1)).as("docs"),
-        coalesce(sum(size(col("spans"))), lit(0L)).as("spans")),
-        s"$outPath/docs/batch=$batchId")
-      store.write(bad.observe(badStats, count(lit(1)).as("errors")),
-        s"$outPath/quarantine/batch=$batchId")
-      val row = LineageRow(batchId, fp,
+        coalesce(sum(size(col("spans"))), lit(0L)).as("spans")), docsOut)
+      store.write(bad.observe(badStats, count(lit(1)).as("errors")), quarantineOut)
+      Commit.write(spark, store, LineageRow(batchId, fp,
         goodStats.get("docs").asInstanceOf[Long],
         goodStats.get("spans").asInstanceOf[Long],
         badStats.get("errors").asInstanceOf[Long],
         (System.nanoTime() - t0) / 1000000,
-        java.time.Instant.now().toString)
-      // commit point: lineage row written last
-      store.write(Seq(row).toDS().toDF(), s"$outPath/_lineage/batch=$batchId")
-      row
+        java.time.Instant.now().toString), s"$outPath/_lineage/batch=$batchId")
     } finally extracted.unpersist()
   }
 

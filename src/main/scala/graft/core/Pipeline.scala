@@ -2,16 +2,15 @@ package graft.core
 
 import graft.functions.{Dedup, Domains, Packing}
 import graft.queries.SpanQueries
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Per-stage lineage row for the composed training-data pipeline — the same
-  * commit-marker-last discipline as the per-batch extraction lineage
-  * ([[Lineage]]): a stage's row is written only after its output parquet is
-  * fully committed, and carries the fingerprint of the stage's INPUT files +
-  * parameters, so a restarted pipeline skips exactly the stages whose inputs
-  * (and upstream decisions) are unchanged.
+  * commit protocol as the per-batch extraction lineage ([[Commit]]): a
+  * stage's row is written only after its output is fully committed, and
+  * carries the fingerprint of the stage's INPUT files + parameters, so a
+  * restarted pipeline skips exactly the stages whose inputs (and upstream
+  * decisions) are unchanged and whose output is still there.
   */
 final case class StageLineage(
     stage: String,
@@ -19,7 +18,7 @@ final case class StageLineage(
     rows_in: Long,
     rows_out: Long,
     wall_ms: Long,
-    committed_at: String)
+    committed_at: String) extends CommitRow
 
 /** The end-to-end training-data pipeline a user of this library actually
   * runs (`spark-submit --class graft.Main ... --pipeline`):
@@ -84,10 +83,12 @@ final case class StageLineage(
   *
   * Every stage materializes its output under `out/<stage>/` and commits a
   * [[StageLineage]] row under `out/_pipeline/stage=<name>/` LAST. Resume is
-  * per stage: a stage whose input-file fingerprint (path+len+mtime of every
-  * upstream parquet part + the stage's parameters) matches its committed row
-  * is skipped; any upstream rerun changes downstream fingerprints, so the
-  * chain re-derives exactly what is stale. The extraction stage additionally
+  * per stage ([[Commit]]): a stage is skipped only if its committed row
+  * carries the current input fingerprint (path+len+mtime of every upstream
+  * parquet part + the stage's parameters) and its output `out/<name>` still
+  * exists; a missing, torn or stale row or a pruned output re-derives it.
+  * Any upstream rerun changes downstream fingerprints, so the chain
+  * re-derives exactly what is stale. The extraction stage additionally
   * resumes per BATCH via [[Lineage.runBatched]] — a kill inside extraction
   * loses at most one batch of work.
   *
@@ -150,77 +151,27 @@ object Pipeline {
     def store: DocStore = DocStore(format)
   }
 
-  /** Fingerprint of a stage's input: every parquet part file (path, length,
-    * mtime) under the input dirs, recursively, plus the parameter string —
-    * the [[Lineage.fingerprint]] identity extended to directory trees. */
-  def stageFingerprint(spark: SparkSession, inputDirs: Seq[String], params: String): String = {
-    val sigs = inputDirs.flatMap { dir =>
-      val fs = FileSystem.get(new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
-      val p = new Path(dir)
-      if (!fs.exists(p)) Seq(s"$dir|absent")
-      else {
-        val it = fs.listFiles(p, true)
-        val buf = scala.collection.mutable.ArrayBuffer[String]()
-        while (it.hasNext) {
-          val st = it.next()
-          if (st.getPath.getName.endsWith(".parquet"))
-            buf += s"${st.getPath}|${st.getLen}|${st.getModificationTime}"
-        }
-        buf.sorted
-      }
-    }
-    java.lang.Long.toHexString(graft.corpus.SyntheticCorpus.fnv1a64(
-      sigs.mkString("\n") + s"\nparams=$params"))
-  }
-
-  private def committedStage(spark: SparkSession, outPath: String, stage: String,
-                             store: DocStore): Option[StageLineage] = {
-    import spark.implicits._
-    val fs = FileSystem.get(new java.net.URI(outPath), spark.sparkContext.hadoopConfiguration)
-    val dir = new Path(s"$outPath/_pipeline/stage=$stage")
-    if (!fs.exists(dir)) None
-    // ANY unreadable lineage row — empty dir (AnalysisException), torn
-    // parquet footer (SparkException/IOException at collect) — means the
-    // commit never completed: re-derive the stage. The row is one tiny
-    // record and re-deriving is always safe, so NonFatal, not a narrow catch.
-    else try store.read(spark, dir.toString).as[StageLineage].collect().headOption
-    catch { case scala.util.control.NonFatal(_) => None } // torn write → rerun
-  }
-
-  /** Run one resumable stage: skip if committed with a matching input
-    * fingerprint, else evaluate `body` over the input, write `out/<name>`,
-    * and commit the lineage row last. `rowsIn` is the upstream stage's
-    * `rows_out` (the row count of `inputDirs.head`), so no Spark job counts
-    * the input; `rows_out` is observed on the stage write itself. */
-  private def runStage(spark: SparkSession, cfg: Config, name: String,
-                       inputDirs: Seq[String], params: String, rowsIn: Long)
+  /** Run one resumable stage: skip it if [[Commit.upToDate]] holds for
+    * its committed row, else evaluate `body` over the input, write
+    * `out/<name>`, and commit the lineage row last. `rowsIn` is the upstream
+    * stage's `rows_out` (the row count of `inputs.head`), so no Spark job
+    * counts the input; `rows_out` is observed on the stage write itself. */
+  private def runStage(spark: SparkSession, cfg: Config, committed: Option[StageLineage],
+                       name: String, inputs: Seq[String], params: String, rowsIn: Long)
                       (body: DataFrame => DataFrame): StageLineage = {
     import spark.implicits._
-    val fp = stageFingerprint(spark, inputDirs, params)
-    // a committed lineage row only licenses a skip if the stage's OUTPUT is
-    // also still on disk — a pruned/partially-restored output tree with a
-    // surviving lineage row must re-derive, not crash the downstream read
-    val outExists = {
-      val fs = FileSystem.get(new java.net.URI(cfg.outPath),
-        spark.sparkContext.hadoopConfiguration)
-      fs.exists(new Path(s"${cfg.outPath}/$name"))
-    }
-    val store = cfg.store
-    committedStage(spark, cfg.outPath, name, store) match {
-      case Some(row) if row.input_fingerprint == fp && outExists => row // resume: skip
-      case _ =>
-        val t0 = System.nanoTime()
-        val in = store.read(spark, inputDirs.head)
-        val written = new Observation()
-        store.write(body(in).observe(written, count(lit(1)).as("rows")),
-          s"${cfg.outPath}/$name")
-        val row = StageLineage(name, fp, rowsIn,
-          written.get("rows").asInstanceOf[Long],
-          (System.nanoTime() - t0) / 1000000, java.time.Instant.now().toString)
-        // commit point: lineage row written last
-        store.write(Seq(row).toDS().coalesce(1).toDF(),
-          s"${cfg.outPath}/_pipeline/stage=$name")
-        row
+    val fp = Commit.fingerprint(spark, inputs, params)
+    val out = s"${cfg.outPath}/$name"
+    committed.filter(Commit.upToDate(spark, _, fp, Seq(out))).getOrElse {
+      val t0 = System.nanoTime()
+      val store = cfg.store
+      val written = new Observation()
+      store.write(body(store.read(spark, inputs.head))
+        .observe(written, count(lit(1)).as("rows")), out)
+      Commit.write(spark, store, StageLineage(name, fp, rowsIn,
+        written.get("rows").asInstanceOf[Long],
+        (System.nanoTime() - t0) / 1000000, java.time.Instant.now().toString),
+        s"${cfg.outPath}/_pipeline/stage=$name")
     }
   }
 
@@ -230,15 +181,24 @@ object Pipeline {
     * kill with a torn downstream. */
   def run(spark: SparkSession, cfg: Config,
           failAfter: Option[String] = None): Seq[StageLineage] = {
+    import spark.implicits._
     val rows = scala.collection.mutable.ArrayBuffer[StageLineage]()
+    val committed = Commit.committed[StageLineage](spark, s"${cfg.outPath}/_pipeline", cfg.store)
+      .map(r => r.stage -> r).toMap
     def checkpoint(name: String): Unit =
       if (failAfter.contains(name))
         throw new RuntimeException(s"pipeline failpoint after stage $name")
-    // every stage reads the table its predecessor wrote, so its rows_in is
-    // the last row's rows_out (for s1_exact: extract's good-doc count)
-    def stage(name: String, inputDirs: Seq[String], params: String)
-             (body: DataFrame => DataFrame): Unit =
-      rows += runStage(spark, cfg, name, inputDirs, params, rows.last.rows_out)(body)
+    var current = s"${cfg.outPath}/extract/docs"
+    // every stage reads the table its predecessor wrote (plus `extraInputs`),
+    // so its rows_in is the last row's rows_out (for s1_exact: extract's
+    // good-doc count)
+    def stage(name: String, params: String, extraInputs: Seq[String] = Nil)
+             (body: DataFrame => DataFrame): Unit = {
+      rows += runStage(spark, cfg, committed.get(name), name, current +: extraInputs,
+        params, rows.last.rows_out)(body)
+      current = s"${cfg.outPath}/$name"
+      checkpoint(name)
+    }
 
     // ---- extract (per-batch resume inside runBatched) ----
     // The summary row reports metrics only; its fingerprint field is a
@@ -256,33 +216,23 @@ object Pipeline {
       (System.nanoTime() - t0) / 1000000, java.time.Instant.now().toString)
     checkpoint("extract")
 
-    var current = s"${cfg.outPath}/extract/docs"
-
-    stage("s1_exact", Seq(current), "") { in =>
+    stage("s1_exact", "") { in =>
       Dedup.dropExactDuplicates(
         SpanQueries.allText(in.select(col("doc_id"), col("spans"))))
     }
-    current = s"${cfg.outPath}/s1_exact"
-    checkpoint("s1_exact")
 
     if (cfg.dropLines) {
       // line-level boilerplate BEFORE near-dedup: repeated nav/footer lines
       // otherwise dominate the shingle sets of unrelated pages and glue
       // them into spurious near-dup clusters (the CCNet/RefinedWeb order)
-      stage("s1b_lines", Seq(current),
-        s"maxDocFreq=${cfg.lineMaxDocFreq}") { in =>
+      stage("s1b_lines", s"maxDocFreq=${cfg.lineMaxDocFreq}") { in =>
         Dedup.dropRepeatedLines(in, cfg.lineMaxDocFreq)
       }
-      current = s"${cfg.outPath}/s1b_lines"
-      checkpoint("s1b_lines")
     }
 
-    stage("s2_neardup", Seq(current),
-      s"threshold=${cfg.threshold},ngram=${cfg.ngram}") { in =>
+    stage("s2_neardup", s"threshold=${cfg.threshold},ngram=${cfg.ngram}") { in =>
       Dedup.dropNearDuplicates(in, cfg.threshold, cfg.ngram)
     }
-    current = s"${cfg.outPath}/s2_neardup"
-    checkpoint("s2_neardup")
 
     if (cfg.substrDedup) {
       // AFTER doc-level near-dedup (the RefinedWeb order): near-dedup drops
@@ -291,32 +241,25 @@ object Pipeline {
       // near-dup docs alive with holes. On the survivors, this removes the
       // sub-document duplication (licence blocks, quoted chunks) no
       // doc-granularity pass can see.
-      stage("s2b_substr", Seq(current),
-        s"window=${cfg.substrWindow}") { in =>
+      stage("s2b_substr", s"window=${cfg.substrWindow}") { in =>
         Dedup.dropDuplicatedSubstrings(in, cfg.substrWindow)
       }
-      current = s"${cfg.outPath}/s2b_substr"
-      checkpoint("s2b_substr")
     }
 
     if (cfg.paraDedup) {
       // keep-first content dedup at paragraph granularity — after
       // near-dedup for the same reason as s2b_substr (stripping duplicated
       // paragraphs first would hide the whole-doc near-dup signal)
-      stage("s2p_paras", Seq(current), "") { in =>
+      stage("s2p_paras", "") { in =>
         Dedup.dropDuplicateParagraphs(in)
       }
-      current = s"${cfg.outPath}/s2p_paras"
-      checkpoint("s2p_paras")
     }
 
     cfg.benchmarkPath.foreach { bench =>
-      stage("s3_decontam", Seq(current, bench),
-        s"ngram=${cfg.contaminationNgram}") { in =>
+      stage("s3_decontam", s"ngram=${cfg.contaminationNgram}",
+        extraInputs = Seq(bench)) { in =>
         Dedup.dropContaminated(in, spark.read.parquet(bench), cfg.contaminationNgram)
       }
-      current = s"${cfg.outPath}/s3_decontam"
-      checkpoint("s3_decontam")
     }
 
     if (cfg.gopher) {
@@ -324,22 +267,16 @@ object Pipeline {
       // zero shuffle (the report-form self-join would scan twice and
       // exchange both sides for nothing; s4's join below genuinely needs a
       // join because ranking is global)
-      stage("s3g_gopher", Seq(current),
-        s"minStopHits=${cfg.gopherMinStopHits}") { in =>
+      stage("s3g_gopher", s"minStopHits=${cfg.gopherMinStopHits}") { in =>
         in.where(graft.functions.TextAnalysis
           .gopherKeep(minStopHits = cfg.gopherMinStopHits))
       }
-      current = s"${cfg.outPath}/s3g_gopher"
-      checkpoint("s3g_gopher")
     }
 
-    stage("s4_quality", Seq(current),
-      s"keepFrac=${cfg.keepFrac}") { in =>
+    stage("s4_quality", s"keepFrac=${cfg.keepFrac}") { in =>
       in.join(Packing.qualityTopFraction(in, cfg.keepFrac).select(col("doc_id")),
         Seq("doc_id"), "left_semi")
     }
-    current = s"${cfg.outPath}/s4_quality"
-    checkpoint("s4_quality")
 
     cfg.domainCap.foreach { cap =>
       // mega-domain balancing AFTER quality: cap what actually enters the
@@ -348,14 +285,12 @@ object Pipeline {
       // prefix (a crawl pipeline reads its crawl-metadata host column the
       // same way); under-cap domains never shuffle (broadcast anti-join),
       // over-cap domains rank across range partitions.
-      stage("s4d_domain", Seq(current), s"cap=$cap") { in =>
+      stage("s4d_domain", s"cap=$cap") { in =>
         Domains.domainFrequencyCap(
           in.withColumn("graft_domain",
             regexp_extract(col("doc_id"), "^doc-([a-z]+)-", 1)),
           "graft_domain", cap).drop("graft_domain")
       }
-      current = s"${cfg.outPath}/s4d_domain"
-      checkpoint("s4d_domain")
     }
 
     if (cfg.redact) {
@@ -363,11 +298,9 @@ object Pipeline {
       // would perturb punctuation/stopword signals), and scrubbing docs the
       // quality gate is about to drop would be wasted compute. Pure
       // per-row codegen regexp chain — one scan, zero shuffle.
-      stage("s4r_redact", Seq(current), "") { in =>
+      stage("s4r_redact", "") { in =>
         in.withColumn("text", graft.functions.TextAnalysis.redactPii(col("text")))
       }
-      current = s"${cfg.outPath}/s4r_redact"
-      checkpoint("s4r_redact")
     }
 
     if (cfg.sampling) {
@@ -377,14 +310,12 @@ object Pipeline {
       val params = "fractions=" + cfg.sampleFractions.toSeq.sorted
         .map { case (k, v) => s"$k=$v" }.mkString(";") +
         s",default=${cfg.sampleDefault}"
-      stage("s4s_sample", Seq(current), params) { in =>
+      stage("s4s_sample", params) { in =>
         graft.functions.TextAnalysis.sampleStratified(
           in.withColumn("lang", graft.functions.TextAnalysis.langGuess(col("text"))),
           "lang", cfg.sampleFractions, defaultFraction = cfg.sampleDefault)
           .drop("lang")
       }
-      current = s"${cfg.outPath}/s4s_sample"
-      checkpoint("s4s_sample")
     }
 
     cfg.mixBudget.filter(_ => cfg.mixTargets.nonEmpty).foreach { budget =>
@@ -395,14 +326,12 @@ object Pipeline {
       // as s4d_domain (a crawl pipeline reads its host column the same way).
       val params = "targets=" + cfg.mixTargets.toSeq.sorted
         .map { case (k, v) => s"$k=$v" }.mkString(";") + s",budget=$budget"
-      stage("s4m_mix", Seq(current), params) { in =>
+      stage("s4m_mix", params) { in =>
         Domains.tokenBudgetMix(
           in.withColumn("graft_domain",
             regexp_extract(col("doc_id"), "^doc-([a-z]+)-", 1)),
           "graft_domain", cfg.mixTargets, budget).drop("graft_domain")
       }
-      current = s"${cfg.outPath}/s4m_mix"
-      checkpoint("s4m_mix")
     }
 
     cfg.chunkSize.foreach { size =>
@@ -411,18 +340,14 @@ object Pipeline {
       // Chunk ids extend the doc id ("<doc_id>#<chunk_idx>") so provenance
       // prefixes keep parsing and packing keys stay unique per row.
       val stride = cfg.chunkStride.getOrElse(size)
-      stage("s4c_chunk", Seq(current),
-        s"size=$size,stride=$stride") { in =>
+      stage("s4c_chunk", s"size=$size,stride=$stride") { in =>
         Packing.chunkTokens(in, size, stride)
           .select(concat(col("doc_id"), lit("#"), col("chunk_idx")).as("doc_id"),
             col("text"))
       }
-      current = s"${cfg.outPath}/s4c_chunk"
-      checkpoint("s4c_chunk")
     }
 
-    stage("s5_pack", Seq(current),
-      s"seqLen=${cfg.seqLen}") { in =>
+    stage("s5_pack", s"seqLen=${cfg.seqLen}") { in =>
       Packing.packSequences(in, cfg.seqLen)
     }
     rows.toSeq

@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.{Lineage, LineageRow}
+import graft.core.{Commit, Lineage, LineageRow}
 import graft.corpus.SyntheticCorpus
 import org.apache.spark.ListenerBusBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
@@ -49,6 +49,16 @@ class LineageSpec extends AnyFunSuite {
 
     val out2 = spark.read.parquet(s"$outPath/docs").orderBy("doc_id").collect()
     assert(out1.toSeq == out2.toSeq)
+
+    // a pruned batch output whose lineage row survives re-derives: skipping
+    // it would leave the lineage counting docs the table no longer holds
+    rmrf(s"$outPath/docs/batch=1")
+    val rows3 = Lineage.runBatched(spark, rawPath, outPath, numBatches = 3)
+    val out3 = spark.read.parquet(s"$outPath/docs").orderBy("doc_id").collect()
+    assert(out3.length.toLong == rows3.map(_.doc_count).sum)
+    assert(out1.toSeq == out3.toSeq)
+    assert(rows3(1).committed_at != rows2(1).committed_at)
+    Seq(0, 2).foreach(b => assert(rows3(b).committed_at == rows2(b).committed_at, s"batch $b"))
   }
 
   test("lineage rows carry real metrics (docs + spans + errors)") {
@@ -70,21 +80,36 @@ class LineageSpec extends AnyFunSuite {
 
   test("fingerprint is sensitive to mode and in-place file rewrites; empty _lineage does not kill resume") {
     val files = Lineage.inputBatches(spark, "/tmp/graft_lineage_raw", 1).head._2
-    val expr = Lineage.fingerprint(spark, files, "expr")
+    val expr = Commit.fingerprint(spark, files, "mode=expr")
     // a re-run under another extraction mode must NOT skip committed batches
-    assert(expr != Lineage.fingerprint(spark, files, "auto"))
+    assert(expr != Commit.fingerprint(spark, files, "mode=auto"))
     // a file rewritten in place (same path, new bytes) must change identity
     val victim = Paths.get(new java.net.URI(files.head))
     val original = Files.readAllBytes(victim)
     try {
       Files.write(victim, original ++ original)
-      assert(Lineage.fingerprint(spark, files, "expr") != expr)
+      assert(Commit.fingerprint(spark, files, "mode=expr") != expr)
     } finally Files.write(victim, original)
     // _lineage dir that exists but holds no readable parquet = nothing committed
     val ghost = "/tmp/graft_lineage_ghost"
     rmrf(ghost)
     Files.createDirectories(Paths.get(s"$ghost/_lineage/batch=0/_temporary"))
     assert(Lineage.committedBatches(spark, ghost).isEmpty)
+    // a torn lineage row (truncated part file, no checksum) is not committed:
+    // only its own batch re-derives
+    val out = "/tmp/graft_lineage_out"
+    val before = Lineage.runBatched(spark, "/tmp/graft_lineage_raw", out, numBatches = 3)
+    val rowDir = Paths.get(s"$out/_lineage/batch=0")
+    Files.list(rowDir).iterator().asScala.toSeq.foreach { f =>
+      val name = f.getFileName.toString
+      if (name.endsWith(".parquet")) Files.write(f, Files.readAllBytes(f).take(20))
+      else if (name.endsWith(".parquet.crc")) Files.delete(f)
+    }
+    assert(Lineage.committedBatches(spark, out).keySet == Set(1, 2))
+    val after = Lineage.runBatched(spark, "/tmp/graft_lineage_raw", out, numBatches = 3)
+    Seq(1, 2).foreach(b => assert(after(b).committed_at == before(b).committed_at, s"batch $b"))
+    assert(after(0).committed_at != before(0).committed_at)
+    assert(spark.read.parquet(s"$out/docs").count() == after.map(_.doc_count).sum)
   }
 
   /** Records every job start (id, submission time, local properties) and

@@ -149,6 +149,22 @@ class PipelineSpec extends AnyFunSuite {
     assert(Files.exists(Paths.get(s"$out/s2_neardup"))) // re-derived, not skipped
     val packedAfter = spark.read.parquet(s"$out/s5_pack").orderBy("doc_id").collect()
     assert(packedBefore.toSeq == packedAfter.toSeq)
+    // a torn lineage row (truncated part file, no checksum) re-derives its
+    // stage; the stages upstream of it stay committed
+    val rowDir = Paths.get(s"$out/_pipeline/stage=s4_quality")
+    Files.list(rowDir).iterator().asScala.toSeq.foreach { f =>
+      val name = f.getFileName.toString
+      if (name.endsWith(".parquet")) Files.write(f, Files.readAllBytes(f).take(20))
+      else if (name.endsWith(".parquet.crc")) Files.delete(f)
+    }
+    val healed = Pipeline.run(spark, cfg(out))
+    val at = stages.map(s => s.stage -> s.committed_at).toMap
+    Seq("s1_exact", "s2_neardup", "s3_decontam").foreach { s =>
+      assert(healed.find(_.stage == s).get.committed_at == at(s), s)
+    }
+    assert(healed.find(_.stage == "s4_quality").get.committed_at != at("s4_quality"))
+    val packedHealed = spark.read.parquet(s"$out/s5_pack").orderBy("doc_id").collect()
+    assert(packedBefore.toSeq == packedHealed.toSeq)
   }
 
   test("full optional chain (drop-lines, substr-dedup, redact, stratified sample) runs, gates correctly, and resumes through a kill") {
