@@ -6,12 +6,13 @@ import org.apache.spark.sql.{SaveMode, SparkSession}
 /** Driver-run benchmark: headline queries + the flagship extraction job.
   * Prints ONE JSON line. `SPARK_GRAFT_SF_DIR` picks the TPC-H-ish inputs;
   * the extraction benchmark runs on the deterministic synthetic bench corpus
-  * (generated once under /root/repo/data, generation excluded from timing).
+  * (generated once under `data/` of the working directory, generation
+  * excluded from timing).
   */
 object Bench {
 
-  val BenchRawPath = "/root/repo/data/bench_raw.parquet"
-  val BenchOutPath = "/root/repo/data/bench_out.parquet"
+  val BenchRawPath = new java.io.File("data/bench_raw.parquet").getAbsolutePath
+  val BenchOutPath = new java.io.File("data/bench_out.parquet").getAbsolutePath
 
   def ensureBenchCorpus(spark: SparkSession, nDocs: Long): Unit = {
     val marker = new java.io.File(s"$BenchRawPath/_GRAFT_N${nDocs}_v2")

@@ -7,8 +7,9 @@ import graft.oracle.Extractor
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 /** Materializes the deterministic synthetic corpus (FIXTURES.md) to stable
-  * absolute paths so the driver's DuckDB oracle can read the SAME bytes the
-  * Spark queries read:
+  * absolute paths so the DuckDB oracle can read the SAME bytes the Spark
+  * queries read. The paths sit under `data/fixtures` of the working
+  * directory, so each checkout builds and reads its own:
   *
   *  - `raw_docs`      — generated raw corpus (pure function of doc ids)
   *  - `docs`          — DISTRIBUTED extraction output (skew-routed path:
@@ -21,7 +22,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * compare is the span-sequence-equality gate of BASELINE.json.
   */
 object Fixtures {
-  val Dir = "/root/repo/data/fixtures"
+  val Dir = new java.io.File("data/fixtures").getAbsolutePath
   val RawPath = s"$Dir/raw_docs.parquet"
   val DocsPath = s"$Dir/docs.parquet"
   val ExpectedPath = s"$Dir/expected_docs.parquet"

@@ -20,6 +20,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
   * Scalar config arguments (hash counts, n-gram size) must be foldable
   * integer literals — they parameterize codegen, not per-row data — and are
   * checked at resolution time with a clear error instead of a ClassCastException.
+  * Data arguments are type-checked at analysis too: every expression declares
+  * its input types (`ExpectsInputTypes`), so a wrong-typed column fails the
+  * query before any task runs.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -65,13 +68,15 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     }
     inject("graft_minhash_sig",
       "_FUNC_(shingle_hashes, num_hashes) - MinHash signature (array of `num_hashes` " +
-        "longs) over a shingle-hash array (`num_hashes` must be an integer literal).") { args =>
+        "longs) over the array<bigint> that graft_shingle_hashes returns; equals " +
+        "graft_minhash_shingles(text, num_hashes, ngram).sig " +
+        "(`num_hashes` must be an integer literal).") { args =>
       require(args.length == 2, "graft_minhash_sig(shingle_hashes, num_hashes)")
       MinHashSigExpr(args(0), litInt("graft_minhash_sig", "num_hashes")(args(1)))
     }
     inject("graft_minhash_shingles",
       "_FUNC_(text, num_hashes, ngram) - one-pass struct(sig, sh): MinHash signature " +
-        "plus the distinct shingle hashes (both config args integer literals).") { args =>
+        "plus the hash of every shingle, duplicates kept (both config args integer literals).") { args =>
       require(args.length == 3, "graft_minhash_shingles(text, num_hashes, ngram)")
       MinHashWithShinglesExpr(args(0),
         litInt("graft_minhash_shingles", "num_hashes")(args(1)),
@@ -88,10 +93,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       L2NormExpr(args(0))
     }
     inject("graft_rhp_sig",
-      "_FUNC_(vec, bits) - packed random-hyperplane sign signature of an embedding " +
-        "(`bits` must be an integer literal).") { args =>
+      "_FUNC_(vec, bits) - packed random-hyperplane sign signature of an embedding: " +
+        "word 0 of graft_rhp_multi_sig (`bits` must be an integer literal, up to 64).") { args =>
       require(args.length == 2, "graft_rhp_sig(vec, bits)")
-      RhpSigExpr(args(0), litInt("graft_rhp_sig", "bits")(args(1)))
+      Similarity.rhpSignature(args(0), litInt("graft_rhp_sig", "bits")(args(1)))
     }
     inject("graft_rhp_multi_sig",
       "_FUNC_(vec, bits) - multi-word packed random-hyperplane signature " +

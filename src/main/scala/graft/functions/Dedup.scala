@@ -435,14 +435,6 @@ object Dedup {
 
   // ------------------------------------------------------------- MinHash
 
-  /** MinHash signature over a (materialized) shingle-array column — the
-    * one-pass native expression (see [[MinHashSigExpr]]): each shingle hashed
-    * once, k permutation values via splitmix mixing. (The earlier pure-HOF
-    * formulation — k × array_min(transform(·, xxhash64)) — re-walked the
-    * array k times and dominated the dedup benchmark.) */
-  def minHashSignatureOf(shingles: Column, numHashes: Int): Column =
-    MinHashSigExpr(shingles, numHashes)
-
   /** LSH candidate pairs: band the signature (`numBands` bands of
     * `rowsPerBand` slots), hash each band, and synthesize candidate edges
     * per band bucket. Plan discipline for scale:

@@ -1,10 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Document fingerprinting via a 64-bit polynomial rolling hash over the
@@ -16,8 +16,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * one fused loop over the row batch — the preferred extension order of
   * SURVEY.md §2.9 / the Spark guide (built-ins > native Expression > UDF).
   */
-case class RollingHash64(child: Expression) extends UnaryExpression {
+case class RollingHash64(child: Expression) extends UnaryExpression with ExpectsInputTypes {
 
+  override def inputTypes = Seq(StringType)
   override def dataType: DataType = LongType
   override def prettyName: String = "graft_rolling_hash64"
 

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -71,37 +71,54 @@ object HashUtil {
     z = (z ^ (z >>> 27)) * -7723592293110705685L
     z ^ (z >>> 31)
   }
+
+  /** MinHash signature of a hash multiset: slot k is the min over `hashes`
+    * of `mix(h, k)`. A min over a multiset equals the min over its distinct
+    * set, so the raw shingle hashes and their deduplicated set give the same
+    * signature. Plain loops over primitives (no closure, no boxing): it runs
+    * once per row in the near-dup stage. */
+  def minHashSig(hashes: Array[Long], numHashes: Int): Array[Long] = {
+    val sig = new Array[Long](numHashes)
+    java.util.Arrays.fill(sig, Long.MaxValue)
+    var i = 0
+    while (i < hashes.length) {
+      val h = hashes(i)
+      var k = 0
+      while (k < numHashes) {
+        val v = mix(h, k)
+        if (v < sig(k)) sig(k) = v
+        k += 1
+      }
+      i += 1
+    }
+    sig
+  }
 }
 
-/** One-pass MinHash signature: `minhash_sig(shingles) → array<long>`.
-  * Each shingle is hashed ONCE (XXH64); the k permutation values derive via
-  * splitmix64 mixing — k multiply-shift mixes instead of k full re-hashes,
-  * and one pass over the array instead of k `transform` materializations.
-  * Replaces the HOF formulation that dominated the dedup benchmark.
+/** MinHash signature of a shingle-hash set: `minhash_sig(shingle_hashes,
+  * k) → array<long>` over the `array<bigint>` that [[ShingleHashExpr]]
+  * returns. The hashes are used as they are (no re-hash); the k permutation
+  * values derive via splitmix64 mixing ([[HashUtil.minHashSig]]). Null
+  * elements are skipped. For any text,
+  * `minhash_sig(shingle_hashes(t, n), k) == minhash_with_shingles(t, k, n).sig`.
   */
 case class MinHashSigExpr(child: Expression, numHashes: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with ExpectsInputTypes with CodegenFallback {
+  override def inputTypes = Seq(ArrayType(LongType))
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "minhash_sig"
 
   override protected def nullSafeEval(input: Any): Any = {
     val arr = input.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    val sig = Array.fill(numHashes)(Long.MaxValue)
+    val hashes = new Array[Long](arr.numElements())
+    var n = 0
     var i = 0
-    while (i < n) {
-      if (!arr.isNullAt(i)) {
-        val h = HashUtil.xxhash64(arr.getUTF8String(i).getBytes, 0L)
-        var k = 0
-        while (k < numHashes) {
-          val v = HashUtil.mix(h, k)
-          if (v < sig(k)) sig(k) = v
-          k += 1
-        }
-      }
+    while (i < hashes.length) {
+      if (!arr.isNullAt(i)) { hashes(n) = arr.getLong(i); n += 1 }
       i += 1
     }
-    new GenericArrayData(sig)
+    new GenericArrayData(HashUtil.minHashSig(
+      if (n == hashes.length) hashes else java.util.Arrays.copyOf(hashes, n), numHashes))
   }
 
   override protected def withNewChildInternal(newChild: Expression): MinHashSigExpr =
@@ -109,8 +126,8 @@ case class MinHashSigExpr(child: Expression, numHashes: Int)
 }
 
 object MinHashSigExpr {
-  def apply(shingles: Column, numHashes: Int): Column =
-    ColumnBridge.column(MinHashSigExpr(ColumnBridge.expression(shingles), numHashes))
+  def apply(shingleHashes: Column, numHashes: Int): Column =
+    ColumnBridge.column(MinHashSigExpr(ColumnBridge.expression(shingleHashes), numHashes))
 }
 
 /** Shared tokenizer for the fused text sketches: lowercase + whitespace
@@ -175,7 +192,8 @@ object SketchTokens {
   * (~|shingles|²/2⁶⁴) are negligible against the 6-decimal Jaccard compare.
   */
 case class ShingleHashExpr(child: Expression, ngram: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with ExpectsInputTypes with CodegenFallback {
+  override def inputTypes = Seq(StringType)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "shingle_hashes"
 
@@ -202,42 +220,6 @@ object ShingleHashExpr {
     ColumnBridge.column(ShingleHashExpr(ColumnBridge.expression(text), ngram))
 }
 
-/** Fused text→MinHash signature: tokenize + shingle + hash + k-permutation
-  * mins in ONE eval — a `CodegenFallback` expression must not have HOF
-  * children (they would be forced into interpreted eval, measured ~20x
-  * slower than this fused form on the dedup benchmark). */
-case class MinHashTextExpr(child: Expression, numHashes: Int, ngram: Int)
-    extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "minhash_text"
-
-  override protected def nullSafeEval(input: Any): Any = {
-    val hashes = SketchTokens.shingleHashes(
-      SketchTokens.tokenize(input.toString), ngram)
-    val sig = Array.fill(numHashes)(Long.MaxValue)
-    var i = 0
-    while (i < hashes.length) {
-      val h = hashes(i)
-      var k = 0
-      while (k < numHashes) {
-        val v = HashUtil.mix(h, k)
-        if (v < sig(k)) sig(k) = v
-        k += 1
-      }
-      i += 1
-    }
-    new GenericArrayData(sig)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashTextExpr =
-    copy(child = newChild)
-}
-
-object MinHashTextExpr {
-  def apply(text: Column, numHashes: Int, ngram: Int): Column =
-    ColumnBridge.column(MinHashTextExpr(ColumnBridge.expression(text), numHashes, ngram))
-}
-
 /** Fused text→(MinHash signature, shingle hashes) in ONE pass: the LSH
   * banding needs the signature and the candidate verify needs the shingle
   * hashes, and both derive from the SAME tokenize+shingle+hash sweep — two
@@ -245,7 +227,8 @@ object MinHashTextExpr {
   * (it dominates the stage). The mix loop rides along, so any consumer of
   * either field pays exactly one sweep. */
 case class MinHashWithShinglesExpr(child: Expression, numHashes: Int, ngram: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with ExpectsInputTypes with CodegenFallback {
+  override def inputTypes = Seq(StringType)
   override def dataType: DataType = StructType(Seq(
     StructField("sig", ArrayType(LongType, containsNull = false), nullable = false),
     StructField("sh", ArrayType(LongType, containsNull = false), nullable = false)))
@@ -254,20 +237,8 @@ case class MinHashWithShinglesExpr(child: Expression, numHashes: Int, ngram: Int
   override protected def nullSafeEval(input: Any): Any = {
     val hashes = SketchTokens.shingleHashes(
       SketchTokens.tokenize(input.toString), ngram)
-    val sig = Array.fill(numHashes)(Long.MaxValue)
-    var i = 0
-    while (i < hashes.length) {
-      val h = hashes(i)
-      var k = 0
-      while (k < numHashes) {
-        val v = HashUtil.mix(h, k)
-        if (v < sig(k)) sig(k) = v
-        k += 1
-      }
-      i += 1
-    }
-    org.apache.spark.sql.catalyst.InternalRow(
-      new GenericArrayData(sig), new GenericArrayData(hashes))
+    InternalRow(
+      new GenericArrayData(HashUtil.minHashSig(hashes, numHashes)), new GenericArrayData(hashes))
   }
 
   override protected def withNewChildInternal(newChild: Expression): MinHashWithShinglesExpr =
@@ -279,9 +250,12 @@ object MinHashWithShinglesExpr {
     ColumnBridge.column(MinHashWithShinglesExpr(ColumnBridge.expression(text), numHashes, ngram))
 }
 
-/** Fused text→SimHash64 (same rationale as [[MinHashTextExpr]]). */
+/** Fused text→SimHash64: `simhash_text(text) → long`, tokenize + hash +
+  * per-bit majority vote over the token hashes in ONE eval with 64 counters
+  * (the HOF form scanned the token array once per bit, interpreted). */
 case class SimHashTextExpr(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with ExpectsInputTypes with CodegenFallback {
+  override def inputTypes = Seq(StringType)
   override def dataType: DataType = LongType
   override def prettyName: String = "simhash_text"
 
@@ -313,110 +287,24 @@ object SimHashTextExpr {
     ColumnBridge.column(SimHashTextExpr(ColumnBridge.expression(text)))
 }
 
-/** One-pass 64-bit SimHash: `simhash64(tokens) → long`. Per-bit majority
-  * vote over token hashes in a single loop with 64 counters — replaces the
-  * 64-filter-HOF formulation (64 array scans per row).
-  */
-case class SimHash64Expr(child: Expression)
-    extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "simhash64"
-
-  override protected def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    val counts = new Array[Int](64)
-    var i = 0
-    while (i < n) {
-      if (!arr.isNullAt(i)) {
-        val h = HashUtil.xxhash64(arr.getUTF8String(i).getBytes, 0L)
-        var b = 0
-        while (b < 64) {
-          if (((h >>> b) & 1L) == 1L) counts(b) += 1 else counts(b) -= 1
-          b += 1
-        }
-      }
-      i += 1
-    }
-    var sig = 0L
-    var b = 0
-    while (b < 64) { if (counts(b) > 0) sig |= (1L << b); b += 1 }
-    java.lang.Long.valueOf(sig)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): SimHash64Expr =
-    copy(child = newChild)
-}
-
-object SimHash64Expr {
-  def apply(tokens: Column): Column =
-    ColumnBridge.column(SimHash64Expr(ColumnBridge.expression(tokens)))
-}
-
-/** Fused random-hyperplane signature: `rhp_sig(embedding, bits) → long`
-  * (bits <= 64, one sign bit per hyperplane, packed LSB-first).
+/** Fused random-hyperplane signature: `rhp_multi_sig(embedding, bits) →
+  * array<long>`, one sign bit per hyperplane (1..1024), packed LSB-first
+  * into 64-bit words. One splitmix64 mix per (dimension, word) yields 64
+  * pseudo-random ±1 weights at once (bit p of the mix is the weight of
+  * plane p of that word), so the whole signature costs dims × words mixes
+  * plus dims × bits adds in a single pass, in place of bits HOF scans with
+  * a hash call per element. Word 0 seeds with the FNV-64 offset basis and
+  * words 1+ advance the seed by the golden gamma. For bits <= 64 the lone word is the packed-long
+  * signature ([[Similarity.rhpSignature]], SQL `graft_rhp_sig`).
   *
-  * One splitmix64 mix per DIMENSION yields 64 pseudo-random ±1 weight bits at
-  * once — bit p of `mix(seed, dim)` is the weight of hyperplane p — so the
-  * whole signature costs dims mixes + dims×bits adds in a single pass.
-  * Replaces the HOF formulation (bits × zip_with/aggregate scans with a
-  * per-element `xxhash64` call each: bits×dims hash evals, interpreted) that
-  * VERDICT r01 #9 flagged.
-  */
-case class RhpSigExpr(child: Expression, bits: Int)
-    extends UnaryExpression with CodegenFallback {
-  require(bits >= 1 && bits <= 64, "rhp_sig supports 1..64 hyperplanes")
-  override def dataType: DataType = LongType
-  override def prettyName: String = "rhp_sig"
-
-  override protected def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    val proj = new Array[Double](bits)
-    var i = 0
-    while (i < n) {
-      if (!arr.isNullAt(i)) {
-        val x = arr.getFloat(i).toDouble
-        val w = HashUtil.mix(-3750763034362895579L, i) // seed: golden-gamma
-        var p = 0
-        while (p < bits) {
-          if (((w >>> p) & 1L) == 1L) proj(p) += x else proj(p) -= x
-          p += 1
-        }
-      }
-      i += 1
-    }
-    var sig = 0L
-    var p = 0
-    while (p < bits) { if (proj(p) >= 0) sig |= (1L << p); p += 1 }
-    java.lang.Long.valueOf(sig)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): RhpSigExpr =
-    copy(child = newChild)
-}
-
-object RhpSigExpr {
-  def apply(embedding: Column, bits: Int): Column =
-    ColumnBridge.column(RhpSigExpr(ColumnBridge.expression(embedding), bits))
-}
-
-/** Multi-word random-hyperplane signature: `rhp_multi_sig(embedding, bits) →
-  * array<long>` for bits beyond one word (up to 1024, packed LSB-first per
-  * 64-bit word). Same fused single-pass shape as [[RhpSigExpr]]: one
-  * splitmix64 mix per (dimension, word) yields 64 weight bits at once. Word
-  * 0 uses RhpSigExpr's seed, so for bits <= 64 the lone word EQUALS the
-  * single-word signature bit-for-bit (spec-pinned); words 1+ advance the
-  * seed by the golden gamma.
-  *
-  * Why it exists (round 6): LSH banding needs band keys of
+  * Wide signatures exist for LSH banding: band keys need
   * ~log2(corpus/target-bucket) bits to keep RANDOM collisions from filling
-  * buckets — 16-bit keys need 256 hyperplanes at 16 bands, past the 64-bit
-  * ceiling of the packed-long form. */
+  * buckets — 16-bit keys need 256 hyperplanes at 16 bands. */
 case class RhpMultiSigExpr(child: Expression, bits: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with ExpectsInputTypes with CodegenFallback {
   require(bits >= 1 && bits <= 1024, "rhp_multi_sig supports 1..1024 hyperplanes")
   private val words = (bits + 63) / 64
+  override def inputTypes = Seq(ArrayType(FloatType))
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "rhp_multi_sig"
 
@@ -467,7 +355,8 @@ object RhpMultiSigExpr {
   * (spherical-k-means style), matching the cosine rerank metric.
   */
 case class NearestCentroidsExpr(child: Expression, centroids: Array[Array[Float]], nProbe: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with ExpectsInputTypes with CodegenFallback {
+  override def inputTypes = Seq(ArrayType(FloatType))
   require(centroids.nonEmpty && nProbe >= 1 && nProbe <= centroids.length)
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def prettyName: String = "nearest_centroids"
@@ -535,7 +424,8 @@ object NearestCentroidsExpr {
   * one pass, no HOF materialization. Computed ONCE per row before any band
   * join (norms per candidate PAIR was the other half of VERDICT r01 #9). */
 case class L2NormExpr(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with ExpectsInputTypes with CodegenFallback {
+  override def inputTypes = Seq(ArrayType(FloatType))
   override def dataType: DataType = DoubleType
   override def prettyName: String = "l2_norm"
 
@@ -576,7 +466,8 @@ object L2NormExpr {
   * ordering is Spark's own interpreted ordering, so `least`/`greatest`/
   * `array_min` parity is exact. */
 case class BucketPairsExpr(child: Expression, cap: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with ExpectsInputTypes with CodegenFallback {
+  override def inputTypes = Seq(ArrayType)
   private lazy val elemType: DataType =
     child.dataType.asInstanceOf[ArrayType].elementType
   @transient private lazy val ord: Ordering[Any] =
