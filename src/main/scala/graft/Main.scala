@@ -136,12 +136,7 @@ object Main {
       // documents if this run uses a different --batches grouping
       val fs = org.apache.hadoop.fs.FileSystem.get(
         new java.net.URI(output), spark.sparkContext.hadoopConfiguration)
-      val dirs =
-        if (opts.contains("pipeline"))
-          Seq("extract", "s1_exact", "s1b_lines", "s2_neardup", "s2b_substr", "s2p_paras", "s3_decontam",
-            "s3g_gopher", "s4_quality", "s4d_domain", "s4r_redact", "s4s_sample",
-            "s4m_mix", "s4c_chunk", "s5_pack", "_pipeline")
-        else Seq("_lineage", "docs", "quarantine")
+      val dirs = if (opts.contains("pipeline")) Pipeline.OutputDirs else Lineage.OutputDirs
       dirs.foreach(d =>
         fs.delete(new org.apache.hadoop.fs.Path(s"$output/$d"), true))
     }

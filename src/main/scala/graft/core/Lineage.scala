@@ -65,6 +65,10 @@ object Lineage {
       .map(r => r.batch_id -> r).toMap
   }
 
+  /** Every directory a run writes under `outPath` (`Main --no-resume`
+    * wipes exactly these). */
+  private[graft] val OutputDirs: Seq[String] = Seq("_lineage", "docs", "quarantine")
+
   private def outputs(outPath: String, batchId: Int): Seq[String] =
     Seq(s"$outPath/docs/batch=$batchId", s"$outPath/quarantine/batch=$batchId")
 

@@ -101,6 +101,14 @@ final case class StageLineage(
   */
 object Pipeline {
 
+  /** Every directory a run writes under `outPath`: the extraction output,
+    * each stage's table in run order, and the stage lineage. A stage's name
+    * is its directory, so [[run]] accepts only names listed here, and
+    * `Main --no-resume` wipes exactly these. */
+  private[graft] val OutputDirs: Seq[String] = Seq("extract", "s1_exact", "s1b_lines",
+    "s2_neardup", "s2b_substr", "s2p_paras", "s3_decontam", "s3g_gopher", "s4_quality",
+    "s4d_domain", "s4r_redact", "s4s_sample", "s4m_mix", "s4c_chunk", "s5_pack", "_pipeline")
+
   final case class Config(
       rawPath: String,
       outPath: String,
@@ -194,6 +202,7 @@ object Pipeline {
     // good-doc count)
     def stage(name: String, params: String, extraInputs: Seq[String] = Nil)
              (body: DataFrame => DataFrame): Unit = {
+      require(OutputDirs.contains(name), s"stage $name is not in Pipeline.OutputDirs")
       rows += runStage(spark, cfg, committed.get(name), name, current +: extraInputs,
         params, rows.last.rows_out)(body)
       current = s"${cfg.outPath}/$name"

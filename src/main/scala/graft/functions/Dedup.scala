@@ -435,6 +435,47 @@ object Dedup {
 
   // ------------------------------------------------------------- MinHash
 
+  /** Candidate pairs of one LSH banding — the hot-band guard shared by
+    * MinHash, SimHash and embedding-RHP. `banded` holds one row per (band
+    * bucket, member); each bucket collects its `member` values and emits
+    * its candidate edges in-row as a struct column `p` of (a, b) members
+    * ([[BucketPairsExpr]], a fused native loop): exhaustive
+    * (least, greatest) pairs for buckets within `cap`, min-member-hub star
+    * edges past it. See [[minHashNearDuplicates]] for the full scale
+    * rationale and the documented recall trade.
+    *
+    * Hot-bucket observability (ADVICE r05: "quantify how often the recall
+    * trade is actually exercised"): the bucket aggregation carries a named
+    * `observe` metric `graft.<op>.bands.<seq>` — zero execution cost (the
+    * aggregates ride the rows already flowing) — reporting how many buckets
+    * exceeded the cap (→ star-edge synthesis), the largest bucket seen, and
+    * the bucket count. Production reads it via a QueryExecutionListener;
+    * tests and notebooks via `df.queryExecution.observedMetrics` after any
+    * action. The sequence suffix keeps two capped ops composed into ONE
+    * query (e.g. a MinHash and a SimHash pass unioned) from colliding. */
+  private val obsSeq = new java.util.concurrent.atomic.AtomicLong()
+  private def bandPairs(banded: DataFrame, bucketCols: Seq[String], member: Column,
+                        op: String, cap: Int): DataFrame = {
+    val ms = col("ms")
+    banded.groupBy(bucketCols.map(col): _*).agg(collect_list(member).as("ms"))
+      .observe(s"graft.$op.bands.${obsSeq.incrementAndGet()}",
+        sum(when(size(ms) > cap, 1L).otherwise(0L)).as("n_hot_buckets"),
+        max(size(ms)).as("max_bucket"),
+        count(lit(1)).as("n_buckets"))
+      .select(explode(BucketPairsExpr(ms, cap)).as("p"))
+  }
+
+  /** The rows of `rows` whose `idCol` appears in a candidate pair table
+    * `(a, b)`: a semi join against the broadcast candidate-id set, placed
+    * by the caller BELOW any heavy per-row projection, so that projection
+    * runs for candidates only (the optimizer's LeftSemi pushdown does not
+    * dig under a projection on its own). The id broadcast is bounded by the
+    * capped candidate set, and re-evaluating the banding subtree for it is
+    * absorbed by exchange reuse. */
+  private def candidateRows(rows: DataFrame, idCol: String, pairs: DataFrame): DataFrame =
+    rows.join(broadcast(pairs.select(explode(array(col("a"), col("b"))).as(idCol)).distinct()),
+      Seq(idCol), "left_semi")
+
   /** LSH candidate pairs: band the signature (`numBands` bands of
     * `rowsPerBand` slots), hash each band, and synthesize candidate edges
     * per band bucket. Plan discipline for scale:
@@ -463,35 +504,6 @@ object Dedup {
     * member, so the loss is second-order (spec-tested with a planted hot
     * cluster). Small buckets are exhaustive exactly as before.
     */
-  /** In-row candidate-edge synthesis for one band bucket (`ids` = the
-    * bucket's member id array): exhaustive (least, greatest) pairs for
-    * buckets within `cap`, min-id-hub star edges past it — the hot-band
-    * guard shared by every LSH band aggregation (MinHash, SimHash,
-    * embedding-RHP). See [[minHashNearDuplicates]] for the full scale
-    * rationale and the documented recall trade. */
-  private def bucketEdges(ids: Column, cap: Int): Column =
-    // r07: fused native synthesis ([[BucketPairsExpr]]) — the former nested
-    // transform/slice/flatten HOF chain paid an interpreted lambda dispatch
-    // per emitted pair element (HOFs never enter whole-stage codegen)
-    BucketPairsExpr(ids, cap)
-
-  /** Hot-bucket observability (ADVICE r05: "quantify how often the recall
-    * trade is actually exercised"): wraps a band-bucket aggregation in a
-    * named `observe` metric — zero execution cost (the aggregates ride the
-    * rows already flowing) — reporting how many buckets exceeded the cap
-    * (→ star-edge synthesis), the largest bucket seen, and the bucket
-    * count. Production reads it via a QueryExecutionListener; tests and
-    * notebooks via `df.queryExecution.observedMetrics` after any action.
-    * Names carry a sequence suffix so two capped ops composed into ONE
-    * query (e.g. a MinHash and a SimHash pass unioned) cannot collide. */
-  private val obsSeq = new java.util.concurrent.atomic.AtomicLong()
-  private def observeHotBuckets(buckets: DataFrame, op: String,
-                                bucketSize: Column, cap: Int): DataFrame =
-    buckets.observe(s"graft.$op.bands.${obsSeq.incrementAndGet()}",
-      sum(when(bucketSize > cap, 1L).otherwise(0L)).as("n_hot_buckets"),
-      max(bucketSize).as("max_bucket"),
-      count(lit(1)).as("n_buckets"))
-
   def minHashNearDuplicates(documents: DataFrame, threshold: Double = 0.8,
                             numHashes: Int = 32, numBands: Int = 8,
                             ngram: Int = 3, maxBandBucket: Int = 1024): DataFrame = {
@@ -553,11 +565,7 @@ object Dedup {
     // minhash hot-cluster test now bounds the sketch sites). Bucket ROW
     // size is O(members): fine through multi-million clusters (8 MB of
     // longs per 10^6 members); the quadratic OUTPUT is what the cap bounds.
-    val ids = col("ids")
-    val cand = observeHotBuckets(
-      banded.groupBy(col("band_hash")).agg(collect_list(col("doc_id")).as("ids")),
-      "minhash", size(ids), maxBandBucket)
-      .select(explode(bucketEdges(ids, maxBandBucket)).as("p"))
+    val cand = bandPairs(banded, Seq("band_hash"), col("doc_id"), "minhash", maxBandBucket)
       .select(col("p.a").as("a"), col("p.b").as("b"))
       .distinct()
     // exact-Jaccard verification ONLY on the candidate set, via the
@@ -569,20 +577,10 @@ object Dedup {
     // pipeline run). O(corpus) beats O(candidates × doc_len) the moment
     // candidates exceed the corpus, which is exactly the regime LSH is for.
     //
-    // r07: the two verify branches formerly re-ran the fused sketch over the
-    // FULL corpus each (the join probe sat ABOVE the sketch projection, so
-    // every row paid tokenize+shingle+hash only to fail the candidate-id
-    // probe). Now each branch semi-joins the corpus against the candidate-id
-    // set BELOW the sketch projection (built explicitly — the optimizer's
-    // LeftSemi pushdown does not dig under the projection+filter chain on
-    // its own), so the branch is a cheap scan + broadcast id probe with the
-    // sketch re-computed only for candidate docs. The candidate-id broadcast
-    // is bounded by the capped candidate set — the same small-side class as
-    // the hot set — and its banding subtree re-evaluation is absorbed by
-    // exchange reuse (the band aggregation's Exchange is identical across
-    // the cand and candIds consumers).
-    val candIds = cand.select(explode(array(col("a"), col("b"))).as("doc_id")).distinct()
-    val vf = scorableDocs.join(broadcast(candIds), Seq("doc_id"), "left_semi")
+    // The verify branches re-run the sketch for candidate docs only
+    // ([[candidateRows]]): a candidate-id probe above the sketch projection
+    // would pay tokenize+shingle+hash for every corpus row only to fail it.
+    val vf = candidateRows(scorableDocs, "doc_id", cand)
       .select(col("doc_id"), MinHashWithShinglesExpr(col("text"), numHashes, ngram).as("f"))
       .select(col("doc_id"), col("f.sig").as("sig"), col("f.sh").as("sh"))
     cand
@@ -716,6 +714,22 @@ object Dedup {
 
   // ----------------------------------------------------- decontamination
 
+  /** Benchmark items normalized and routed by length: (distinct shingle-hash
+    * vocabulary of the > `ngram`-token items, distinct ≤ `ngram`-token
+    * items). The single source of the routing rule — shared by the batch
+    * report and the streaming [[graft.streaming.StreamingExtract.benchmarkModel]]
+    * so the two paths cannot drift. */
+  private[graft] def benchRouting(benchmark: DataFrame, ngram: Int): (DataFrame, DataFrame) = {
+    require(ngram >= 1, s"ngram must be >= 1, got $ngram")
+    val bnorm = benchmark.select(TextAnalysis.normalized(col("text")).as("item"))
+      .where(col("item") =!= "")
+      .withColumn("n_tok", size(split(col("item"), " ")))
+    val benchSh = bnorm.where(col("n_tok") > ngram)
+      .select(explode(ShingleHashExpr(col("item"), ngram)).as("g")).distinct()
+    val shortItems = bnorm.where(col("n_tok") <= ngram).select(col("item")).distinct()
+    (benchSh, shortItems)
+  }
+
   /** Benchmark decontamination (the GPT-3/PaLM n-gram collision method):
     * count, per training document, its collisions with an evaluation set. A
     * training corpus must not contain eval data — leaked benchmark text
@@ -733,9 +747,7 @@ object Dedup {
     *    normalized doc), each matched item counting as one collision.
     *
     * Plan shape for 100 TB training vs KB-GB benchmark: the n-gram
-    * vocabulary and the short-item list both broadcast (`hintBroadcast`,
-    * default true — set false only for a pathological multi-GB "benchmark",
-    * where AQE picks the join side by measured size instead); the training
+    * vocabulary and the short-item list both broadcast; the training
     * corpus never shuffles — its only Exchange is the final per-doc count.
     * The short-item pass costs a second corpus scan; it exists because
     * correctness beats scan count here — a decontamination stage that
@@ -743,34 +755,17 @@ object Dedup {
     * Documents sharing nothing produce no row (the common case; compose
     * with [[dropContaminated]] for the filter form).
     */
-  /** Benchmark items normalized and routed by length: (distinct shingle-hash
-    * vocabulary of the > `ngram`-token items, distinct ≤ `ngram`-token
-    * items). The single source of the routing rule — shared by the batch
-    * report and the streaming [[graft.streaming.StreamingExtract.benchmarkModel]]
-    * so the two paths cannot drift. */
-  private[graft] def benchRouting(benchmark: DataFrame, ngram: Int): (DataFrame, DataFrame) = {
-    require(ngram >= 1, s"ngram must be >= 1, got $ngram")
-    val bnorm = benchmark.select(TextAnalysis.normalized(col("text")).as("item"))
-      .where(col("item") =!= "")
-      .withColumn("n_tok", size(split(col("item"), " ")))
-    val benchSh = bnorm.where(col("n_tok") > ngram)
-      .select(explode(ShingleHashExpr(col("item"), ngram)).as("g")).distinct()
-    val shortItems = bnorm.where(col("n_tok") <= ngram).select(col("item")).distinct()
-    (benchSh, shortItems)
-  }
-
   def contaminationReport(documents: DataFrame, benchmark: DataFrame,
-                          ngram: Int = 13, hintBroadcast: Boolean = true): DataFrame = {
-    def hinted(df: DataFrame): DataFrame = if (hintBroadcast) broadcast(df) else df
+                          ngram: Int = 13): DataFrame = {
     val (benchSh, shortItems) = benchRouting(benchmark, ngram)
     val docSh = documents.select(col("doc_id"),
       explode(ShingleHashExpr(col("text"), ngram)).as("g"))
-    val ngramHits = docSh.join(hinted(benchSh), Seq("g"))
+    val ngramHits = docSh.join(broadcast(benchSh), Seq("g"))
       .groupBy("doc_id").agg(count(lit(1)).as("n_collisions"))
     val shortHits = documents
       .select(col("doc_id"),
         concat(lit(" "), TextAnalysis.normalized(col("text")), lit(" ")).as("padded"))
-      .join(hinted(shortItems), expr("instr(padded, concat(' ', item, ' ')) > 0"))
+      .join(broadcast(shortItems), expr("instr(padded, concat(' ', item, ' ')) > 0"))
       .groupBy("doc_id").agg(count(lit(1)).as("n_collisions"))
     ngramHits.unionByName(shortHits)
       .groupBy("doc_id").agg(sum(col("n_collisions")).as("n_collisions"))
@@ -779,10 +774,9 @@ object Dedup {
   /** Filter form: drop every training document with at least `minCollisions`
     * benchmark collisions (shared n-grams + matched short items). */
   def dropContaminated(documents: DataFrame, benchmark: DataFrame,
-                       ngram: Int = 13, minCollisions: Int = 1,
-                       hintBroadcast: Boolean = true): DataFrame = {
+                       ngram: Int = 13, minCollisions: Int = 1): DataFrame = {
     require(minCollisions >= 1, s"minCollisions must be >= 1, got $minCollisions")
-    val flagged = contaminationReport(documents, benchmark, ngram, hintBroadcast)
+    val flagged = contaminationReport(documents, benchmark, ngram)
       .where(col("n_collisions") >= minCollisions).select(col("doc_id"))
     documents.join(flagged, Seq("doc_id"), "left_anti")
   }
@@ -818,7 +812,7 @@ object Dedup {
     * within `maxHamming` whose hub distances both exceed it is missed —
     * second-order for a bucket of chunk-identical docs (the hub shares the
     * chunk with every member; planted-cluster spec). Buckets report
-    * cap-exceedance via [[observeHotBuckets]].
+    * cap-exceedance via [[bandPairs]].
     *
     * Null-text docs have a null signature and are EXCLUDED before banding
     * (unchanged semantics: the former join's non-null-safe equality already
@@ -858,12 +852,8 @@ object Dedup {
     // former sort_array + positional-slice HOF chain produced (the sort
     // itself is no longer needed; the expression orders each pair and finds
     // the hub in one native loop instead of interpreted per-element lambdas)
-    val ms = col("ms")
-    observeHotBuckets(
-      banded.groupBy(col("band_idx"), col("chunk"))
-        .agg(collect_list(struct(col("doc_id"), col("sig"))).as("ms")),
-      "simhash", size(ms), maxBandBucket)
-      .select(explode(BucketPairsExpr(ms, maxBandBucket)).as("p"))
+    bandPairs(banded, Seq("band_idx", "chunk"), struct(col("doc_id"), col("sig")),
+        "simhash", maxBandBucket)
       .select(col("p.a.doc_id").as("a"), col("p.b.doc_id").as("b"),
         col("p.a.sig").as("sig_a"), col("p.b.sig").as("sig_b"))
       .dropDuplicates("a", "b")
@@ -912,41 +902,27 @@ object Dedup {
     * through the hub, and in a bucket of sign-identical embeddings the hub's
     * cosine to every member is as high as any member pair's — second-order
     * loss, planted-cluster spec. Cap exceedance is observable via the
-    * `graft.embed_lsh.bands.*` metric ([[observeHotBuckets]]). */
+    * `graft.embed_lsh.bands.*` metric ([[bandPairs]]). */
   def embeddingNearDuplicatesLsh(embeddings: DataFrame, threshold: Double = 0.95,
                                  bits: Int = 256, numBands: Int = 16,
                                  maxBandBucket: Int = 1024): DataFrame = {
     require(maxBandBucket >= 2, s"maxBandBucket must be >= 2, got $maxBandBucket")
     // per-row one-pass packed signature banded into bits/numBands-bit
     // chunks; the band aggregation ships (band, id) only
-    val banded = embeddings
-      .select(col("vec_id"), graft.functions.RhpMultiSigExpr(col("embedding"), bits).as("sig"))
-      .select(col("vec_id"),
-        posexplode(Similarity.rhpMultiBandKeys(col("sig"), bits, numBands)).as(Seq("band_idx", "band_key")))
-    val ids = col("ids")
-    val cand = observeHotBuckets(
-      banded.groupBy(col("band_idx"), col("band_key"))
-        .agg(collect_list(col("vec_id")).as("ids")),
-      "embed_lsh", size(ids), maxBandBucket)
-      .select(explode(bucketEdges(ids, maxBandBucket)).as("p"))
+    val cand = bandPairs(Similarity.rhpBands(embeddings, "vec_id", bits, numBands),
+        Seq("band_idx", "band_key"), col("vec_id"), "embed_lsh", maxBandBucket)
       .select(col("p.a").as("a"), col("p.b").as("b"))
       .distinct()
-    // norms computed ONCE per row here, never per candidate pair; the
-    // candidate-id semi join sits BELOW the norm projection (built
-    // explicitly — the optimizer leaves a join above an existing projection
-    // in place, same r07 lesson as [[minHashNearDuplicates]]'s verify), so
-    // the norm eval — and the payload feeding the scoring joins — is
-    // restricted to candidate vectors
-    val candIds = cand.select(explode(array(col("a"), col("b"))).as("vec_id")).distinct()
-    val feats = embeddings
-      .join(broadcast(candIds), Seq("vec_id"), "left_semi")
+    // norms computed ONCE per row here, never per candidate pair, and only
+    // for candidate vectors: the candidate-id semi join sits BELOW the norm
+    // projection ([[candidateRows]]; PlanShapeSpec asserts it)
+    val feats = candidateRows(embeddings, "vec_id", cand)
       .select(col("vec_id"), col("embedding"),
         graft.functions.L2NormExpr(col("embedding")).as("norm"))
     val fa = feats.select(col("vec_id").as("a"), col("embedding").as("va"), col("norm").as("na"))
     val fb = feats.select(col("vec_id").as("b"), col("embedding").as("vb"), col("norm").as("nb"))
     cand.join(fa, "a").join(fb, "b")
-      .withColumn("cosine", Similarity.dot(col("va"), col("vb")) /
-        greatest(col("na") * col("nb"), lit(1e-12)))
+      .withColumn("cosine", Similarity.cosine(col("va"), col("vb"), col("na"), col("nb")))
       .where(col("cosine") >= threshold)
       .select(col("a"), col("b"), round(col("cosine"), 6).as("cosine"))
   }
@@ -961,8 +937,7 @@ object Dedup {
     val a = e.select(col("vec_id").as("a"), col("embedding").as("va"), col("norm").as("na"))
     val b = e.select(col("vec_id").as("b"), col("embedding").as("vb"), col("norm").as("nb"))
     a.crossJoin(b).where(col("a") < col("b"))
-      .withColumn("cosine", Similarity.dot(col("va"), col("vb")) /
-        greatest(col("na") * col("nb"), lit(1e-12)))
+      .withColumn("cosine", Similarity.cosine(col("va"), col("vb"), col("na"), col("nb")))
       .where(col("cosine") >= threshold)
       .select(col("a"), col("b"), round(col("cosine"), 6).as("cosine"))
   }

@@ -41,11 +41,18 @@ object Similarity {
       l2Norm(col("embedding")).as("qn"))
     val c = corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("cv"),
       l2Norm(col("embedding")).as("cn"))
-    val scored = c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", cosine(col("qv"), col("cv"), col("qn"), col("cn")))
+    rankTopK(c.join(broadcast(q), col("query_id") =!= col("neighbor_id")), k)
+  }
+
+  /** The scoring and top-k tail shared by every search path: score each
+    * (query_id, neighbor_id, qv, cv, qn, cn) candidate row by cosine, keep
+    * the `k` best per query (ties break on neighbor id, so the result is
+    * deterministic) and round the cosine to 6 places. */
+  private def rankTopK(cands: DataFrame, k: Int): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
+    cands.withColumn("cosine", cosine(col("qv"), col("cv"), col("qn"), col("cn")))
+      .withColumn("rank", row_number().over(w)).where(col("rank") <= k)
       .select(col("query_id"), col("rank"), col("neighbor_id"),
         round(col("cosine"), 6).as("cosine"))
   }
@@ -62,13 +69,23 @@ object Similarity {
     GetArrayItem(RhpMultiSigExpr(embedding, bits), Literal(0))
   }
 
+  /** `(idCol, band_idx, band_key)` rows of `df(vec_id, embedding)`: the
+    * fused `bits`-plane [[RhpMultiSigExpr]] signature cut into `numBands`
+    * band keys — the one RHP banding of [[lshTopK]] and
+    * [[Dedup.embeddingNearDuplicatesLsh]]. Only ids and keys leave it. */
+  private[functions] def rhpBands(df: DataFrame, idCol: String, bits: Int,
+                                  numBands: Int): DataFrame =
+    df.select(col("vec_id").as(idCol), RhpMultiSigExpr(col("embedding"), bits).as("sig"))
+      .select(col(idCol),
+        posexplode(rhpMultiBandKeys(col("sig"), bits, numBands)).as(Seq("band_idx", "band_key")))
+
   /** Band keys of an [[RhpMultiSigExpr]] signature (`array<long>`) — the
     * embedding analog of the SimHash pigeonhole chunks: band b reads
     * `bits/numBands` consecutive bits. No key may straddle a word boundary,
     * so extraction stays one shift + mask per band: a single-word signature
     * (`bits <= 64`) takes any band width, a wider one needs a width that
     * divides 64. Returns an array for posexplode. */
-  private[functions] def rhpMultiBandKeys(sig: Column, bits: Int, numBands: Int): Column = {
+  private def rhpMultiBandKeys(sig: Column, bits: Int, numBands: Int): Column = {
     require(numBands >= 1 && bits % numBands == 0,
       s"bits=$bits must divide evenly into numBands=$numBands bands")
     val rpb = bits / numBands
@@ -149,14 +166,7 @@ object Similarity {
         posexplode_outer(col("probes")).as(Seq("p_idx", "list_id")))
       .where(col("p_idx").isNotNull)
       .drop("p_idx")
-    val scored = q.join(c, "list_id")
-      .where(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", cosine(col("qv"), col("cv"), col("qn"), col("cn")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("cosine"), 6).as("cosine"))
+    rankTopK(q.join(c, "list_id").where(col("query_id") =!= col("neighbor_id")), k)
   }
 
   /** LSH-bucketed ANN: join queries to corpus rows sharing at least one
@@ -170,24 +180,14 @@ object Similarity {
               bits: Int = 16, numBands: Int = 4): DataFrame = {
     // band join ships (band, id) ONLY — embeddings and norms re-join onto the
     // (small) candidate set afterwards, the d_minhash plan discipline
-    def banded(df: DataFrame, idCol: String): DataFrame =
-      df.select(col("vec_id").as(idCol), RhpMultiSigExpr(col("embedding"), bits).as("sig"))
-        .select(col(idCol),
-          posexplode(rhpMultiBandKeys(col("sig"), bits, numBands)).as(Seq("band_idx", "band_key")))
-    val cand = banded(queries, "query_id").join(banded(corpus, "neighbor_id"),
-        Seq("band_idx", "band_key"))
+    val cand = rhpBands(queries, "query_id", bits, numBands)
+      .join(rhpBands(corpus, "neighbor_id", bits, numBands), Seq("band_idx", "band_key"))
       .where(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id")).distinct()
     val qf = queries.select(col("vec_id").as("query_id"), col("embedding").as("qv"),
       L2NormExpr(col("embedding")).as("qn"))
     val cf = corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("cv"),
       L2NormExpr(col("embedding")).as("cn"))
-    val scored = cand.join(qf, "query_id").join(cf, "neighbor_id")
-      .withColumn("cosine", cosine(col("qv"), col("cv"), col("qn"), col("cn")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("cosine"), 6).as("cosine"))
+    rankTopK(cand.join(qf, "query_id").join(cf, "neighbor_id"), k)
   }
 }

@@ -832,12 +832,45 @@ class FunctionsSpec extends AnyFunSuite {
       100L -> base(3)._2.map(x => x * 0.995f),
       101L -> base(7)._2.map(x => (x * 0.99f + 0.001f)))
     val df = embDf((base ++ planted): _*)
-    val exact = Dedup.embeddingNearDuplicates(df, 0.98).collect()
-      .map(x => (x.getLong(0), x.getLong(1))).toSet
-    assert(exact.contains((3L, 100L)) && exact.contains((7L, 101L)))
-    val lsh = Dedup.embeddingNearDuplicatesLsh(df, 0.98).collect()
-      .map(x => (x.getLong(0), x.getLong(1))).toSet
-    assert(lsh == exact) // full recall at near-dup cosine
+    // 0.9 is the threshold of the d_embed_neardup[_lsh] queries
+    Seq(0.98, 0.9).foreach { threshold =>
+      val exact = Dedup.embeddingNearDuplicates(df, threshold).collect()
+        .map(x => (x.getLong(0), x.getLong(1))).toSet
+      assert(exact.contains((3L, 100L)) && exact.contains((7L, 101L)), s"threshold=$threshold")
+      val lsh = Dedup.embeddingNearDuplicatesLsh(df, threshold).collect()
+        .map(x => (x.getLong(0), x.getLong(1))).toSet
+      assert(lsh == exact, s"threshold=$threshold") // full recall at near-dup cosine
+    }
+  }
+
+  test("ivfTopK probing every list returns exactly bruteForceTopK's rows") {
+    val r = new java.util.Random(17)
+    val vecs = (0L until 80L).map(i => i -> Seq.fill(16)(r.nextFloat() * 2 - 1))
+    // exact copies tie on cosine with their originals: the rank order of a
+    // tie is decided by neighbor id alone
+    val copies = Seq(80L -> vecs(4)._2, 81L -> vecs(4)._2, 82L -> vecs(11)._2)
+    val df = embDf((vecs ++ copies): _*)
+    val q = df.where(col("vec_id") < 12)
+    val brute = Similarity.bruteForceTopK(q, df, 5).collect()
+      .map(x => (x.getLong(0), x.getInt(1), x.getLong(2), x.getDouble(3))).sorted
+    val ivf = Similarity.ivfTopK(q, df, 5, nLists = 8, nProbe = 8).collect()
+      .map(x => (x.getLong(0), x.getInt(1), x.getLong(2), x.getDouble(3))).sorted
+    // the same ranking computed on the driver: cosine desc, neighbor id asc,
+    // k per query, cosine rounded half-up to 6 places
+    val vs = (vecs ++ copies).toMap
+    def norm(a: Seq[Float]) = math.sqrt(a.map(x => x.toDouble * x.toDouble).sum)
+    def cos(a: Seq[Float], b: Seq[Float]) =
+      a.zip(b).map { case (x, y) => x.toDouble * y.toDouble }.sum / math.max(norm(a) * norm(b), 1e-12)
+    val expected = (0L until 12L).flatMap { qi =>
+      vs.toSeq.collect { case (id, v) if id != qi => (id, cos(vs(qi), v)) }
+        .sortBy { case (id, c) => (-c, id) }.take(5).zipWithIndex
+        .map { case ((id, c), i) =>
+          (qi, i + 1, id, BigDecimal(c).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble) }
+    }.sorted
+    assert(brute.toSeq == expected)
+    assert(ivf.toSeq == brute.toSeq)
+    // query 4's two copies rank first, lower id first
+    assert(brute.filter(_._1 == 4L).take(2).map(_._3).toSeq == Seq(80L, 81L))
   }
 
   test("RollingHash64 codegen matches the reference implementation") {

@@ -185,6 +185,10 @@ class PipelineSpec extends AnyFunSuite {
     assert(stages.map(_.stage) == Seq("extract", "s1_exact", "s1b_lines",
       "s2_neardup", "s2b_substr", "s2p_paras", "s3_decontam", "s4_quality",
       "s4d_domain", "s4r_redact", "s4s_sample", "s4c_chunk", "s5_pack"))
+    // every directory the run wrote is one `Main --no-resume` wipes
+    val written = Files.list(Paths.get(out)).iterator().asScala.map(_.getFileName.toString).toSeq
+    assert(written.toSet == (stages.map(_.stage) :+ "_pipeline").toSet, written)
+    assert(written.forall(Pipeline.OutputDirs.contains), written)
     val byName = stages.map(s => s.stage -> s).toMap
     // line stage: row-preserving unless a doc was ALL boilerplate
     assert(byName("s1b_lines").rows_out <= byName("s1b_lines").rows_in)

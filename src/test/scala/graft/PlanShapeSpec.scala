@@ -1,9 +1,10 @@
 package graft
 
-import graft.functions.{Dedup, Domains, Packing, TextAnalysis}
+import graft.functions.{Dedup, Domains, L2NormExpr, Packing, TextAnalysis}
 import org.apache.spark.ListenerBusBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.LeftSemi
 import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
@@ -100,6 +101,26 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     // one banding sweep plus the two candidate-only verify branches
     val sites = occurrences("minhash_with_shingles", fin)
     assert(sites >= 1 && sites <= 3, s"$sites minhash_with_shingles sites in:\n$fin")
+  }
+
+  test("embedding LSH evaluates l2_norm only above the candidate-id LeftSemi join") {
+    // 100 vectors, each of the last 20 a near copy of one of the first 20
+    val emb = table("embeddings", spark.range(100).selectExpr("id AS vec_id",
+      "transform(sequence(0, 15), i -> cast(sin((id % 80) * 7 + i * 3) + " +
+        "if(id >= 80, 0.01 * cos(id + i), 0.0) AS float)) AS embedding"))
+    val pairs = Dedup.embeddingNearDuplicatesLsh(emb, 0.9)
+    val plan = finalPlan(pairs)
+    assert(pairs.count() > 0)
+    val normSites = collectWithSubqueries(plan) {
+      case n if n.expressions.exists(_.exists(_.isInstanceOf[L2NormExpr])) => n
+    }
+    assert(normSites.nonEmpty, s"no l2_norm in:\n$plan")
+    // each norm projection reads the semi join's output: the norm is
+    // computed for candidate vectors only
+    normSites.foreach { n =>
+      val semi = n.collect { case j: BaseJoinExec if j.joinType == LeftSemi => j }
+      assert(semi.nonEmpty, s"l2_norm below or beside the candidate-id semi join:\n$plan")
+    }
   }
 
   // the second consumer of the corpus shuffle rides a ReusedExchange of the
