@@ -236,35 +236,6 @@ object Dedup {
     documents.join(losers, Seq("doc_id"), "left_anti")
   }
 
-  /** Connected-component labeling over a near-duplicate pair table
-    * `(a, b)` → `(doc_id, component)` where `component` is the minimum
-    * doc_id of the cluster. Greedy keep-first dedup ([[dropNearDuplicates]])
-    * under-merges chains (a~b, b~c but a!~b candidate-wise); component
-    * closure is the standard web-pipeline fix.
-    *
-    * Algorithm: min-label propagation WITH pointer jumping — each round
-    * first takes the min over neighbor labels, then shortcuts
-    * `label(v) := label(label(v))` TWICE, ~4x'ing the effective propagation
-    * distance: fixpoint in O(log diameter) rounds (a bare propagate-only
-    * loop needs O(diameter) rounds — measured 10x slower on this corpus's
-    * long near-dup chains). This is the shortcutting idea of the
-    * large-star/small-star MapReduce CC family.
-    *
-    * Cost discipline (VERDICT r02 #1 — the r02 version spent 44 s cold in
-    * the driver bench on a 25-edge graph, ~3 driver-synchronous jobs per
-    * round): each round is now exactly ONE Spark action. The round start
-    * label rides along as `old`, so the convergence check is a filter-count
-    * over the round's own output instead of a separate join+count job; the
-    * plan is truncated with a LAZY `localCheckpoint(false)` (LogicalRDD leaf
-    * — without truncation the self-referencing joins nest the plan ~4x per
-    * round and driver-side analysis goes exponential) whose materialization
-    * is paid inside that same convergence count, not by its own eager job.
-    * Identical repeated subtrees within the round (the jump feeds both sides
-    * of its own join) are deduplicated by Spark's exchange reuse. The driver
-    * only ever sees a COUNT; no row data is collected. Checkpoint blocks of
-    * superseded rounds are reclaimed by the ContextCleaner once the loop
-    * drops its references.
-    */
   /** Symmetric deduplicated edge set of a pair table. Single-pass (r07): the
     * former two-select union evaluated the ENTIRE pair plan twice — for the
     * exact-Jaccard source that was 2× of a 20+-scan candidate plan, the
@@ -343,6 +314,35 @@ object Dedup {
     }
   }
 
+  /** Connected-component labeling over a near-duplicate pair table
+    * `(a, b)` → `(doc_id, component)` where `component` is the minimum
+    * doc_id of the cluster. Greedy keep-first dedup ([[dropNearDuplicates]])
+    * under-merges chains (a~b, b~c but a!~b candidate-wise); component
+    * closure is the standard web-pipeline fix.
+    *
+    * Algorithm: min-label propagation WITH pointer jumping — each round
+    * first takes the min over neighbor labels, then shortcuts
+    * `label(v) := label(label(v))` TWICE, ~4x'ing the effective propagation
+    * distance: fixpoint in O(log diameter) rounds (a bare propagate-only
+    * loop needs O(diameter) rounds — measured 10x slower on this corpus's
+    * long near-dup chains). This is the shortcutting idea of the
+    * large-star/small-star MapReduce CC family.
+    *
+    * Cost discipline (VERDICT r02 #1 — the r02 version spent 44 s cold in
+    * the driver bench on a 25-edge graph, ~3 driver-synchronous jobs per
+    * round): each round is now exactly ONE Spark action. The round start
+    * label rides along as `old`, so the convergence check is a filter-count
+    * over the round's own output instead of a separate join+count job; the
+    * plan is truncated with a LAZY `localCheckpoint(false)` (LogicalRDD leaf
+    * — without truncation the self-referencing joins nest the plan ~4x per
+    * round and driver-side analysis goes exponential) whose materialization
+    * is paid inside that same convergence count, not by its own eager job.
+    * Identical repeated subtrees within the round (the jump feeds both sides
+    * of its own join) are deduplicated by Spark's exchange reuse. The driver
+    * only ever sees a COUNT; no row data is collected. Checkpoint blocks of
+    * superseded rounds are reclaimed by the ContextCleaner once the loop
+    * drops its references.
+    */
   def connectedComponents(pairs: DataFrame,
                           smallGraphEdges: Long = SmallGraphEdges): DataFrame = {
     val spark = pairs.sparkSession
@@ -402,14 +402,6 @@ object Dedup {
     }
   }
 
-  /** Production composition: component closure over MinHash-LSH candidate
-    * pairs. Unlike [[dropNearDuplicatesCC]]'s exact-Jaccard pair source,
-    * LSH candidacy does NOT depend on shingle document frequency, so LARGE
-    * duplicate clusters (boilerplate pages copied thousands of times — the
-    * primary web-dedup target, where every shingle's df equals the cluster
-    * size and a df-cap would hide them) are still found and collapsed to one
-    * representative. Not SQL-oracle-able (hash-dependent); recall is
-    * spec-tested with planted clusters. */
   /** Shared closure-drop step: collapse each near-dup component of the pair
     * table to its min-id representative — keep-min semantics live HERE, in
     * one place, for every pair source (MinHash-LSH, exact Jaccard, SimHash). */
@@ -419,6 +411,14 @@ object Dedup {
     documents.join(losers, Seq("doc_id"), "left_anti")
   }
 
+  /** Production composition: component closure over MinHash-LSH candidate
+    * pairs. Unlike [[dropNearDuplicatesCC]]'s exact-Jaccard pair source,
+    * LSH candidacy does NOT depend on shingle document frequency, so LARGE
+    * duplicate clusters (boilerplate pages copied thousands of times — the
+    * primary web-dedup target, where every shingle's df equals the cluster
+    * size and a df-cap would hide them) are still found and collapsed to one
+    * representative. Not SQL-oracle-able (hash-dependent); recall is
+    * spec-tested with planted clusters. */
   def dropNearDuplicatesCCLsh(documents: DataFrame, threshold: Double = 0.8,
                               ngram: Int = 3, maxBandBucket: Int = 1024): DataFrame =
     dropByComponents(documents, minHashNearDuplicates(documents, threshold,

@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Domain-level corpus balancing — the crawl-pipeline operator family that
@@ -20,13 +19,10 @@ object Domains {
     * over-cap domain (the C4-style mega-domain defense). Hash priority, not
     * arrival order: membership is a pure function of the key, so it is
     * stable under retries, resume, and re-partitioning, exactly like
-    * [[TextAnalysis.sampleStratified]]'s split. The priority hash is SALTED
-    * with a stage tag: unsalted, the cap keeps precisely the LOW-md5 docs
-    * of each domain, and any later stage that selects by the same hash of
-    * the same key (the stratified sampler's keep predicate) is then fully
-    * correlated with the cap instead of independent of it — observed as a
-    * 0.4-fraction sample keeping 16/16 cap survivors. Docs with a NULL domain are
-    * never capped (unattributable provenance passes through — the same
+    * [[TextAnalysis.sampleStratified]]'s split. The priority hash is salted
+    * `:domain-cap` ([[TextAnalysis.saltedHash]] says why every hash-selection
+    * stage salts its own). Docs with a NULL domain are never capped
+    * (unattributable provenance passes through — the same
     * unscorable-rows-pass contract as the dedup drops).
     *
     * Scale design (the point — a viral domain can hold 10^9 docs):
@@ -35,14 +31,11 @@ object Domains {
     *     broadcasts.
     *  2. Docs of under-cap domains pass through a broadcast LEFT ANTI join:
     *     the corpus bulk is never shuffled at all.
-    *  3. Over-cap docs ship ONLY (key, domain, priority) through ONE
-    *     range-partition shuffle on (domain, priority, key), so a
-    *     mega-domain SPANS partitions instead of landing in one hot window
-    *     partition — the same exact-rank-over-ranges machinery as
-    *     [[Packing.qualityTopFraction]]'s concentrated route. Local ranks
-    *     within (partition, domain) plus per-(partition, domain) coarse
-    *     offsets (a ≤ partitions × hot-domains aggregate, broadcast)
-    *     reconstruct the exact global per-domain rank.
+    *  3. Over-cap docs ship ONLY (key, domain, priority) through
+    *     [[Packing.keepRanked]] grouped by domain and ordered by (priority,
+    *     key): its range-partition shuffle makes a mega-domain SPAN
+    *     partitions instead of landing in one hot window partition, and it
+    *     returns the exact per-domain top `cap`.
     *  4. The kept keys semi-join back to the full rows (≤ cap × hot-domains
     *     keys; AQE broadcasts when small).
     */
@@ -61,30 +54,11 @@ object Domains {
     val hotDocs = df.join(broadcast(hot), domain === col("d"), "left_semi")
     // narrow projection through the only corpus-sized shuffle
     val pri = hotDocs.select(col(keyCol).as("k_key"), domain.as("k_dom"),
-      md5(concat(col(keyCol).cast("string"), lit(":domain-cap"))).as("k_pri"))
-    // rank within (pid, domain): bounded by the RANGE partition size, never
-    // by the domain size. Persisted because the kept-key plan consumes it
-    // twice (rank rows + coarse offsets) and column pruning de-canonicalizes
-    // the two subtrees past exchange reuse — same disease the d_minhash
-    // banding rework fixed; unpersisted before return (the kept keys are
-    // materialized eagerly below, so the cache cannot outlive the call)
-    val local = pri.repartitionByRange(col("k_dom"), col("k_pri"), col("k_key"))
-      .withColumn("pid", spark_partition_id())
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("pid"), col("k_dom"))
-          .orderBy(col("k_pri"), col("k_key"))).cast("long"))
-      .persist()
-    val coarse = Window.partitionBy(col("k_dom")).orderBy(col("pid"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = local.groupBy(col("pid"), col("k_dom")).agg(count(lit(1)).as("pcnt"))
-      .withColumn("poff", coalesce(sum(col("pcnt")).over(coarse), lit(0L)))
-      .select(col("pid"), col("k_dom"), col("poff"))
-    // ≤ cap × hot-domains keys, eager (frees `local` and breaks the
-    // duplicated rank subtree out of the final union's plan)
-    val keptKeys = local.join(broadcast(offsets), Seq("pid", "k_dom"))
-      .where(col("poff") + col("rn") <= cap)
-      .select(col("k_key")).localCheckpoint(true)
-    local.unpersist(false)
+      TextAnalysis.saltedHash(col(keyCol), ":domain-cap").as("k_pri"))
+    // ≤ cap × hot-domains rows, eager (keepRanked checkpoints them, which
+    // keeps the duplicated rank subtree out of the final union's plan)
+    val keptKeys = Packing.keepRanked(pri, Seq("k_dom"),
+      Seq(col("k_pri"), col("k_key")), cap).select(col("k_key"))
     val keptHot = hotDocs.join(keptKeys, col(keyCol) === col("k_key"), "left_semi")
     cold.unionByName(keptHot)
   }
@@ -101,11 +75,8 @@ object Domains {
     * key (stable under retries/resume/repartitioning). Domains absent from
     * `targets` are excluded — a mixer defines the whole mix, unlike the
     * cap/sample operators whose untargeted rows pass through. The priority
-    * hash is salted (`:token-mix`) for independence from the cap's
-    * `:domain-cap` hash and the stratified sampler's unsalted hash — two
-    * stages selecting by the same hash of the same key are fully
-    * correlated, not independent (the bug class the cap's Scaladoc
-    * documents).
+    * hash is salted `:token-mix`, independent of every other hash-selection
+    * stage ([[TextAnalysis.saltedHash]]).
     *
     * Plan shape at 100 TB (two scans, which is the floor — the keep
     * fraction depends on a global per-domain aggregate):
@@ -128,35 +99,15 @@ object Domains {
                      keyCol: String = "doc_id",
                      tokenCount: Column => Column =
                        TextAnalysis.tokenCount(_).cast("long")): DataFrame = {
-    require(budgetTokens >= 0, s"budgetTokens must be >= 0, got $budgetTokens")
-    require(targets.nonEmpty, "targets must be non-empty")
-    targets.foreach { case (d, s) =>
-      require(s > 0.0 && s <= 1.0, s"share for domain '$d' must be in (0,1], got $s") }
-    val shareSum = targets.values.sum
-    require(shareSum <= 1.0 + 1e-9, s"target shares sum to $shareSum > 1")
-    val domain = col(domainCol)
-    val targeted = df.where(domain.isin(targets.keys.toSeq: _*))
-    // pass 1: actual token mass per target domain (|targets| rows)
-    val sums = targeted
-      .groupBy(domain.as("mx_dom"))
-      .agg(sum(tokenCount(col("text"))).as("mx_actual"))
-    // share lookup as a literal CASE chain (targets is an explicit API map,
-    // driver-small by construction)
-    val share = targets.foldLeft(lit(null).cast("double")) {
-      case (acc, (d, s)) => when(col("mx_dom") === d, lit(s)).otherwise(acc)
-    }
     // floor, not round: floor() is bit-identical across engines while
     // round() half-way semantics differ (Spark HALF_UP vs DuckDB's banker-
     // leaning doubles) — the oracle compares hashes, not approximations
-    val thresholds = sums
+    val thresholds = domainMass(df, domainCol, targets, budgetTokens, tokenCount)
       .withColumn("mx_bucket",
-        floor(least(lit(1.0), share * lit(budgetTokens.toDouble) /
-          col("mx_actual").cast("double")) * lit(65536.0)).cast("long"))
+        floor(least(lit(1.0), col("mx_q")) * lit(65536.0)).cast("long"))
       .select(col("mx_dom"), col("mx_bucket"))
-    df.join(broadcast(thresholds), domain === col("mx_dom"))
-      .where(col("mx_bucket") >= 65536 ||
-        substring(md5(concat(col(keyCol).cast("string"), lit(":token-mix"))), 1, 4) <
-          format_string("%04x", col("mx_bucket")))
+    df.join(broadcast(thresholds), col(domainCol) === col("mx_dom"))
+      .where(TextAnalysis.inHashBuckets(col(keyCol), ":token-mix", col("mx_bucket")))
       .drop("mx_dom", "mx_bucket")
   }
 
@@ -173,7 +124,7 @@ object Domains {
     * with every kept doc at epoch 0. The output adds an `epoch` int column
     * (training shards key on it); untargeted domains drop as in the plain
     * mixer. The remainder sample is salted `:mix-epoch`, independent of
-    * every other hash-selection stage.
+    * every other hash-selection stage ([[TextAnalysis.saltedHash]]).
     *
     * Plan shape: identical to [[tokenBudgetMix]] (one narrow aggregate
     * pass, |targets|-row broadcast back, corpus never shuffles) — the
@@ -189,26 +140,10 @@ object Domains {
                            keyCol: String = "doc_id", maxEpochs: Int = 50,
                            tokenCount: Column => Column =
                              TextAnalysis.tokenCount(_).cast("long")): DataFrame = {
-    require(budgetTokens >= 0, s"budgetTokens must be >= 0, got $budgetTokens")
     require(maxEpochs >= 1, s"maxEpochs must be >= 1, got $maxEpochs")
-    require(targets.nonEmpty, "targets must be non-empty")
-    targets.foreach { case (d, s) =>
-      require(s > 0.0 && s <= 1.0, s"share for domain '$d' must be in (0,1], got $s") }
-    require(targets.values.sum <= 1.0 + 1e-9,
-      s"target shares sum to ${targets.values.sum} > 1")
-    val domain = col(domainCol)
-    val targeted = df.where(domain.isin(targets.keys.toSeq: _*))
-    val sums = targeted
-      .groupBy(domain.as("mx_dom"))
-      .agg(sum(tokenCount(col("text"))).as("mx_actual"))
-    val share = targets.foldLeft(lit(null).cast("double")) {
-      case (acc, (d, s)) => when(col("mx_dom") === d, lit(s)).otherwise(acc)
-    }
-    // guards ordered so q (division by actual, possibly ±Inf) only reaches
-    // floor — an ANSI-mode overflow error on Inf — in the finite branch
-    val thresholds = sums
-      .withColumn("mx_q", share * lit(budgetTokens.toDouble) /
-        col("mx_actual").cast("double"))
+    // the actual = 0 guard comes first: there q is null, and the null
+    // mx_full of the other branches would drop the domain's docs
+    val thresholds = domainMass(df, domainCol, targets, budgetTokens, tokenCount)
       .withColumn("mx_full",
         when(col("mx_actual") === 0, lit(0L))
           .when(col("mx_q") >= maxEpochs, lit(maxEpochs.toLong))
@@ -219,12 +154,41 @@ object Domains {
           .otherwise(floor((col("mx_q") - floor(col("mx_q")).cast("double")) *
             lit(65536.0))))
       .select(col("mx_dom"), col("mx_full"), col("mx_bucket"))
-    df.join(broadcast(thresholds), domain === col("mx_dom"))
+    df.join(broadcast(thresholds), col(domainCol) === col("mx_dom"))
       .withColumn("epoch", explode(sequence(lit(0L), col("mx_full"))))
-      .where(col("epoch") < col("mx_full") || col("mx_bucket") >= 65536 ||
-        substring(md5(concat(col(keyCol).cast("string"), lit(":mix-epoch"))), 1, 4) <
-          format_string("%04x", col("mx_bucket")))
+      .where(col("epoch") < col("mx_full") ||
+        TextAnalysis.inHashBuckets(col(keyCol), ":mix-epoch", col("mx_bucket")))
       .withColumn("epoch", col("epoch").cast("int"))
       .drop("mx_dom", "mx_full", "mx_bucket")
+  }
+
+  /** What both mixers share: the argument checks, the target filter and
+    * pass 1 — the actual token mass per target domain, `(mx_dom,
+    * mx_actual)`, |targets| rows — plus each domain's ratio of wanted to
+    * actual mass, `mx_q = share × budget / actual` (null when actual is 0). */
+  private def domainMass(df: DataFrame, domainCol: String,
+                         targets: Map[String, Double], budgetTokens: Long,
+                         tokenCount: Column => Column): DataFrame = {
+    require(budgetTokens >= 0, s"budgetTokens must be >= 0, got $budgetTokens")
+    require(targets.nonEmpty, "targets must be non-empty")
+    targets.foreach { case (d, s) =>
+      require(s > 0.0 && s <= 1.0, s"share for domain '$d' must be in (0,1], got $s") }
+    val shareSum = targets.values.sum
+    require(shareSum <= 1.0 + 1e-9, s"target shares sum to $shareSum > 1")
+    val domain = col(domainCol)
+    // pass 1: actual token mass per target domain (|targets| rows)
+    val sums = df.where(domain.isin(targets.keys.toSeq: _*))
+      .groupBy(domain.as("mx_dom"))
+      .agg(sum(tokenCount(col("text"))).as("mx_actual"))
+    // share lookup as a literal CASE chain (targets is an explicit API map,
+    // driver-small by construction)
+    val share = targets.foldLeft(lit(null).cast("double")) {
+      case (acc, (d, s)) => when(col("mx_dom") === d, lit(s)).otherwise(acc)
+    }
+    // try_divide: a targeted domain whose text is all blank has mx_actual
+    // 0, and ANSI division by zero throws; its null mx_q makes both mixers
+    // keep the domain whole, once (0 tokens are under any want)
+    sums.withColumn("mx_q",
+      try_divide(share * lit(budgetTokens.toDouble), col("mx_actual").cast("double")))
   }
 }

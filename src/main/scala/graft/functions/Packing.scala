@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -17,6 +17,8 @@ import org.apache.spark.sql.functions._
   * per bucket (a few hundred rows), prefix-scan THAT tiny table on a single
   * partition (trivial), and broadcast-join the bucket offsets back. The only
   * single-partition work is over the bucket aggregate, never the corpus.
+  * [[keepRanked]] is the same pattern with range partitions as the buckets,
+  * per group; [[Domains.domainFrequencyCap]] ranks each domain with it.
   */
 object Packing {
 
@@ -120,35 +122,15 @@ object Packing {
     *    parallel, ties can't cross a bucket boundary.
     *  - concentrated histogram (constant-quality corpora are real: all-empty
     *    or boilerplate-heavy shards collapse to one bucket, which would
-    *    degrade the bucket window to a single mega-partition): rank =
-    *    per-partition offset + row_number within a RANGE-partitioned sort.
-    *    `repartitionByRange` samples BOTH sort keys, so even a single
-    *    quality value splits evenly on the doc_id tie-break — no partition
-    *    ever holds the corpus (asserted by the pathological-corpus spec).
-    *    The partition-offset prefix scan runs over ≤ shuffle-partitions
-    *    rows (the same benign coarse-window pattern as [[packSequences]]).
+    *    degrade the bucket window to a single mega-partition) or an empty
+    *    one (all text null): the exact global rank of [[keepRanked]] with no
+    *    group.
+    *
+    * The spread route stays on the histogram instead of [[keepRanked]]: on
+    * the benchmark's pipeline the range partitioner's sampling job plus the
+    * offsets broadcast cost more than collecting the 101-row histogram.
     */
   def qualityTopFraction(documents: DataFrame, keepFrac: Double): DataFrame = {
-    val (q, out) = qualityTopFractionPlan(documents, keepFrac)
-    // Cache lifetime (ADVICE r05): the kept set is materialized EAGERLY —
-    // narrow (doc_id, quality) rows into local-checkpoint blocks, freed by
-    // the ContextCleaner when the returned frame is dropped — so the
-    // corpus-sized quality cache can be unpersisted HERE instead of leaking
-    // for the session (every path, empty included). Same
-    // materialize-inside / clean-up-before-return convention as
-    // [[Dedup.connectedComponents]]; [[qualityTopFractionPlan]] exposes the
-    // pre-checkpoint plan for inspection.
-    val res = out.localCheckpoint(true)
-    q.unpersist(false)
-    res
-  }
-
-  /** The lazy plan behind [[qualityTopFraction]]: returns (the persisted
-    * quality projection — caller MUST unpersist it, the kept-set plan that
-    * reads it). Package-private so the plan audit can explain the real
-    * route shapes without the checkpoint truncating them. */
-  private[graft] def qualityTopFractionPlan(documents: DataFrame,
-                                            keepFrac: Double): (DataFrame, DataFrame) = {
     require(keepFrac >= 0.0 && keepFrac <= 1.0,
       s"keepFrac must be in [0, 1], got $keepFrac")
     val spark = documents.sparkSession
@@ -166,43 +148,85 @@ object Packing {
         TextAnalysis.qualityScore(col("text")).as("quality"))
       .withColumn("bucket", floor(col("quality") * 100).cast("int"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val hist = q.groupBy(col("bucket")).agg(count(lit(1)).as("bcnt"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(-_._1)
-    val total = hist.map(_._2).sum
-    if (total == 0) return (q, q.where(lit(false)).select(col("doc_id"), col("quality")))
-    val k = math.floor(total * keepFrac).toLong
-    val maxShare = hist.map(_._2).max.toDouble / total
-    if (maxShare <= 0.5) {
-      // spread: bucket-partitioned window + literal offsets (broadcast of a
-      // ≤101-row local table)
-      // exclusive prefix sum in quality-desc order: scanLeft yields the
-      // cumulative count BEFORE each bucket (element i of the scan is the
-      // sum of the first i counts), which is exactly that bucket's offset
-      val offsets = hist.scanLeft(0L) { case (acc, (_, c)) => acc + c }
-        .zip(hist).map { case (boff, (b, _)) => (b, boff) }
-      val offDf = broadcast(offsets.toSeq.toDF("bucket", "boff"))
-      val inBucket = Window.partitionBy(col("bucket"))
-        .orderBy(col("quality").desc, col("doc_id"))
-      (q, q.withColumn("rn", row_number().over(inBucket).cast("long"))
-        .join(offDf, Seq("bucket"))
-        .where(col("boff") + col("rn") <= k)
-        .select(col("doc_id"), col("quality")))
-    } else {
-      // concentrated: exact rank over a range-partitioned sort (see scaladoc)
-      val ranged = q.repartitionByRange(col("quality").desc, col("doc_id"))
-        .withColumn("pid", spark_partition_id())
-      val inPart = Window.partitionBy(col("pid"))
-        .orderBy(col("quality").desc, col("doc_id"))
-      val local = ranged.withColumn("rn", row_number().over(inPart).cast("long"))
-      val pidCounts = local.groupBy(col("pid")).agg(max(col("rn")).as("pcnt"))
-      val coarse = Window.orderBy(col("pid")).rowsBetween(Window.unboundedPreceding, -1)
-      val offsets = pidCounts
+    // Cache lifetime (ADVICE r05): the kept set is materialized EAGERLY —
+    // narrow (doc_id, quality) rows into local-checkpoint blocks, freed by
+    // the ContextCleaner when the returned frame is dropped — so the
+    // corpus-sized quality cache can be unpersisted HERE instead of leaking
+    // for the session (every path, empty and failed included). Same
+    // materialize-inside / clean-up-before-return convention as
+    // [[Dedup.connectedComponents]].
+    try {
+      val hist = q.groupBy(col("bucket")).agg(count(lit(1)).as("bcnt"))
+        .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(-_._1)
+      val total = hist.map(_._2).sum
+      val k = math.floor(total * keepFrac).toLong
+      if (total == 0 || hist.map(_._2).max.toDouble / total > 0.5) {
+        // concentrated or empty: the exact range rank (see scaladoc)
+        keepRanked(q.select(col("doc_id"), col("quality")), Nil,
+          Seq(col("quality").desc, col("doc_id")), k)
+      } else {
+        // spread: bucket-partitioned window + literal offsets (broadcast of a
+        // ≤101-row local table)
+        // exclusive prefix sum in quality-desc order: scanLeft yields the
+        // cumulative count BEFORE each bucket (element i of the scan is the
+        // sum of the first i counts), which is exactly that bucket's offset
+        val offsets = hist.scanLeft(0L) { case (acc, (_, c)) => acc + c }
+          .zip(hist).map { case (boff, (b, _)) => (b, boff) }
+        val offDf = broadcast(offsets.toSeq.toDF("bucket", "boff"))
+        val inBucket = Window.partitionBy(col("bucket"))
+          .orderBy(col("quality").desc, col("doc_id"))
+        q.withColumn("rn", row_number().over(inBucket).cast("long"))
+          .join(offDf, Seq("bucket"))
+          .where(col("boff") + col("rn") <= k)
+          .select(col("doc_id"), col("quality"))
+          .localCheckpoint(true)
+      }
+    } finally q.unpersist(false)
+  }
+
+  /** The exact distributed rank: the rows of `df` with
+    * `row_number() OVER (PARTITION BY group ORDER BY order) <= keep`.
+    * `group` may be empty (one global rank). No window partition ever holds
+    * a whole group, whatever its size:
+    *  1. ONE range-partition shuffle on `group ++ order`. The range
+    *     partitioner samples every sort key, so a group that holds the
+    *     corpus — even one with a single leading order value — splits across
+    *     partitions on the later keys (asserted by the pathological-corpus
+    *     spec).
+    *  2. `row_number` within (partition, group): bounded by the range
+    *     partition's size, never by the group's.
+    *  3. Per-(partition, group) counts, prefix-summed over partitions in
+    *     partition order (a ≤ partitions × groups aggregate — the same
+    *     benign coarse window as [[packSequences]]) and broadcast: offset +
+    *     local rank is the exact rank within the group.
+    * The ranked rows are persisted because the kept-row plan consumes them
+    * twice (rank rows + coarse offsets) and column pruning de-canonicalizes
+    * the two subtrees past exchange reuse — same disease the d_minhash
+    * banding rework fixed. The kept rows (`df`'s columns) are
+    * local-checkpointed EAGERLY, which frees the persist before return and
+    * breaks the duplicated rank subtree out of the caller's plan. `df` must
+    * not have columns named `pid`, `rn`, `pcnt` or `poff`.
+    */
+  private[graft] def keepRanked(df: DataFrame, group: Seq[String],
+                                order: Seq[Column], keep: Long): DataFrame = {
+    val groupCols = group.map(col)
+    val local = df.repartitionByRange((groupCols ++ order): _*)
+      .withColumn("pid", spark_partition_id())
+      .withColumn("rn", row_number().over(
+        Window.partitionBy((col("pid") +: groupCols): _*).orderBy(order: _*)).cast("long"))
+      .persist()
+    try {
+      val coarse = Window.partitionBy(groupCols: _*).orderBy(col("pid"))
+        .rowsBetween(Window.unboundedPreceding, -1)
+      val offsets = local.groupBy((col("pid") +: groupCols): _*)
+        .agg(count(lit(1)).as("pcnt"))
         .withColumn("poff", coalesce(sum(col("pcnt")).over(coarse), lit(0L)))
-        .select(col("pid"), col("poff"))
-      (q, local.join(broadcast(offsets), Seq("pid"))
-        .where(col("poff") + col("rn") <= k)
-        .select(col("doc_id"), col("quality")))
-    }
+        .select((col("pid") +: groupCols :+ col("poff")): _*)
+      local.join(broadcast(offsets), "pid" +: group)
+        .where(col("poff") + col("rn") <= keep)
+        .select(df.columns.toSeq.map(col): _*)
+        .localCheckpoint(true)
+    } finally local.unpersist(false)
   }
 
   /** Context-window chunking: split each document's token stream into

@@ -158,15 +158,6 @@ object TextAnalysis {
       keep.as("keep"))
   }
 
-  /** Character n-gram shingles (distinct) of the normalized text — the
-    * MinHash/Jaccard dedup input. Pure HOF: sequence + substr, no UDF. */
-  def charShingles(text: Column, n: Int): Column = {
-    val norm = normalized(text)
-    array_distinct(transform(
-      sequence(lit(1), greatest(length(norm) - (n - 1), lit(1))),
-      i => norm.substr(i, lit(n))))
-  }
-
   /** Word n-gram shingles (distinct) — token-level Jaccard input. */
   def wordShingles(text: Column, n: Int): Column = {
     val toks = split(normalized(text), " ")
@@ -205,9 +196,10 @@ object TextAnalysis {
   }
 
   /** Deterministic hash-sampling predicate: keep a row iff the first 4 hex
-    * digits of `md5(key)` fall below `fraction * 65536`. Properties a 100 TB
-    * pipeline needs that `df.sample()` lacks: (a) stable under any
-    * partitioning, retries, and re-runs (a document is in or out forever —
+    * digits of `md5(key)` fall below `fraction * 65536` (the unsalted
+    * [[inHashBuckets]] rule). Properties a 100 TB pipeline needs that
+    * `df.sample()` lacks: (a) stable under any partitioning, retries, and
+    * re-runs (a document is in or out forever —
     * resumable jobs must not resample); (b) engine-portable (md5 hex is
     * identical everywhere, so downstream systems can reproduce the split);
     * (c) a pure codegen predicate evaluated in the scan's whole-stage-codegen
@@ -216,15 +208,45 @@ object TextAnalysis {
     * is re-read often). */
   def sampleHash(key: Column, fraction: Double): Column = {
     require(fraction >= 0.0 && fraction <= 1.0, s"fraction=$fraction")
-    // 4 hex digits = 65536 buckets; hex strings of equal length sort
-    // lexicographically in numeric order, so `< threshold` keeps exactly
-    // `buckets` of them. Guard on the ROUNDED bucket count: a fraction like
-    // 0.999995 also rounds to 65536, whose %04x rendering would be the
-    // 5-char string "10000" and break the equal-length comparison.
-    val buckets = math.round(fraction * 65536)
-    if (buckets >= 65536) lit(true)
-    else substring(md5(key.cast("string")), 1, 4) < lit(f"$buckets%04x")
+    // the ROUNDED bucket count goes through the rule's keep-all guard: a
+    // fraction like 0.999995 also rounds to 65536
+    inHashBuckets(key, "", lit(math.round(fraction * 65536)))
   }
+
+  /** The one salted-hash rule behind every hash-selection stage: a stage
+    * hashes its key as `md5(cast(key as string) || salt)`, and
+    * [[inHashBuckets]] keeps a row iff the first 4 hex digits of that hash
+    * fall below `buckets` of 65536. Membership is then a pure function of
+    * the key, and md5 hex is identical on every engine, so the DuckDB
+    * oracles hash the same strings.
+    *
+    * Why each stage has its own salt: two stages that select by the SAME
+    * hash of the same key are fully correlated, not independent. Unsalted,
+    * the domain cap keeps precisely the LOW-md5 docs of each domain, and the
+    * stratified sampler's keep predicate then keeps all of them (observed as
+    * a 0.4-fraction sample keeping 16/16 cap survivors); an unsalted split
+    * would likewise make "test" the sampler's drop set. The salts:
+    *  - `""`: [[sampleHash]] and [[sampleStratified]] (the packing order key
+    *    of [[Packing.packSequences]] is the same unsalted md5);
+    *  - `"|split"`: [[assignSplit]];
+    *  - `":domain-cap"`: the priority of [[Domains.domainFrequencyCap]]
+    *    (the whole hash, as a sort key);
+    *  - `":token-mix"`: [[Domains.tokenBudgetMix]];
+    *  - `":mix-epoch"`: the remainder epoch of
+    *    [[Domains.tokenBudgetMixEpochs]].
+    * A salt is part of its operator's output contract: changing one moves
+    * every row that stage selects. */
+  private[functions] def saltedHash(key: Column, salt: String): Column =
+    md5(concat(key.cast("string"), lit(salt)))
+
+  /** Keep iff the 4-hex-digit prefix of [[saltedHash]] is below `buckets`:
+    * hex strings of equal length sort lexicographically in numeric order,
+    * so the compare keeps exactly `buckets` of the 65536. `buckets` ≥ 65536
+    * keeps everything: its %04x rendering would be the 5-char "10000" and
+    * break the equal-length compare. A literal `buckets` constant-folds. */
+  private[functions] def inHashBuckets(key: Column, salt: String, buckets: Column): Column =
+    buckets >= 65536 ||
+      substring(saltedHash(key, salt), 1, 4) < format_string("%04x", buckets)
 
   /** Stratified deterministic downsampling: per-stratum keep fractions
     * (e.g. cap the dominant language while keeping the long tail whole) —
@@ -249,12 +271,10 @@ object TextAnalysis {
     * does not give: stable under retries/resume/reshuffling (a doc's split
     * is a pure function of its id), disjoint and exhaustive by
     * construction, and new data lands in splits at the same proportions
-    * without moving any existing row. The hash is SALTED ("|split") so
-    * membership is independent of the sampler keep-predicate and the
-    * packing order key, which hash the same ids (the same-hash-correlation
-    * trap: unsalted, "test" would correlate with the sampler's drop set).
-    * One scan, zero shuffle, pure codegen predicate. Weights must sum to 1
-    * (±1e-9); the last split absorbs the rounding remainder buckets. */
+    * without moving any existing row. The hash is salted `"|split"` (see
+    * [[saltedHash]]). One scan, zero shuffle, pure codegen predicate.
+    * Weights must sum to 1 (±1e-9); the last split absorbs the rounding
+    * remainder buckets. */
   def assignSplit(df: DataFrame, weights: Seq[(String, Double)],
                   keyCol: String = "doc_id"): DataFrame = {
     require(weights.nonEmpty && weights.forall(_._2 >= 0.0),
@@ -263,15 +283,11 @@ object TextAnalysis {
       s"weights must sum to 1, got ${weights.map(_._2).sum}")
     require(weights.map(_._1).distinct.size == weights.size,
       s"duplicate split names: $weights")
-    val h = substring(md5(concat(col(keyCol).cast("string"), lit("|split"))), 1, 4)
     val ends = weights.map(_._2).scanLeft(0.0)(_ + _).tail
       .map(c => math.min(math.round(c * 65536).toInt, 65536))
     val label = weights.zip(ends).init.foldRight(lit(weights.last._1): Column) {
-      // same %04x equal-length guard as sampleHash: a cumulative end of
-      // 65536 renders as the 5-char "10000" and would break the compare
       case (((name, _), end), acc) =>
-        val hit = if (end >= 65536) lit(true) else h < lit(f"$end%04x")
-        when(hit, lit(name)).otherwise(acc)
+        when(inHashBuckets(col(keyCol), "|split", lit(end)), lit(name)).otherwise(acc)
     }
     // a null key hashes to null, every threshold compare is null-false, and
     // the row would silently land in the LAST split — label it null instead

@@ -35,18 +35,6 @@ object Grammar {
     }.toMap
   }
 
-  /** Split a `p` payload into (attrs, tokens). The attrs segment, if present,
-    * must be the first `|`-segment and start with `@`.
-    */
-  def parseParagraph(text: String): (Map[String, String], Seq[String]) = {
-    if (text == null || text.isEmpty) (Map.empty, Nil)
-    else {
-      val segs = text.split('|').toSeq
-      if (segs.head.startsWith("@")) (parseAttrs(segs.head), segs.tail.filter(_.nonEmpty))
-      else (Map.empty, segs.filter(_.nonEmpty))
-    }
-  }
-
   /** Render attrs + tokens back into a `p` payload (corpus generator side). */
   def renderParagraph(attrs: Seq[(String, String)], tokens: Seq[String]): String = {
     val a = if (attrs.isEmpty) Nil

@@ -396,11 +396,6 @@ object Extractor {
     sb.toString.strip()
   }
 
-  /** Token-sequence form (corpus/test convenience); delegates to the
-    * index-scanning fold for single semantics. */
-  private[graft] def foldRuns(tokens: Seq[String], ctx: Ctx): String =
-    foldPayload(tokens.mkString("|"), 0, ctx)
-
   /** DOCPROPERTY field-code parse — faithful to `IsDocPropertyField` +
     * `ParseDocPropertyField` (`WordDocumentTreeParser.cs:630-675`):
     *  - detection is a PREFIX test on the trimmed code

@@ -69,11 +69,6 @@ object SpanQueries {
       .groupBy(col("s.kind").as("kind")).agg(count(lit(1)).as("n"))
       .select(col("kind"), col("n"))
 
-  /** Per-document kind histogram without exploding: aggregate HOF per row. */
-  def countByKindPerDoc(docs: DataFrame, kind: String): DataFrame =
-    docs.select(col("doc_id"),
-      size(filter(col("spans"), s => s.getField("kind") === kind)).as("n"))
-
   // ------------------------------------------------------------------- A5
 
   /** `GetTableOfContents()` (`TreeQueryExtensions.cs:75-76`): all headings

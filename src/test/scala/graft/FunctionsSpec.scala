@@ -345,6 +345,22 @@ class FunctionsSpec extends AnyFunSuite {
     assert(small.nonEmpty && small.forall(_ == 0))
   }
 
+  test("token-budget mixers keep a targeted zero-token domain whole instead of dividing by zero") {
+    import graft.functions.Domains
+    import spark.implicits._
+    // domZ's text is all blank: its token mass is 0, under any want
+    val df = Seq((1L, "domZ", ""), (2L, "domZ", "  "), (3L, "domA", "a b c d"))
+      .toDF("doc_id", "dom", "text")
+    val targets = Map("domZ" -> 0.5, "domA" -> 0.5)
+    val mixed = Domains.tokenBudgetMix(df, "dom", targets, 100)
+      .collect().map(_.getLong(0)).toSet
+    assert(mixed == Set(1L, 2L, 3L)) // domA: want 50 > 4 tokens, kept whole too
+    val epochs = Domains.tokenBudgetMixEpochs(df, "dom", targets, 100, maxEpochs = 5)
+      .where(col("dom") === "domZ").select("doc_id", "epoch").collect()
+      .map(r => (r.getLong(0), r.getInt(1))).toSet
+    assert(epochs == Set((1L, 0), (2L, 0)))
+  }
+
   test("exact-substring dedup: copies drop, shared blocks strip from non-canonical docs, short/null pass") {
     val a = (1 to 20).map(i => s"a$i").mkString(" ")           // canonical content
     val cUnique = "c1 c2 " + (1 to 10).map(i => s"a$i").mkString(" ") + " c3"
@@ -686,6 +702,51 @@ class FunctionsSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getDouble(1))
     val expect = all.sortBy { case (id, qq) => (-qq, id) }.take((0.8 * all.length).toInt).toMap
     assert(got == expect)
+  }
+
+  test("keepRanked equals row_number per group, also for a tied group spread over range partitions") {
+    import graft.functions.Packing
+    import org.apache.spark.sql.expressions.Window
+    import spark.implicits._
+    // group "a": 300 rows tied on the leading order key p (ranked by id
+    // alone); "b": 200 rows with spread p; "c": 5 rows, under the keep
+    val rows = (0L until 300L).map(i => ("a", 7, i)) ++
+      (300L until 500L).map(i => ("b", (i % 13).toInt, i)) ++
+      (500L until 505L).map(i => ("c", 1, i))
+    val df = rows.toDF("g", "p", "id").repartition(5)
+    val order = Seq(col("p").desc, col("id"))
+    def ids(d: org.apache.spark.sql.DataFrame) = d.collect().map(_.getLong(2)).toSet
+    def naive(w: org.apache.spark.sql.expressions.WindowSpec, keep: Long) =
+      ids(df.withColumn("rn", row_number().over(w)).where(col("rn") <= keep).drop("rn"))
+    // coalescing off, so the range partitions stay split at test scale
+    val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
+    val prev = spark.conf.get(coalesceKey)
+    try {
+      spark.conf.set(coalesceKey, "false")
+      val kept = Packing.keepRanked(df, Seq("g"), order, 120)
+      assert(kept.columns.toSeq == Seq("g", "p", "id"))
+      val got = ids(kept)
+      assert(got == naive(Window.partitionBy(col("g")).orderBy(order: _*), 120))
+      assert(got.count(_ < 300) == 120 && got.count(_ >= 500) == 5)
+      // the tied group really spans more than one range partition, so the
+      // per-partition offsets decide which of its rows are kept
+      val pids = df.repartitionByRange(col("g") +: order: _*)
+        .where(col("g") === "a").select(spark_partition_id()).distinct().count()
+      assert(pids > 1, "group a must span range partitions")
+      // no group: one global rank
+      assert(ids(Packing.keepRanked(df, Nil, order, 250)) ==
+        naive(Window.orderBy(order: _*), 250))
+    } finally spark.conf.set(coalesceKey, prev)
+  }
+
+  test("quality top-fraction over all-null text returns no rows with the (doc_id, quality) schema") {
+    import graft.functions.Packing
+    val schema = StructType(Seq(StructField("doc_id", LongType), StructField("text", StringType)))
+    val df = spark.createDataFrame(
+      java.util.Arrays.asList(Row(1L, null), Row(2L, null), Row(3L, null)), schema)
+    val kept = Packing.qualityTopFraction(df, 0.5)
+    assert(kept.columns.toSeq == Seq("doc_id", "quality"))
+    assert(kept.count() == 0)
   }
 
   test("fused L2NormExpr matches the HOF norm; RHP signatures are deterministic") {

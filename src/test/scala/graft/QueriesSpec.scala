@@ -221,6 +221,43 @@ class QueriesSpec extends AnyFunSuite {
       Seq(("a", 0, "Heading1")))
   }
 
+  test("SpanQueries.findAll keeps exactly the matching spans of every doc, in order") {
+    import spark.implicits._
+    val docs = Seq(
+      Doc("a", Seq(Span("heading1", "Intro", null, 0), Span("paragraph", "x", null, 1),
+        Span("paragraph", "yy", null, 2))),
+      Doc("b", Seq(Span("image", "[Image: z.png]", "rId1", 0))),
+      Doc("c", Seq.empty)).toDS().toDF()
+    val got = SpanQueries.findAll(docs, s => s.getField("kind") === "paragraph").collect()
+      .map(r => r.getString(0) -> r.getSeq[org.apache.spark.sql.Row](1)
+        .map(s => (s.getString(1), s.getInt(3)))).toMap
+    assert(got == Map("a" -> Seq(("x", 1), ("yy", 2)), "b" -> Seq.empty, "c" -> Seq.empty))
+  }
+
+  test("Styles.findByStyle, hasStyle and hasAnyStyle ignore case on both sides") {
+    import spark.implicits._
+    import graft.model.{RawDoc, RawSpan}
+    import graft.queries.Styles
+    val spans = Seq(
+      RawSpan("p", "@style=Heading1|run:x", null, 0),
+      RawSpan("p", "@style=HEADING1|run:y", null, 1),
+      RawSpan("p", "@style=Quote;@numId=2|run:z", null, 2),
+      RawSpan("p", "run:w", null, 3),
+      RawSpan("rel", "@id=r;@url=u", null, 4))
+    val raw = Seq(RawDoc("a", spans, Map.empty), RawDoc("b", spans.take(1), Map.empty)).toDS().toDF()
+    val found = Styles.findByStyle(raw, "hEaDiNg1").collect()
+      .map(r => (r.getString(0), r.getInt(1), r.getString(2))).toSet
+    assert(found == Set(("a", 0, "Heading1"), ("a", 1, "HEADING1"), ("b", 0, "Heading1")))
+    val flags = spans.toDF().select(col("offset"),
+      Styles.hasStyle(col("text"), "heading1").as("h"),
+      Styles.hasAnyStyle(col("text"), Seq("QUOTE", "Heading1", "missing")).as("any"),
+      Styles.hasAnyStyle(col("text"), Seq("missing")).as("none"))
+      .collect().map(r => r.getInt(0) -> (r.getBoolean(1), r.getBoolean(2), r.getBoolean(3))).toMap
+    assert(flags == Map(
+      0 -> (true, true, false), 1 -> (true, true, false), 2 -> (false, true, false),
+      3 -> (false, false, false), 4 -> (false, false, false)))
+  }
+
   test("SpanTree renders the recovered hierarchy with H-labels and indent") {
     import graft.model.Span
     val spans = Seq(
