@@ -1047,7 +1047,7 @@ object SparkEntry {
         |    CAST(CASE WHEN length(trim(text)) = 0 THEN 0
         |      ELSE len(regexp_split_to_array(trim(text), '[ \t\n\f\r]+')) END AS BIGINT) AS n_tok
         |  FROM documents WHERE source IN ('src1','src4','src8')),
-        |sums AS (SELECT source, CAST(SUM(n_tok) AS DOUBLE) AS atok FROM tok GROUP BY 1),
+        |sums AS (SELECT source, CAST(COALESCE(SUM(n_tok), 0) AS DOUBLE) AS atok FROM tok GROUP BY 1),
         |thr AS (SELECT source,
         |    CAST(floor(least(CAST(1.0 AS DOUBLE),
         |      CASE source WHEN 'src1' THEN CAST(0.25 AS DOUBLE)
@@ -1064,7 +1064,7 @@ object SparkEntry {
         |    CAST(CASE WHEN length(trim(text)) = 0 THEN 0
         |      ELSE len(regexp_split_to_array(trim(text), '[ \t\n\f\r]+')) END AS BIGINT) AS n_tok
         |  FROM documents WHERE source IN ('src1','src4','src8')),
-        |sums AS (SELECT source, CAST(SUM(n_tok) AS DOUBLE) AS atok FROM tok GROUP BY 1),
+        |sums AS (SELECT source, CAST(COALESCE(SUM(n_tok), 0) AS DOUBLE) AS atok FROM tok GROUP BY 1),
         |qd AS (SELECT source, atok,
         |    (CASE source WHEN 'src1' THEN CAST(0.125 AS DOUBLE)
         |                 WHEN 'src4' THEN CAST(0.375 AS DOUBLE)

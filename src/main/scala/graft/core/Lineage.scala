@@ -79,6 +79,9 @@ object Lineage {
     * holds its extraction cached, so two bounds the cache at two batches. */
   private val BatchesInFlight = 2
 
+  /** The extraction paths `mode` selects. */
+  val Modes: Set[String] = Set("expr", "auto")
+
   /** Run (or resume) the batched extraction job. Returns the lineage rows of
     * every batch that is committed when the call finishes, in batch-id
     * order. `mode` selects the extraction path: `expr` ([[Extract.runExpr]],
@@ -90,9 +93,9 @@ object Lineage {
     * error. It never returns while one of its writes is still running.
     */
   def runBatched(spark: SparkSession, rawPath: String, outPath: String,
-                 numBatches: Int = 8, mode: String = "expr",
+                 numBatches: Int, mode: String = "expr",
                  store: DocStore = DocStore()): Seq[LineageRow] = {
-    require(Set("expr", "auto")(mode), s"unknown mode $mode (expr|auto)")
+    require(Modes(mode), s"unknown mode $mode (expr|auto)")
     val batches = inputBatches(spark, rawPath, numBatches)
     val done = committedBatches(spark, outPath, store)
     // a previously-committed batch id beyond the current grouping means the

@@ -109,6 +109,8 @@ object Pipeline {
     "s2_neardup", "s2b_substr", "s2p_paras", "s3_decontam", "s3g_gopher", "s4_quality",
     "s4d_domain", "s4r_redact", "s4s_sample", "s4m_mix", "s4c_chunk", "s5_pack", "_pipeline")
 
+  /** One run of the pipeline, or of the extraction-only job (which reads
+    * `rawPath`, `outPath`, `mode`, `batches`, `format`). `None` = stage off. */
   final case class Config(
       rawPath: String,
       outPath: String,
@@ -117,25 +119,23 @@ object Pipeline {
       batches: Int = 64,
       threshold: Double = 0.5,
       ngram: Int = 3,
-      contaminationNgram: Int = 13,
-      gopher: Boolean = false,
-      // the one corpus-LANGUAGE-dependent Gopher rule: a corpus whose token
-      // distribution legitimately lacks the English stoplist (multilingual,
-      // code, synthetic) sets this to 0 rather than dropping everything
-      gopherMinStopHits: Int = 2,
+      // Gopher-rule keep-gate: the threshold of its stopword rule, the one
+      // corpus-LANGUAGE-dependent rule — a corpus that legitimately lacks
+      // the English stoplist (multilingual, code, synthetic) sets it to 0
+      // rather than dropping everything
+      gopherMinStopHits: Option[Int] = None,
       keepFrac: Double = 0.8,
       seqLen: Int = 2048,
-      dropLines: Boolean = false,
-      lineMaxDocFreq: Int = 3,
-      // exact-substring dedup (stage off by default): window in tokens; 50
-      // is the published Lee-et-al. setting — short-doc corpora (this
-      // repo's fixtures) want a smaller window or the stage is a no-op
-      substrDedup: Boolean = false,
-      substrWindow: Int = 50,
+      // line boilerplate removal: line doc-freq cap
+      lineMaxDocFreq: Option[Int] = None,
+      // exact-substring dedup: window in tokens; 50 is the published Lee-
+      // et-al. setting — short-doc corpora (this repo's fixtures) want a
+      // smaller window or the stage is a no-op
+      substrWindow: Option[Int] = None,
       // keep-first paragraph dedup (stage off by default)
       paraDedup: Boolean = false,
       redact: Boolean = false,
-      // mega-domain frequency cap (None = stage off): at most N docs per
+      // mega-domain frequency cap: at most N docs per
       // provenance domain enter the training mix
       domainCap: Option[Long] = None,
       // per-language keep fractions (cap the dominant stratum, keep the
@@ -143,11 +143,11 @@ object Pipeline {
       // default is < 1.0
       sampleFractions: Map[String, Double] = Map.empty,
       sampleDefault: Double = 1.0,
-      // token-budget domain mixer (stage on iff budget AND targets given):
-      // target token share per provenance domain + total token budget
+      // token-budget domain mixer (stage on iff both are given; one alone
+      // is rejected): target token share per domain + total token budget
       mixTargets: Map[String, Double] = Map.empty,
       mixBudget: Option[Long] = None,
-      // context-window chunking (None = stage off): split docs longer than
+      // context-window chunking: split docs longer than
       // chunkSize tokens into overlapping windows just before packing
       chunkSize: Option[Int] = None,
       chunkStride: Option[Int] = None,
@@ -155,6 +155,10 @@ object Pipeline {
       // written/read with (DocStore) — parquet locally, iceberg where its
       // runtime exists
       format: String = "parquet") {
+    require(Lineage.Modes(mode), s"unknown mode $mode (expr|auto)")
+    require(mixTargets.isEmpty == mixBudget.isEmpty,
+      "the token-budget mixer needs both its targets and its budget, or neither")
+    require(chunkStride.isEmpty || chunkSize.isDefined, "a chunk stride needs a chunk size")
     def sampling: Boolean = sampleFractions.nonEmpty || sampleDefault < 1.0
     def store: DocStore = DocStore(format)
   }
@@ -230,12 +234,12 @@ object Pipeline {
         SpanQueries.allText(in.select(col("doc_id"), col("spans"))))
     }
 
-    if (cfg.dropLines) {
+    cfg.lineMaxDocFreq.foreach { maxDocFreq =>
       // line-level boilerplate BEFORE near-dedup: repeated nav/footer lines
       // otherwise dominate the shingle sets of unrelated pages and glue
       // them into spurious near-dup clusters (the CCNet/RefinedWeb order)
-      stage("s1b_lines", s"maxDocFreq=${cfg.lineMaxDocFreq}") { in =>
-        Dedup.dropRepeatedLines(in, cfg.lineMaxDocFreq)
+      stage("s1b_lines", s"maxDocFreq=$maxDocFreq") { in =>
+        Dedup.dropRepeatedLines(in, maxDocFreq)
       }
     }
 
@@ -243,15 +247,15 @@ object Pipeline {
       Dedup.dropNearDuplicates(in, cfg.threshold, cfg.ngram)
     }
 
-    if (cfg.substrDedup) {
+    cfg.substrWindow.foreach { window =>
       // AFTER doc-level near-dedup (the RefinedWeb order): near-dedup drops
       // whole documents by their shared content — stripping duplicated
       // spans first would erase exactly that signal and leave both
       // near-dup docs alive with holes. On the survivors, this removes the
       // sub-document duplication (licence blocks, quoted chunks) no
       // doc-granularity pass can see.
-      stage("s2b_substr", s"window=${cfg.substrWindow}") { in =>
-        Dedup.dropDuplicatedSubstrings(in, cfg.substrWindow)
+      stage("s2b_substr", s"window=$window") { in =>
+        Dedup.dropDuplicatedSubstrings(in, window)
       }
     }
 
@@ -265,20 +269,19 @@ object Pipeline {
     }
 
     cfg.benchmarkPath.foreach { bench =>
-      stage("s3_decontam", s"ngram=${cfg.contaminationNgram}",
-        extraInputs = Seq(bench)) { in =>
-        Dedup.dropContaminated(in, spark.read.parquet(bench), cfg.contaminationNgram)
+      val ngram = 13
+      stage("s3_decontam", s"ngram=$ngram", extraInputs = Seq(bench)) { in =>
+        Dedup.dropContaminated(in, spark.read.parquet(bench), ngram)
       }
     }
 
-    if (cfg.gopher) {
+    cfg.gopherMinStopHits.foreach { minStopHits =>
       // a purely row-local gate: filter with the keep PREDICATE — one scan,
       // zero shuffle (the report-form self-join would scan twice and
       // exchange both sides for nothing; s4's join below genuinely needs a
       // join because ranking is global)
-      stage("s3g_gopher", s"minStopHits=${cfg.gopherMinStopHits}") { in =>
-        in.where(graft.functions.TextAnalysis
-          .gopherKeep(minStopHits = cfg.gopherMinStopHits))
+      stage("s3g_gopher", s"minStopHits=$minStopHits") { in =>
+        in.where(graft.functions.TextAnalysis.gopherKeep(minStopHits = minStopHits))
       }
     }
 
@@ -327,7 +330,7 @@ object Pipeline {
       }
     }
 
-    cfg.mixBudget.filter(_ => cfg.mixTargets.nonEmpty).foreach { budget =>
+    cfg.mixBudget.foreach { budget =>
       // the LAST filter stage: the mixer defines the final training mix
       // (untargeted domains drop), so every upstream gate must already have
       // run — its per-domain token masses are measured on exactly the docs

@@ -159,8 +159,8 @@ object Dedup {
       .withColumn("kept", when(col("rpos").isNull, col("t")).otherwise(
         filter(col("t"), (_, i) => !array_contains(col("rpos"), i))))
       .where(size(col("kept")) > 0) // all-boilerplate docs (no blanks left) vanish
-      .select(col("doc_id"), concat_ws("\n", col("kept")).as("text"))
-      .unionByName(documents.where(!scorable).select(col("doc_id"), col("text")))
+      .withColumn("text", concat_ws("\n", col("kept"))).drop("t", "rpos", "kept")
+      .unionByName(documents.where(!scorable))
   }
 
   /** Duplicate-paragraph removal with KEEP-FIRST semantics (the Dolma/CCNet
@@ -211,8 +211,8 @@ object Dedup {
       .withColumn("kept", when(col("rpos").isNull, col("t")).otherwise(
         filter(col("t"), (_, i) => !array_contains(col("rpos"), i))))
       .where(exists(col("kept"), p => trim(p) =!= ""))
-      .select(col("doc_id"), concat_ws(sep, col("kept")).as("text"))
-      .unionByName(documents.where(!scorable).select(col("doc_id"), col("text")))
+      .withColumn("text", concat_ws(sep, col("kept"))).drop("t", "rpos", "kept")
+      .unionByName(documents.where(!scorable))
   }
 
   /** End-to-end near-dedup — the PRIMARY entry point, routed to the

@@ -179,15 +179,15 @@ object Domains {
     // pass 1: actual token mass per target domain (|targets| rows)
     val sums = df.where(domain.isin(targets.keys.toSeq: _*))
       .groupBy(domain.as("mx_dom"))
-      .agg(sum(tokenCount(col("text"))).as("mx_actual"))
+      .agg(coalesce(sum(tokenCount(col("text"))), lit(0L)).as("mx_actual"))
     // share lookup as a literal CASE chain (targets is an explicit API map,
     // driver-small by construction)
     val share = targets.foldLeft(lit(null).cast("double")) {
       case (acc, (d, s)) => when(col("mx_dom") === d, lit(s)).otherwise(acc)
     }
-    // try_divide: a targeted domain whose text is all blank has mx_actual
-    // 0, and ANSI division by zero throws; its null mx_q makes both mixers
-    // keep the domain whole, once (0 tokens are under any want)
+    // try_divide: a targeted domain whose text is all blank or all NULL has
+    // mx_actual 0, and ANSI division by zero throws; its null mx_q makes
+    // both mixers keep the domain whole, once (0 tokens are under any want)
     sums.withColumn("mx_q",
       try_divide(share * lit(budgetTokens.toDouble), col("mx_actual").cast("double")))
   }

@@ -359,6 +359,17 @@ class FunctionsSpec extends AnyFunSuite {
       .where(col("dom") === "domZ").select("doc_id", "epoch").collect()
       .map(r => (r.getLong(0), r.getInt(1))).toSet
     assert(epochs == Set((1L, 0), (2L, 0)))
+    // domN's text is all NULL: its token sum is NULL, which must count as 0
+    // too — both mixers keep it whole, once
+    val withNull = df.unionByName(Seq((4L, "domN", null: String), (5L, "domN", null: String))
+      .toDF("doc_id", "dom", "text"))
+    val nTargets = Map("domZ" -> 0.25, "domN" -> 0.25, "domA" -> 0.5)
+    assert(Domains.tokenBudgetMix(withNull, "dom", nTargets, 100)
+      .collect().map(_.getLong(0)).toSet == Set(1L, 2L, 3L, 4L, 5L))
+    val nEpochs = Domains.tokenBudgetMixEpochs(withNull, "dom", nTargets, 100, maxEpochs = 5)
+      .where(col("dom").isin("domZ", "domN")).select("doc_id", "epoch").collect()
+      .map(r => (r.getLong(0), r.getInt(1))).toSet
+    assert(nEpochs == Set((1L, 0), (2L, 0), (4L, 0), (5L, 0)))
   }
 
   test("exact-substring dedup: copies drop, shared blocks strip from non-canonical docs, short/null pass") {
@@ -402,6 +413,11 @@ class FunctionsSpec extends AnyFunSuite {
     val again = Dedup.dropDuplicateParagraphs(df.repartition(5)).collect()
       .map(r => r.getLong(0) -> Option(r.getString(1))).toMap
     assert(again == got)
+    // the input's other columns come through unchanged, null-text rows too
+    val tagged = Dedup.dropDuplicateParagraphs(df.withColumn("tag", col("doc_id") * 10))
+    assert(tagged.columns.toSeq == Seq("doc_id", "text", "tag"))
+    assert(tagged.collect().map(r => (r.getLong(0), Option(r.getString(1)), r.getLong(2))).toSet ==
+      got.map { case (id, text) => (id, text, id * 10) }.toSet)
   }
 
   test("context-window chunking: full coverage, stride overlap, no sub-range chunks, short/null docs") {
@@ -574,6 +590,11 @@ class FunctionsSpec extends AnyFunSuite {
       4L -> Some("shared rare line\ndelta body line"),
       5L -> Some("shared rare line\n\nepsilon body line"), // doc 6 vanished, blank kept
       7L -> None)) // null text passed through, not deleted
+    // the input's other columns come through unchanged, null-text rows too
+    val tagged = Dedup.dropRepeatedLines(docs.withColumn("tag", col("doc_id") * 10), maxDocFreq = 3)
+    assert(tagged.columns.toSeq == Seq("doc_id", "text", "tag"))
+    assert(tagged.collect().map(r => (r.getLong(0), Option(r.getString(1)), r.getLong(2))).toSet ==
+      out.map { case (id, text) => (id, text, id * 10) }.toSet)
   }
 
   test("dropSeen removes exact cross-corpus matches only") {

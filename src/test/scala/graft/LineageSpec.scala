@@ -72,7 +72,8 @@ class LineageSpec extends AnyFunSuite {
   test("runBatched accepts only the expr and auto modes") {
     Seq("typed", "chunked").foreach { mode =>
       intercept[IllegalArgumentException] {
-        Lineage.runBatched(spark, "/tmp/graft_lineage_raw", "/tmp/graft_lineage_badmode", mode = mode)
+        Lineage.runBatched(spark, "/tmp/graft_lineage_raw", "/tmp/graft_lineage_badmode",
+          numBatches = 3, mode = mode)
       }
     }
     assert(!Files.exists(Paths.get("/tmp/graft_lineage_badmode")))

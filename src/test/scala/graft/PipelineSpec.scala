@@ -121,7 +121,7 @@ class PipelineSpec extends AnyFunSuite {
     rmrf(out)
     // the synthetic corpus vocabulary has no English stopwords — the one
     // corpus-language-dependent rule is disabled per Config's escape hatch
-    val gcfg = cfg(out).copy(gopher = true, gopherMinStopHits = 0)
+    val gcfg = cfg(out).copy(gopherMinStopHits = Some(0))
     val stages = Pipeline.run(spark, gcfg)
     assert(stages.map(_.stage) == Seq("extract", "s1_exact", "s2_neardup",
       "s3_decontam", "s3g_gopher", "s4_quality", "s5_pack"))
@@ -171,8 +171,8 @@ class PipelineSpec extends AnyFunSuite {
     writeInputs()
     val out = "/tmp/graft_pipeline_full"
     rmrf(out)
-    val fcfg = cfg(out).copy(dropLines = true, lineMaxDocFreq = 2,
-      substrDedup = true, substrWindow = 8, paraDedup = true,
+    val fcfg = cfg(out).copy(lineMaxDocFreq = Some(2),
+      substrWindow = Some(8), paraDedup = true,
       domainCap = Some(2L), redact = true, sampleDefault = 0.4,
       chunkSize = Some(16), chunkStride = Some(12))
     // run 1: killed right after the redact stage commits
