@@ -28,13 +28,16 @@ import org.apache.spark.sql.SparkSession
   * starts, naming the flag. Defaults are `Pipeline.Config`'s.
   *  - Both modes: `--mode` is `expr` (fused expression, zero-shuffle) or
   *    `auto` (mega-doc skew routing: outlier docs spread round-robin over
-  *    tasks). `--batches` is the lineage/commit granularity; shrinking it
-  *    over an existing output requires `--no-resume` (checked), which wipes
-  *    every directory the run writes first. `--shuffle-partitions` sets
-  *    spark.sql.shuffle.partitions: in extraction only `--mode auto`
-  *    shuffles, and only its spread tier, into defaultParallelism
-  *    partitions (not N); the pipeline stages shuffle into N. `--format` is
-  *    the storage seam (DocStore); iceberg needs its runtime jar.
+  *    tasks). `--batches` is the unit of output, lineage and resume, not
+  *    of a Spark job: one job extracts every batch not yet committed, and
+  *    the driver then commits them one by one, so a kill during that job
+  *    loses all of them. Shrinking it over an existing output requires
+  *    `--no-resume` (checked), which wipes every directory the run writes
+  *    first. `--shuffle-partitions` sets spark.sql.shuffle.partitions: in
+  *    extraction only `--mode auto` shuffles, and only its spread tier,
+  *    into defaultParallelism partitions (not N); the pipeline stages
+  *    shuffle into N. `--format` is the storage seam (DocStore); iceberg
+  *    needs its runtime jar.
   *  - Pipeline: `--benchmark` is the decontamination source (text column;
   *    stage skipped if absent), `--threshold` the near-dup Jaccard
   *    threshold, `--keep-frac` the quality fraction kept, `--seq-len` the

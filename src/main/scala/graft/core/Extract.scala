@@ -29,16 +29,24 @@ object Extract {
 
   /** The zero-shuffle default path: the fused `extract_spans` expression
     * over the scan, no typed-encoder round trip. Input: the raw DataFrame
-    * (doc_id, spans[, meta]); output columns (doc_id, spans, error).
-    * `annotate = true` switches to the A4 metadata-annotation rendering.
+    * (doc_id, spans[, meta][, n_spans]); output columns (doc_id, spans,
+    * error), followed by every other input column unchanged (a batch tag,
+    * say). `annotate = true` switches to the A4 metadata-annotation
+    * rendering.
     */
   def runExpr(raw: DataFrame, annotate: Boolean = false): DataFrame = {
     val metaCol = if (raw.columns.contains("meta")) col("meta")
                   else lit(null).cast(MapType(StringType, StringType))
-    raw.select(col("doc_id"),
-        graft.functions.ExtractSpansExpr(col("spans"), metaCol, annotate).as("x"))
-      .select(col("doc_id"), col("x.spans").as("spans"), col("x.error").as("error"))
+    val carried = raw.columns.toSeq.filterNot(Consumed).map(c => col(s"`$c`"))
+    raw.select((col("doc_id") +: carried) :+
+        graft.functions.ExtractSpansExpr(col("spans"), metaCol, annotate).as("_extracted"): _*)
+      .select(Seq(col("doc_id"), col("_extracted.spans").as("spans"),
+        col("_extracted.error").as("error")) ++ carried: _*)
   }
+
+  /** Input columns extraction reads or replaces, and so does not carry
+    * through: `n_spans` counts the input spans, not the output's. */
+  private val Consumed = Set("doc_id", "spans", "error", "meta", "n_spans")
 
   /** Adaptive skew routing (SURVEY.md §4.3.1, VERDICT r01 #3), two tiers by
     * `n = size(spans)`, both on the fused expression:
@@ -65,19 +73,17 @@ object Extract {
     * `size(spans)` fallback (for inputs without the column) still evaluates
     * correctly, it just cannot prune row groups.
     *
-    * Output matches [[runExpr]] row for row.
+    * Output matches [[runExpr]] row for row, carried columns included.
     */
   def runAuto(raw: DataFrame, spreadThreshold: Int = 8192): DataFrame = {
     val n = if (raw.columns.contains("n_spans")) col("n_spans") else size(col("spans"))
-    val rawCols = Seq(col("doc_id"), col("spans")) ++
-      (if (raw.columns.contains("meta")) Seq(col("meta")) else Nil)
     // a NULL n (nullable n_spans in a foreign table, or size(spans) of a
     // NULL spans row in the fallback) must not vanish: it fails the spread
     // comparison, so route it to the small tier — ExtractSpansExpr
     // quarantines a null spans array explicitly ("null spans"). IsNull ORs
     // into the pushed filter; the coalesce alternative would kill pushdown.
-    val small = runExpr(raw.where(n <= spreadThreshold || n.isNull).select(rawCols: _*))
-    val spread = runExpr(raw.where(n > spreadThreshold).select(rawCols: _*)
+    val small = runExpr(raw.where(n <= spreadThreshold || n.isNull).drop("n_spans"))
+    val spread = runExpr(raw.where(n > spreadThreshold).drop("n_spans")
       .repartition(raw.sparkSession.sparkContext.defaultParallelism))
     small.unionByName(spread)
   }

@@ -4,8 +4,6 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-import java.util.concurrent.{Callable, Executors, TimeUnit}
-import java.util.concurrent.atomic.AtomicReference
 
 /** Per-batch lineage row (FIXTURES.md §2 `_lineage`): committed together with
   * each batch's output, it is both the job's metrics sink and its resume
@@ -25,24 +23,27 @@ final case class LineageRow(
 /** Checkpoint-resumable batched extraction driver.
   *
   * The input's parquet files are deterministically ordered and grouped into
-  * batches; each batch is extracted and written under
-  * `out/docs/batch=<id>/` + `out/quarantine/batch=<id>/`, then a lineage row
-  * is committed under `out/_lineage/batch=<id>/`. The lineage write is the
-  * commit point ([[Commit]]): on restart a batch is skipped only if its
-  * lineage row carries the current input fingerprint (the batch's files and
-  * the mode) and both its docs and quarantine outputs still exist; every
-  * other batch — uncommitted, torn row, pruned output — is re-derived,
-  * overwriting whatever a killed attempt left. A killed job therefore
-  * resumes to byte-identical output.
+  * batches; each batch's output lives under `out/docs/batch=<id>/` +
+  * `out/quarantine/batch=<id>/`, and its lineage row under
+  * `out/_lineage/batch=<id>/`. The lineage row is the commit point
+  * ([[Commit]]): on restart a batch is skipped only if its row carries the
+  * current input fingerprint (the batch's files and the mode) and both its
+  * docs and quarantine outputs still exist; every other batch — uncommitted,
+  * torn row, pruned output — is re-derived, overwriting whatever a killed
+  * attempt left. A killed job therefore resumes to byte-identical output.
   *
-  * Each batch costs three Spark jobs: the docs write (which also fills the
-  * batch's cached extraction), the quarantine write (read from that cache)
-  * and the lineage write; the row's counts are observed on the two data
-  * writes rather than re-scanned. Independent batches run
-  * [[BatchesInFlight]] at a time, so after a kill the committed batches need
-  * not be a prefix of the batch order — resume is keyed by batch id, never
-  * by position. A row's `wall_ms` is that batch's own start-to-commit time;
-  * the times of batches that ran together overlap.
+  * A call extracts every batch it must re-derive in ONE Spark job: one scan
+  * of their files, each row tagged with its batch, one extraction, and one
+  * write to `out/_staging` partitioned by batch and by whether the row is
+  * quarantined; one [[Observation]] on that write counts each batch's docs,
+  * spans and errors. The driver then commits the batches one by one without
+  * a job: it clears both targets, renames the batch's two staging dirs into
+  * them, and writes the lineage row last. So the batch is the unit of
+  * output, lineage and resume, but not of a job: a kill during the job
+  * loses every batch the call had not committed, and a kill during the
+  * commits leaves a subset committed, which resume picks up by batch id. A
+  * row's `wall_ms` runs from the start of the call's job to that batch's
+  * commit.
   */
 object Lineage {
 
@@ -57,27 +58,23 @@ object Lineage {
   }
 
   /** The committed lineage rows under `outPath`, by batch id. A torn row
-    * is left out, so only its batch re-derives ([[Commit.committed]]). */
+    * is left out, so only its batch re-derives ([[Commit.committed]]).
+    * Rows are parquet whatever `store`'s format ([[Commit]]); the
+    * parameter only keeps callers that pass a store compiling. */
   def committedBatches(spark: SparkSession, outPath: String,
                        store: DocStore = DocStore()): Map[Int, LineageRow] = {
     import spark.implicits._
-    Commit.committed[LineageRow](spark, s"$outPath/_lineage", store)
+    Commit.committed[LineageRow](spark, s"$outPath/_lineage")
       .map(r => r.batch_id -> r).toMap
   }
 
   /** Every directory a run writes under `outPath` (`Main --no-resume`
     * wipes exactly these). */
-  private[graft] val OutputDirs: Seq[String] = Seq("_lineage", "docs", "quarantine")
+  private[graft] val OutputDirs: Seq[String] = Seq("_lineage", "docs", "quarantine", "_staging")
 
+  /** A batch's docs and quarantine dirs. */
   private def outputs(outPath: String, batchId: Int): Seq[String] =
     Seq(s"$outPath/docs/batch=$batchId", s"$outPath/quarantine/batch=$batchId")
-
-  /** Batches extracted at once. Two already overlap most of one batch's
-    * driver-side planning and commit with the other's executor work (median
-    * call over a 20k-doc, 4-batch table at local[4] on a 4-vCPU host: 2.04 s
-    * one at a time, 1.59 s at 2, 1.46 s at 4), and each batch in flight
-    * holds its extraction cached, so two bounds the cache at two batches. */
-  private val BatchesInFlight = 2
 
   /** The extraction paths `mode` selects. */
   val Modes: Set[String] = Set("expr", "auto")
@@ -88,16 +85,16 @@ object Lineage {
     * the zero-shuffle default) or `auto` ([[Extract.runAuto]], fused-or-
     * spread skew routing).
     *
-    * If a batch fails, no batch still queued is started; the call waits for
-    * the batches already running to commit or fail, then throws the first
-    * error. It never returns while one of its writes is still running.
+    * If the extraction job fails, the call throws before it commits any
+    * batch; it never returns while its write is still running. A call with
+    * no batch to re-derive starts no extraction job.
     */
   def runBatched(spark: SparkSession, rawPath: String, outPath: String,
                  numBatches: Int, mode: String = "expr",
                  store: DocStore = DocStore()): Seq[LineageRow] = {
     require(Modes(mode), s"unknown mode $mode (expr|auto)")
     val batches = inputBatches(spark, rawPath, numBatches)
-    val done = committedBatches(spark, outPath, store)
+    val done = committedBatches(spark, outPath)
     // a previously-committed batch id beyond the current grouping means the
     // output still holds data this run will never overwrite — resuming would
     // leave duplicate documents behind; demand an explicit clean start
@@ -106,85 +103,92 @@ object Lineage {
       s"output has committed batches ${stale.toSeq.sorted.mkString(",")} beyond " +
         s"the current numBatches=${batches.size} grouping; wipe $outPath " +
         "(Main: --no-resume) before shrinking the batch count")
-    // footer-only probe: read with the n_spans-bearing schema when the input
-    // carries the materialized count, so auto mode's tier filters can prune
-    // row groups (a fixed rawDocs schema would project the column away and
-    // silently fall back to post-scan size(spans) filters). Only auto mode
-    // reads the answer, so only auto mode pays the schema-inference job.
-    val hasN = mode == "auto" && batches.headOption.exists { case (_, files) =>
-      spark.read.parquet(files.head).schema.fieldNames.contains("n_spans")
-    }
-    val readSchema = if (hasN) graft.model.Schemas.rawDocsWithN
-                     else graft.model.Schemas.rawDocs
     val todo = batches.flatMap { case (batchId, files) =>
       val fp = Commit.fingerprint(spark, files, s"mode=$mode")
       if (done.get(batchId).exists(Commit.upToDate(spark, _, fp, outputs(outPath, batchId)))) None
       else Some((batchId, files, fp))
     }
-    val fresh = inFlight(todo.map { case (batchId, files, fp) =>
-      () => commitBatch(spark, outPath, store, mode, readSchema, batchId, files, fp)
-    }).map(r => r.batch_id -> r).toMap
+    val fresh = if (todo.isEmpty) Map.empty[Int, LineageRow]
+      else extractAndCommit(spark, outPath, store, mode, todo).map(r => r.batch_id -> r).toMap
     batches.map { case (batchId, _) => fresh.getOrElse(batchId, done(batchId)) }
   }
 
-  /** Extract one batch and commit it: docs write, quarantine write, lineage
-    * write — three Spark jobs. The counts come from one [[Observation]] per
-    * data write, and the quarantine write reads the extraction the docs
-    * write cached. */
-  private def commitBatch(spark: SparkSession, outPath: String, store: DocStore,
-                          mode: String, readSchema: StructType, batchId: Int,
-                          files: Seq[String], fp: String): LineageRow = {
+  /** The staging table's partition columns: the batch tag, and whether the
+    * row is quarantined. */
+  private val BatchCol = "batch"
+  private val QuarantinedCol = "quarantined"
+
+  /** Extracts the `todo` batches (id, files, fingerprint) in one Spark job
+    * into `out/_staging`, then commits each on the driver. */
+  private def extractAndCommit(spark: SparkSession, outPath: String, store: DocStore,
+                               mode: String, todo: Seq[(Int, Seq[String], String)]): Seq[LineageRow] = {
     import spark.implicits._
     val t0 = System.nanoTime()
-    val rawDf = spark.read.schema(readSchema).parquet(files: _*)
-    val extracted = (if (mode == "auto") Extract.runAuto(rawDf)
-                     else Extract.runExpr(rawDf)).persist()
-    try {
-      val goodStats, badStats = new Observation()
-      val good = extracted.where(col("error").isNull).select("doc_id", "spans")
-      val bad = extracted.where(col("error").isNotNull).select("doc_id", "error")
-      val Seq(docsOut, quarantineOut) = outputs(outPath, batchId)
-      store.write(good.observe(goodStats, count(lit(1)).as("docs"),
-        coalesce(sum(size(col("spans"))), lit(0L)).as("spans")), docsOut)
-      store.write(bad.observe(badStats, count(lit(1)).as("errors")), quarantineOut)
-      Commit.write(spark, store, LineageRow(batchId, fp,
-        goodStats.get("docs").asInstanceOf[Long],
-        goodStats.get("spans").asInstanceOf[Long],
-        badStats.get("errors").asInstanceOf[Long],
+    val fs = FileSystem.get(new java.net.URI(outPath), spark.sparkContext.hadoopConfiguration)
+    val staging = new Path(s"$outPath/_staging")
+    // cleared first: under dynamic partition overwrite a leftover batch dir
+    // with no new rows would survive the write and be committed
+    fs.delete(staging, true)
+    val files = todo.flatMap(_._2)
+    // footer-only probe: read with the n_spans-bearing schema when the input
+    // carries the materialized count, so auto mode's tier filters can prune
+    // row groups (a fixed rawDocs schema would project the column away and
+    // silently fall back to post-scan size(spans) filters). Only auto mode
+    // reads the answer, so only auto mode pays the schema-inference job.
+    val hasN = mode == "auto" &&
+      spark.read.parquet(files.head).schema.fieldNames.contains("n_spans")
+    val readSchema = if (hasN) graft.model.Schemas.rawDocsWithN
+                     else graft.model.Schemas.rawDocs
+    // each row's batch, by the name of its input file: the files come from
+    // one directory listing, so a name is unique among them. A row whose
+    // file maps to no batch fails the job: a NULL tag would be written to
+    // a __HIVE_DEFAULT_PARTITION__ dir that no commit picks up
+    val batchOfFile = typedLit(todo.flatMap { case (b, fl, _) => fl.map(f => fileName(f) -> b) }.toMap)
+    val file = substring_index(col("_metadata.file_path"), "/", -1)
+    val raw = spark.read.schema(readSchema).parquet(files: _*)
+      .withColumn(BatchCol, coalesce(try_element_at(batchOfFile, file),
+        raise_error(concat(lit("no extraction batch for input file "), file))))
+    val extracted = if (mode == "auto") Extract.runAuto(raw) else Extract.runExpr(raw)
+    val good = col("error").isNull
+    val stats = new Observation()
+    val counts = todo.flatMap { case (b, _, _) =>
+      val inBatch = col(BatchCol) === b
+      Seq(count_if(inBatch && good).as(s"docs_$b"),
+        coalesce(sum(when(inBatch && good, size(col("spans")))), lit(0L)).as(s"spans_$b"),
+        count_if(inBatch && !good).as(s"errors_$b"))
+    }
+    store.write(extracted.observe(stats, counts.head, counts.tail: _*)
+        .withColumn(QuarantinedCol, !good),
+      staging.toString, partitionBy = Seq(BatchCol, QuarantinedCol))
+    val n = stats.get
+    val fileSchema = StructType(extracted.schema.filterNot(_.name == BatchCol))
+
+    val rows = todo.map { case (b, _, fp) =>
+      val targets = outputs(outPath, b).map(new Path(_))
+      targets.foreach(fs.delete(_, true))
+      targets.zip(Seq(false, true)).foreach { case (target, quarantined) =>
+        val part = new Path(staging, s"$BatchCol=$b/$QuarantinedCol=$quarantined")
+        fs.mkdirs(target.getParent)
+        if (!fs.exists(part)) // no row of this kind: an empty table file
+          Commit.writeParquet(spark, s"$target/part-00000.parquet", fileSchema, Nil)
+        else if (!fs.rename(part, target))
+          throw new java.io.IOException(s"cannot rename $part to $target")
+      }
+      Commit.write(spark, LineageRow(b, fp,
+        n(s"docs_$b").asInstanceOf[Long],
+        n(s"spans_$b").asInstanceOf[Long],
+        n(s"errors_$b").asInstanceOf[Long],
         (System.nanoTime() - t0) / 1000000,
-        java.time.Instant.now().toString), s"$outPath/_lineage/batch=$batchId")
-    } finally extracted.unpersist()
+        java.time.Instant.now().toString), s"$outPath/_lineage/batch=$b")
+    }
+    fs.delete(staging, true)
+    rows
   }
 
-  /** Runs `tasks` at most [[BatchesInFlight]] at a time and returns their
-    * results in task order. The pool lives for one call, so its threads
-    * inherit the caller's Spark local properties (job group, description,
-    * scheduler pool). After the first failure no queued task starts; the
-    * running ones are awaited, then that failure is thrown. */
-  private def inFlight[A](tasks: Seq[() => A]): Seq[A] = {
-    val pool = Executors.newFixedThreadPool(BatchesInFlight)
-    val firstError = new AtomicReference[Throwable]()
-    val results = try tasks.map { task =>
-      pool.submit(new Callable[Option[A]] {
-        def call(): Option[A] =
-          if (firstError.get != null) None
-          else try Some(task()) catch {
-            case e: Throwable => firstError.compareAndSet(null, e); None
-          }
-      })
-    } finally {
-      pool.shutdown()
-      var interrupted = false
-      while (!pool.isTerminated)
-        try pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
-        catch {
-          // an interrupted caller still must not leave a write running:
-          // stop queued tasks, wait out the running ones, then rethrow
-          case e: InterruptedException => firstError.compareAndSet(null, e); interrupted = true
-        }
-      if (interrupted) Thread.currentThread().interrupt()
-    }
-    Option(firstError.get).foreach(e => throw e)
-    results.map(_.get().get)
+  /** The last segment of `file` as `_metadata.file_path` spells it
+    * (URI-encoded). */
+  private def fileName(file: String): String = {
+    val uri = new Path(file).toUri.toString
+    uri.substring(uri.lastIndexOf('/') + 1)
   }
 }

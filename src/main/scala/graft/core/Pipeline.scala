@@ -90,7 +90,8 @@ final case class StageLineage(
   * Any upstream rerun changes downstream fingerprints, so the chain
   * re-derives exactly what is stale. The extraction stage additionally
   * resumes per BATCH via [[Lineage.runBatched]] — a kill inside extraction
-  * loses at most one batch of work.
+  * loses the batches that call had not yet committed. A stage's commit row
+  * is written on the driver ([[Commit.write]]), so it adds no Spark job.
   *
   * Stage boundaries are intentionally materialization points: at 100 TB a
   * fused single-plan pipeline would recompute extraction into every consumer
@@ -151,9 +152,9 @@ object Pipeline {
       // chunkSize tokens into overlapping windows just before packing
       chunkSize: Option[Int] = None,
       chunkStride: Option[Int] = None,
-      // storage seam: the format every stage table and lineage row is
+      // storage seam: the format every extraction and stage table is
       // written/read with (DocStore) — parquet locally, iceberg where its
-      // runtime exists
+      // runtime exists; commit rows are parquet regardless (Commit)
       format: String = "parquet") {
     require(Lineage.Modes(mode), s"unknown mode $mode (expr|auto)")
     require(mixTargets.isEmpty == mixBudget.isEmpty,
@@ -180,7 +181,7 @@ object Pipeline {
       val written = new Observation()
       store.write(body(store.read(spark, inputs.head))
         .observe(written, count(lit(1)).as("rows")), out)
-      Commit.write(spark, store, StageLineage(name, fp, rowsIn,
+      Commit.write(spark, StageLineage(name, fp, rowsIn,
         written.get("rows").asInstanceOf[Long],
         (System.nanoTime() - t0) / 1000000, java.time.Instant.now().toString),
         s"${cfg.outPath}/_pipeline/stage=$name")
@@ -195,7 +196,7 @@ object Pipeline {
           failAfter: Option[String] = None): Seq[StageLineage] = {
     import spark.implicits._
     val rows = scala.collection.mutable.ArrayBuffer[StageLineage]()
-    val committed = Commit.committed[StageLineage](spark, s"${cfg.outPath}/_pipeline", cfg.store)
+    val committed = Commit.committed[StageLineage](spark, s"${cfg.outPath}/_pipeline")
       .map(r => r.stage -> r).toMap
     def checkpoint(name: String): Unit =
       if (failAfter.contains(name))

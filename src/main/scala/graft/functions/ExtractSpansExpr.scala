@@ -50,6 +50,10 @@ case class ExtractSpansExpr(left: Expression, right: Expression, annotate: Boole
       val raw = new Array[RawSpan](n)
       var i = 0
       while (i < n) {
+        // checked, not left to an implicit NullPointerException: once its
+        // throw site is hot the JIT throws one without a message, and the
+        // quarantine reason would depend on how warm the JVM is
+        if (arr.isNullAt(i)) return InternalRow(null, UTF8String.fromString("null span element"))
         val r = arr.getStruct(i, 4)
         val kind = r.getUTF8String(0)
         val text = if (r.isNullAt(1)) null else r.getUTF8String(1)

@@ -7,13 +7,15 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 /** The storage seam (SURVEY.md §7 constraint): the engine's persisted
-  * tables — extraction output, quarantine, lineage — go through the ONE
-  * format-parameterized [[DocStore]] indirection, so "Iceberg drops in
+  * tables — extraction output, quarantine, stage tables — go through the
+  * ONE format-parameterized [[DocStore]] indirection, so "Iceberg drops in
   * where its runtime exists" is a configuration swap, not a code change.
-  * Locally only parquet has a runtime; the spec proves (a) the seam is
-  * load-bearing for the lineage round-trip, and (b) a non-parquet format
-  * reaches DataSource V2 provider RESOLUTION (i.e. nothing behind the seam
-  * hard-codes parquet) rather than being silently rewritten.
+  * (Commit rows are parquet files written on the driver, outside the seam.)
+  * Locally only parquet has a runtime; the spec proves (a) batched
+  * extraction writes through the seam and resumes over what it wrote, and
+  * (b) a non-parquet format reaches DataSource V2 provider RESOLUTION (i.e.
+  * nothing behind the seam hard-codes parquet) rather than being silently
+  * rewritten.
   */
 class DocStoreSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
@@ -35,7 +37,7 @@ class DocStoreSpec extends AnyFunSuite {
     assert(back.orderBy("doc_id").collect().toSeq == df.orderBy("doc_id").collect().toSeq)
   }
 
-  test("lineage round-trip is behind the seam: batched extraction + resume honor the store's format") {
+  test("batched extraction writes through the store and resumes over it") {
     import spark.implicits._
     val raw = "/tmp/graft_docstore_raw"
     val out = "/tmp/graft_docstore_lineage"

@@ -114,13 +114,30 @@ class LineageSpec extends AnyFunSuite {
   }
 
   /** Records every job start (id, submission time, local properties) and
-    * every job end while attached. */
+    * every job end while attached, and the call sites of each job's stages
+    * ("save at ..." for a write). */
   private final class JobLog extends SparkListener {
     val started = scala.collection.mutable.ArrayBuffer[(Int, Long, java.util.Properties)]()
     val ended = scala.collection.mutable.Set[Int]()
-    override def onJobStart(e: SparkListenerJobStart): Unit =
-      synchronized(started += ((e.jobId, e.time, e.properties)))
+    val sites = scala.collection.mutable.Map[Int, Seq[String]]()
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      started += ((e.jobId, e.time, e.properties))
+      sites(e.jobId) = e.stageInfos.map(_.name)
+    }
     override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized(ended += e.jobId)
+    def writes: Int = synchronized(sites.values.count(_.exists(_.startsWith("save at"))))
+  }
+
+  /** The jobs one call of `f` starts under the job group `group`, with its
+    * result. */
+  private def jobsOf[A](group: String)(f: => A): (A, JobLog) = {
+    val sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try withJobLog { log =>
+      val a = f
+      ListenerBusBridge.drain(sc)
+      (a, log)
+    } finally sc.clearJobGroup()
   }
 
   private def withJobLog[A](f: JobLog => A): A = {
@@ -170,27 +187,64 @@ class LineageSpec extends AnyFunSuite {
   private def counts(rows: Seq[LineageRow]) = rows.map(r =>
     (r.batch_id, r.input_fingerprint, r.doc_count, r.span_count, r.error_count))
 
-  test("each batch costs at most three jobs, all carrying the caller's local properties") {
+  test("a call runs one job for all its batches, under the caller's properties") {
     val rawPath = "/tmp/graft_lineage_jobs_raw"
     val outPath = "/tmp/graft_lineage_jobs_out"
     writeRawFiles(rawPath, (0 until 6).map(k => (k * 40L until k * 40L + 40L)))
     rmrf(outPath)
     val sc = spark.sparkContext
-    sc.setJobGroup("lineage-spec", "three jobs per batch")
     sc.setLocalProperty("graft.spec.tag", "lineage")
-    val (rows, jobs) = try withJobLog { log =>
-      val rows = Lineage.runBatched(spark, rawPath, outPath, numBatches = 3)
-      ListenerBusBridge.drain(sc)
-      (rows, log.synchronized(log.started.toList))
-    } finally { sc.clearJobGroup(); sc.setLocalProperty("graft.spec.tag", null) }
+    val (rows, log) = try jobsOf("lineage-spec") {
+      Lineage.runBatched(spark, rawPath, outPath, numBatches = 3)
+    } finally sc.setLocalProperty("graft.spec.tag", null)
     assert(rows.map(_.batch_id) == Seq(0, 1, 2))
     assert(rows.map(_.doc_count).sum == 240)
-    val n = jobs.size
-    assert(n > 0 && n <= 3 * rows.size, s"$n jobs for ${rows.size} batches")
+    val jobs = log.synchronized(log.started.toList)
+    assert(jobs.size == 1, s"${jobs.size} jobs for ${rows.size} batches")
+    assert(log.writes == 1)
     jobs.foreach { case (id, _, props) =>
       assert(props.getProperty("spark.jobGroup.id") == "lineage-spec", s"job $id")
       assert(props.getProperty("graft.spec.tag") == "lineage", s"job $id")
     }
+    // over the committed output every batch is skipped: no job, no change
+    val tree = listTree(outPath)
+    val (again, log2) = jobsOf("lineage-spec-again") {
+      Lineage.runBatched(spark, rawPath, outPath, numBatches = 3)
+    }
+    assert(again == rows)
+    assert(log2.synchronized(log2.started.isEmpty))
+    assert(listTree(outPath) == tree)
+  }
+
+  test("a lost lineage row re-derives only its batch, in one job") {
+    val rawPath = "/tmp/graft_lineage_lost_raw"
+    val outPath = "/tmp/graft_lineage_lost_out"
+    val cleanPath = "/tmp/graft_lineage_lost_clean"
+    writeRawFiles(rawPath, (0 until 6).map(k => (k * 30L + 1000L until k * 30L + 1030L)))
+    rmrf(outPath); rmrf(cleanPath)
+    val clean = Lineage.runBatched(spark, rawPath, cleanPath, numBatches = 3)
+    val before = Lineage.runBatched(spark, rawPath, outPath, numBatches = 3)
+    rmrf(s"$outPath/_lineage/batch=1")
+    // a leftover staging dir of a killed call, holding rows a commit would
+    // wrongly pick up: batch 1 has no quarantined doc, so no new rows
+    // replace this dir under dynamic partition overwrite
+    assert(before(1).error_count == 0)
+    val leftover = Files.createDirectories(Paths.get(s"$outPath/_staging/batch=1/quarantined=true"))
+    Files.list(Paths.get(s"$outPath/docs/batch=0")).iterator().asScala.toSeq
+      .foreach(f => Files.copy(f, leftover.resolve(f.getFileName)))
+    val (after, log) = try {
+      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+      jobsOf("lineage-spec-lost")(Lineage.runBatched(spark, rawPath, outPath, numBatches = 3))
+    } finally spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+    assert(log.synchronized(log.started.size) == 1)
+    assert(log.writes == 1)
+    Seq(0, 2).foreach(b => assert(after(b).committed_at == before(b).committed_at, s"batch $b"))
+    assert(after(1).committed_at != before(1).committed_at)
+    assert(counts(after) == counts(clean))
+    Seq("docs", "quarantine").foreach { t =>
+      assert(table(s"$outPath/$t") == table(s"$cleanPath/$t"), t)
+    }
+    assert(!Files.exists(Paths.get(s"$outPath/_staging")))
   }
 
   test("poison-only and poison-free batches commit; lineage counts equal the written tables") {
@@ -217,6 +271,33 @@ class LineageSpec extends AnyFunSuite {
     }
     assert(counts(Lineage.committedBatches(spark, outPath).values.toSeq.sortBy(_.batch_id)) ==
       counts(rows))
+    // the roots read as one table each, across the empty table files
+    assert(spark.read.parquet(s"$outPath/docs").count() == rows.map(_.doc_count).sum)
+    assert(spark.read.parquet(s"$outPath/quarantine").count() == rows.map(_.error_count).sum)
+    // the all-poison batch's docs file and the clean batch's quarantine file
+    // carry the schema of the written ones, in Spark and in the footer
+    val written = Seq("docs", "quarantine").map(t => footerSchema(s"$outPath/$t/batch=2"))
+    assert(written.forall(_.getFields.asScala.map(_.getName) == Seq("doc_id", "spans", "error")))
+    assert(written.distinct.size == 1)
+    Seq("docs/batch=0", "quarantine/batch=1").foreach { d =>
+      assert(footerSchema(s"$outPath/$d") == written.head, d)
+      assert(spark.read.parquet(s"$outPath/$d").schema ==
+        spark.read.parquet(s"$outPath/docs/batch=2").schema, d)
+    }
+  }
+
+  /** The parquet schema of every data file in `dir`, which must agree. */
+  private def footerSchema(dir: String): org.apache.parquet.schema.MessageType = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val schemas = Files.list(Paths.get(dir)).iterator().asScala.toSeq
+      .filter(_.getFileName.toString.endsWith(".parquet")).map { f =>
+        val in = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(f.toUri), conf))
+        try in.getFileMetaData.getSchema finally in.close()
+      }.distinct
+    assert(schemas.size == 1, s"$dir: ${schemas.size} schemas")
+    schemas.head
   }
 
   test("a failing batch: the call throws, leaves no write running, and resumes to a clean run's output") {
@@ -251,11 +332,11 @@ class LineageSpec extends AnyFunSuite {
       sc.clearJobGroup()
       Files.write(victim, original)
     }
-    val committed = Lineage.committedBatches(spark, outPath)
-    assert(!committed.contains(1))
-    committed.keys.foreach { b =>
-      assert(Files.exists(Paths.get(s"$outPath/docs/batch=$b/_SUCCESS")), s"batch $b docs")
-      assert(Files.exists(Paths.get(s"$outPath/quarantine/batch=$b/_SUCCESS")), s"batch $b quarantine")
+    // one job extracts every batch, so its failure commits none of them
+    assert(Lineage.committedBatches(spark, outPath).isEmpty)
+    (0 until 3).foreach { b =>
+      assert(!Files.exists(Paths.get(s"$outPath/docs/batch=$b")), s"batch $b docs")
+      assert(!Files.exists(Paths.get(s"$outPath/quarantine/batch=$b")), s"batch $b quarantine")
     }
     val resumed = Lineage.runBatched(spark, rawPath, outPath, numBatches = 3)
     val clean = Lineage.runBatched(spark, rawPath, cleanPath, numBatches = 3)

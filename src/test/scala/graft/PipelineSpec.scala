@@ -76,6 +76,15 @@ class PipelineSpec extends AnyFunSuite {
       val table = if (s.stage == "extract") s"$out/extract/docs" else s"$out/${s.stage}"
       assert(spark.read.parquet(table).count() == s.rows_out, s.stage)
     }
+    // the committed stage rows (written on the driver) read back by column
+    // position, as a reader that knows no StageLineage type reads them
+    import spark.implicits._
+    val committed = spark.read.parquet(s"$out/_pipeline")
+    assert(committed.columns.toSeq ==
+      Seq("stage", "input_fingerprint", "rows_in", "rows_out", "wall_ms", "committed_at"))
+    assert(committed.as[(String, String, Long, Long, Long, String)].collect().toSeq.sortBy(_._1) ==
+      stages.filterNot(_.stage == "extract").map(s =>
+        (s.stage, s.input_fingerprint, s.rows_in, s.rows_out, s.wall_ms, s.committed_at)).sortBy(_._1))
     val total = packed.agg(sum("n_tokens")).head().getLong(0)
     val maxEnd = packed.agg(max(col("tok_start") + col("n_tokens"))).head().getLong(0)
     assert(maxEnd == total) // gap-free concat stream

@@ -131,18 +131,26 @@ class SparkExtractSpec extends AnyFunSuite {
     val nullRow = df.limit(1).select(lit("null-doc").as("doc_id"),
       lit(null).cast(df.schema("spans").dataType).as("spans"),
       lit(null).cast(df.schema("meta").dataType).as("meta"))
-    val raw = df.unionByName(nullRow)
+    // an extra input column every path must carry through unchanged
+    val raw = df.unionByName(nullRow).withColumn("tag", concat(lit("tag:"), col("doc_id")))
+    val tags = raw.select("doc_id", "tag").collect().map(_.toString).sorted.toSeq
     // both mega docs take the spread tier; the null-element, poison and
     // null-spans rows quarantine
     assert(mega.spans.length > 512)
-    val expr = rows(Extract.runExpr(raw))
+    val outputs = Seq(
+      "expr" -> Extract.runExpr(raw),
+      "auto" -> Extract.runAuto(raw, spreadThreshold = 512),
+      "chunked" -> Extract.runChunked(raw.as[RawDoc], spreadThreshold = 512))
+    val expr = rows(outputs.head._2)
     assert(expr.filter(_.error != null).map(_.doc_id) ==
       Seq("doc-mega-null-element", "doc-poison-000001009", "null-doc"))
     assert(expr.filter(_.error != null).forall(_.spans == null))
-    val auto = rows(Extract.runAuto(raw, spreadThreshold = 512))
-    assert(auto == expr)
-    val chunked = rows(Extract.runChunked(raw.as[RawDoc], spreadThreshold = 512).toDF())
-    assert(chunked == expr)
+    assert(expr.find(_.doc_id == "doc-mega-null-element").get.error == "null span element")
+    outputs.foreach { case (path, out) =>
+      assert(rows(out) == expr, path)
+      assert(out.columns.toSeq == Seq("doc_id", "spans", "error", "tag"), path)
+      assert(out.select("doc_id", "tag").collect().map(_.toString).sorted.toSeq == tags, path)
+    }
   }
 
   test("x5 registration evaluates extract_spans exactly once (no filter re-eval)") {
