@@ -45,49 +45,45 @@ object SparkEntry {
   private val esStop = stopList(Seq("el", "los", "y", "es", "en", "un", "una", "por", "con", "para"))
   private val headingRx = "'^heading[1-9]$'"
 
-  private def headingPathsSql: String = {
+  /** The heading-stack window over the fixture spans: CTE `wl` carries, per
+    * span, the text `_t<l>` and offset `_o<l>` of the last level-l heading so
+    * far. `select` gets one guard per level, true iff that level still
+    * governs the span (seen, and deeper in the document than every
+    * shallower level's last heading), and returns the final SELECT over
+    * `wl`. */
+  private def headingWindowSql(select: IndexedSeq[String] => String): String = {
     val lastCols = (1 to 9).map { l =>
       s"""last_value(CASE WHEN kind = 'heading$l' THEN text END IGNORE NULLS) OVER w AS _t$l, """ +
       s"""last_value(CASE WHEN kind = 'heading$l' THEN "offset" END IGNORE NULLS) OVER w AS _o$l"""
     }.mkString(", ")
-    val valid = (1 to 9).map { l =>
+    val governs = (1 to 9).map { l =>
       val shallower = (1 until l).map(j => s"coalesce(_o$j, -1)")
       val maxShallower = shallower match {
         case Seq() => "-1"
         case Seq(one) => one
         case many => s"greatest(${many.mkString(", ")})"
       }
-      s"CASE WHEN _o$l IS NOT NULL AND _o$l > $maxShallower THEN _t$l END"
-    }.mkString(", ")
+      s"_o$l IS NOT NULL AND _o$l > $maxShallower"
+    }
     s"""WITH ex AS (SELECT doc_id, u.kind AS kind, u.text AS text, u."offset" AS "offset"
        |  FROM (SELECT doc_id, UNNEST(spans) AS u FROM ${fixturesSql("docs")})),
        |wl AS (SELECT doc_id, kind, text, "offset", $lastCols FROM ex
        |  WINDOW w AS (PARTITION BY doc_id ORDER BY "offset" ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
-       |SELECT doc_id, "offset", concat_ws(' > ', $valid) AS heading_path FROM wl""".stripMargin
+       |""".stripMargin + select(governs)
   }
 
-  private def depthSql: String = {
-    val lastCols = (1 to 9).map { l =>
-      s"""last_value(CASE WHEN kind = 'heading$l' THEN text END IGNORE NULLS) OVER w AS _t$l, """ +
-      s"""last_value(CASE WHEN kind = 'heading$l' THEN "offset" END IGNORE NULLS) OVER w AS _o$l"""
-    }.mkString(", ")
-    // depth counted STRUCTURALLY (number of valid governing levels), not by
-    // re-splitting the breadcrumb string — a heading text containing ' > '
-    // must not change the count
-    val validCount = (1 to 9).map { l =>
-      val shallower = (1 until l).map(j => s"coalesce(_o$j, -1)")
-      val maxShallower = shallower match {
-        case Seq() => "-1"
-        case Seq(one) => one
-        case many => s"greatest(${many.mkString(", ")})"
-      }
-      s"(CASE WHEN _o$l IS NOT NULL AND _o$l > $maxShallower THEN 1 ELSE 0 END)"
-    }.mkString(" + ")
-    s"""WITH ex AS (SELECT doc_id, u.kind AS kind, u.text AS text, u."offset" AS "offset"
-       |  FROM (SELECT doc_id, UNNEST(spans) AS u FROM ${fixturesSql("docs")})),
-       |wl AS (SELECT doc_id, kind, text, "offset", $lastCols FROM ex
-       |  WINDOW w AS (PARTITION BY doc_id ORDER BY "offset" ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
-       |SELECT doc_id, "offset", CAST(($validCount)
+  private def headingPathsSql: String = headingWindowSql { governs =>
+    val valid = governs.zipWithIndex
+      .map { case (g, i) => s"CASE WHEN $g THEN _t${i + 1} END" }.mkString(", ")
+    s"""SELECT doc_id, "offset", concat_ws(' > ', $valid) AS heading_path FROM wl"""
+  }
+
+  // depth counted STRUCTURALLY (number of valid governing levels), not by
+  // re-splitting the breadcrumb string — a heading text containing ' > '
+  // must not change the count
+  private def depthSql: String = headingWindowSql { governs =>
+    val validCount = governs.map(g => s"(CASE WHEN $g THEN 1 ELSE 0 END)").mkString(" + ")
+    s"""SELECT doc_id, "offset", CAST(($validCount)
        |  + (CASE WHEN regexp_matches(kind, $headingRx) THEN 0 ELSE 1 END) AS INTEGER) AS depth
        |FROM wl""".stripMargin
   }
@@ -1189,7 +1185,7 @@ object SparkEntry {
          |HAVING max(CASE WHEN trim(para) <> '' THEN 1 ELSE 0 END) = 1
          |UNION ALL SELECT doc_id, text FROM ${LineFixture.valuesSql} WHERE text IS NULL""".stripMargin,
     "d_drop_substr" ->
-      """WITH toks AS (SELECT doc_id, regexp_split_to_array(trim(text), '[ \t\n\f\r]+') AS t
+      """WITH toks AS (SELECT doc_id, text, regexp_split_to_array(trim(text), '[ \t\n\f\r]+') AS t
         |  FROM documents WHERE text IS NOT NULL AND length(trim(text)) > 0),
         |wp AS (SELECT doc_id, t, unnest(range(0, len(t) - 10 + 1)) AS pos
         |  FROM toks WHERE len(t) >= 10),
@@ -1202,7 +1198,10 @@ object SparkEntry {
         |kept AS (SELECT tp.doc_id, tp.tok, tp.tpos FROM tp WHERE NOT EXISTS (
         |  SELECT 1 FROM rem r WHERE r.doc_id = tp.doc_id
         |    AND r.pos <= tp.tpos AND tp.tpos < r.pos + 10))
-        |SELECT doc_id, string_agg(tok, ' ' ORDER BY tpos) AS text FROM kept GROUP BY 1
+        |SELECT doc_id, string_agg(tok, ' ' ORDER BY tpos) AS text FROM kept
+        |WHERE doc_id IN (SELECT doc_id FROM rem) GROUP BY 1
+        |UNION ALL
+        |SELECT doc_id, text FROM toks WHERE doc_id NOT IN (SELECT doc_id FROM rem)
         |UNION ALL
         |SELECT doc_id, text FROM documents
         |WHERE text IS NULL OR length(trim(text)) = 0""".stripMargin,

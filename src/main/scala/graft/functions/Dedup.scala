@@ -714,22 +714,6 @@ object Dedup {
 
   // ----------------------------------------------------- decontamination
 
-  /** Benchmark items normalized and routed by length: (distinct shingle-hash
-    * vocabulary of the > `ngram`-token items, distinct ≤ `ngram`-token
-    * items). The single source of the routing rule — shared by the batch
-    * report and the streaming [[graft.streaming.StreamingExtract.benchmarkModel]]
-    * so the two paths cannot drift. */
-  private[graft] def benchRouting(benchmark: DataFrame, ngram: Int): (DataFrame, DataFrame) = {
-    require(ngram >= 1, s"ngram must be >= 1, got $ngram")
-    val bnorm = benchmark.select(TextAnalysis.normalized(col("text")).as("item"))
-      .where(col("item") =!= "")
-      .withColumn("n_tok", size(split(col("item"), " ")))
-    val benchSh = bnorm.where(col("n_tok") > ngram)
-      .select(explode(ShingleHashExpr(col("item"), ngram)).as("g")).distinct()
-    val shortItems = bnorm.where(col("n_tok") <= ngram).select(col("item")).distinct()
-    (benchSh, shortItems)
-  }
-
   /** Benchmark decontamination (the GPT-3/PaLM n-gram collision method):
     * count, per training document, its collisions with an evaluation set. A
     * training corpus must not contain eval data — leaked benchmark text
@@ -757,7 +741,13 @@ object Dedup {
     */
   def contaminationReport(documents: DataFrame, benchmark: DataFrame,
                           ngram: Int = 13): DataFrame = {
-    val (benchSh, shortItems) = benchRouting(benchmark, ngram)
+    require(ngram >= 1, s"ngram must be >= 1, got $ngram")
+    val bnorm = benchmark.select(TextAnalysis.normalized(col("text")).as("item"))
+      .where(col("item") =!= "")
+      .withColumn("n_tok", size(split(col("item"), " ")))
+    val benchSh = bnorm.where(col("n_tok") > ngram)
+      .select(explode(ShingleHashExpr(col("item"), ngram)).as("g")).distinct()
+    val shortItems = bnorm.where(col("n_tok") <= ngram).select(col("item")).distinct()
     val docSh = documents.select(col("doc_id"),
       explode(ShingleHashExpr(col("text"), ngram)).as("g"))
     val ngramHits = docSh.join(broadcast(benchSh), Seq("g"))
@@ -817,14 +807,7 @@ object Dedup {
     * Null-text docs have a null signature and are EXCLUDED before banding
     * (unchanged semantics: the former join's non-null-safe equality already
     * never paired them, but a groupBy treats null chunks as a REAL group,
-    * which would clique k null docs together).
-    *
-    * The STREAMING path has no analog of this shape to cap (VERDICT r05
-    * #5): on-arrival dedup ([[graft.streaming.StreamingExtract.dedupWithinHorizon]])
-    * is EXACT keyed state — one state-store entry per content fingerprint,
-    * evicted at the watermark horizon, at most one survivor emitted per key
-    * — so no bucket of members is ever materialized and nothing quadratic
-    * can form. */
+    * which would clique k null docs together). */
   def simHashNearDuplicates(documents: DataFrame, maxHamming: Int = 3,
                             maxBandBucket: Int = 1024): DataFrame = {
     require(maxHamming >= 0 && maxHamming <= 63,
@@ -954,15 +937,16 @@ object Dedup {
     * Semantics (deterministic, engine-independent): tokens are the
     * whitespace split of trimmed text; a token position is removed iff
     * some window covering it is a non-canonical occurrence of a key shared
-    * by ≥ 2 (doc, pos) sites. Output text is the KEPT token stream joined
-    * by single spaces (whitespace-normalized — the token stream is what a
-    * trainer consumes); docs left with zero tokens drop; null/blank-text
-    * docs pass unchanged (the unscorable-rows-pass contract). Window keys
-    * are md5 of the joined window (16 bytes through the shuffle instead of
-    * a W-token string; both engines compute identical md5); the canonical
-    * occurrence is `min(struct(doc_id, pos))` — lexicographic struct
-    * ordering, so any orderable id type (long, string, binary) works and
-    * no doc-length bound is assumed.
+    * by ≥ 2 (doc, pos) sites. A doc with a removed token becomes its KEPT
+    * token stream joined by single spaces (whitespace-normalized — the
+    * token stream is what a trainer consumes); a doc with no removed token
+    * keeps its text byte-for-byte; docs left with zero tokens drop;
+    * null/blank-text docs pass unchanged (the unscorable-rows-pass
+    * contract). Window keys are md5 of the joined window (16 bytes through
+    * the shuffle instead of a W-token string; both engines compute
+    * identical md5); the canonical occurrence is `min(struct(doc_id,
+    * pos))` — lexicographic struct ordering, so any orderable id type
+    * (long, string, binary) works and no doc-length bound is assumed.
     *
     * Plan shape at 100 TB — the honest cost of exact-substring dedup is
     * one (key, doc, pos) row PER TOKEN through a shuffle (the single-node
@@ -1032,7 +1016,8 @@ object Dedup {
             iv.getField("s") <= i && i < iv.getField("e")))))
       .where(size(col("kept")) > 0)
     val out = rewritten
-      .withColumn("text", concat_ws(" ", col("kept")))
+      .withColumn("text", when(col("riv").isNull, col("text"))
+        .otherwise(concat_ws(" ", col("kept"))))
       .drop("t", "riv", "kept")
     out.unionByName(documents.where(!scorable))
   }

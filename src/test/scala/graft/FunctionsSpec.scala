@@ -377,8 +377,11 @@ class FunctionsSpec extends AnyFunSuite {
     val cUnique = "c1 c2 " + (1 to 10).map(i => s"a$i").mkString(" ") + " c3"
     val selfRep = (1 to 10).map(i => s"s$i").mkString(" ") + " filler " +
       (1 to 10).map(i => s"s$i").mkString(" ")
+    // no duplicated window: the text must come back byte-for-byte, its
+    // newlines, double space and edge space included
+    val untouched = "alpha beta\ngamma  delta\n\nepsilon zeta eta theta iota kappa lambda mu "
     val df = docsDf(1L -> a, 2L -> a /* exact copy */, 3L -> cUnique,
-      4L -> "short doc only", 5L -> selfRep)
+      4L -> "short doc only", 5L -> selfRep, 7L -> untouched)
       .unionByName(spark.createDataFrame(
         java.util.Arrays.asList(Row(6L, null: String)),
         StructType(Seq(StructField("doc_id", LongType), StructField("text", StringType)))))
@@ -390,6 +393,7 @@ class FunctionsSpec extends AnyFunSuite {
     assert(out(4L).contains("short doc only"))  // n < W: no windows, passes
     assert(out(5L).contains((1 to 10).map(i => s"s$i").mkString(" ") + " filler"))
     assert(out(6L).isEmpty)                     // null text passes unchanged
+    assert(out(7L).contains(untouched))         // nothing removed: text kept verbatim
     // determinism under repartitioning (canonical = global min (doc, pos))
     val again = Dedup.dropDuplicatedSubstrings(df.repartition(7), 10).collect()
       .map(r => r.getLong(0) -> Option(r.getString(1))).toMap

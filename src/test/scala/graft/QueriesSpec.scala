@@ -270,14 +270,6 @@ class QueriesSpec extends AnyFunSuite {
     assert(r(3).startsWith("      [paragraph] " + "x" * 77) && r(3).endsWith("..."))
   }
 
-  test("KindCountAggregator matches groupBy count per doc") {
-    import spark.implicits._
-    val ds = docsSeq.take(20).flatMap(_.spans).toDS()
-    val agg = ds.select(graft.functions.KindCountAggregator.toColumn).head()
-    val exp = docsSeq.take(20).flatMap(_.spans).groupBy(_.kind).view.mapValues(_.size.toLong).toMap
-    assert(agg == exp)
-  }
-
   test("annotated extraction renders DocProperty + ContentControl markers") {
     import spark.implicits._
     val raw = Seq(graft.model.RawDoc("a", Seq(
